@@ -68,29 +68,6 @@ def get_spark(app_name: str = "cassandra-elasticsearch-sync-spark",
         # --- Python boundary: Arrow batching for the pandas-UDF paths ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Resident-engine hygiene (round-12, measured): Spark's
-        # ContextCleaner reclaims finished jobs' broadcasts/RDD blocks
-        # only via WEAK references, i.e. only when a driver GC actually
-        # fires - and a large, low-pressure heap can go a whole
-        # workload without one. The backlog (thousands of dead
-        # broadcast/accumulator blocks) slowed every later job: the
-        # l38 engine-cycle query ran 37 s after the 36-loop headline
-        # pass vs 18 s right after a System.gc() in the same JVM, with
-        # clearCache adding nothing on top. A periodic GC every 30 s
-        # (default: 30 MINUTES - far longer than a whole bench pass)
-        # keeps a long-lived session's job constants flat (measured:
-        # in-context l38 45.5 s -> 21.4 s). Round 13 (VERDICT r12 #3):
-        # A/B'd in the COLD bench posture that grades this repo -
-        # 4 alternating cold runs each way at local[32]/sf0.1 measured
-        # 30s-GC WORSE on median and far noisier (l38 median 16.5 s
-        # vs 10.6 s, e2e suite 4.6 vs 3.8 s; outliers up to 25 s when
-        # a forced full GC lands inside a timed window - full table in
-        # plans/r13/GC_AB.md). Default is back to Spark's stock 30min;
-        # a resident deployment opts into the aggressive interval via
-        # SPARK_GRAFT_PERIODIC_GC=30s, where the r12 measurement
-        # stands.
-        .config("spark.cleaner.periodicGC.interval",
-                os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30min"))
         # Local mode memory: the driver hosts all executors in local mode.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -19,18 +19,16 @@ Differences from the 2013-era script, by design:
   crash between cycles -> the next cycle re-reads from the old
   watermark and re-applies; applies are idempotent (L4 property
   tests), so at-least-once is safe.
-- The apply step goes through the store's ``apply_delta``:
-  ``ParquetStore`` is the snapshot-swap baseline (full rewrite per
-  cycle); ``AcidStore`` applies the delta as a copy-on-write MERGE on
-  the ACID table format (sources/acid.py), so a cycle shipping 1% of
-  the keys rewrites ~1% of the table - the shape that holds at 100 TB.
-  Production swaps in the Cassandra/ES connectors (sources/readers.py)
-  behind the same protocol. The cycle logic does not change.
+- Each side is a ``KeyedStore``. ``AcidStore`` applies the delta as a
+  copy-on-write MERGE on the ACID table format (sources/acid.py), so a
+  cycle shipping 1% of the keys rewrites ~1% of the table - the shape
+  that holds at 100 TB. Production swaps in the Cassandra/ES
+  connectors (sources/readers.py) behind the same protocol. The cycle
+  logic does not change.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,7 +36,6 @@ from pyspark.sql import functions as F
 
 from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 from cassandra_elasticsearch_sync_spark.sources.storage import (
-    extract_delta_since,
     load_watermark,
     save_watermark,
 )
@@ -46,77 +43,73 @@ from cassandra_elasticsearch_sync_spark.sync.ops import lww_merge
 from cassandra_elasticsearch_sync_spark.localdata import tiny_df
 
 
-def _overlap_commits(spark: SparkSession, fn_a, fn_b) -> None:
-    """Run two commit closures against INDEPENDENT stores from a
-    2-thread pool (guide §2.6): the second commit's jobs back-fill
-    executors freed by the first one's stragglers instead of waiting
-    for its full driver-sequenced protocol to finish.
+# Rows per bootstrap slice the ladder is thinned towards: a few hundred
+# MB at engine row widths, the usual file-size band. A 150k-row store
+# gets ONE slice instead of 16 near-empty ones (16-task stages on every
+# later merge/read are pure scheduling overhead); a 100 TB store keeps
+# the full manifest-pruning granularity.
+SLICE_TARGET_ROWS = 2_000_000
 
-    Shipped in round 12 on a re-measurement: an earlier attempt was
-    reverted as "GIL-bound", but the end-of-round cProfile showed the
-    driver spends >90% of a commit sequence blocked in py4j socket
-    reads (GIL released) - and a quiet-box interleaved A/B of l38
-    measured overlap faster on every iteration (min 10.99 vs 12.87 s,
-    median 11.44 vs 12.93 s) with the ledger bit-identical. Safety:
-    callers only pass commits on DIFFERENT table roots whose inputs
-    are materialized (persisted + acted on) beforehand; ACID reads pin
-    the manifest at plan time and commits never delete entry files,
-    so even a cache-evicted recompute sees the pre-commit snapshot.
-    Both closures are always awaited before an exception is re-raised,
-    so a failure in one can never orphan the other mid-commit;
-    ``inheritable_thread_target`` propagates the job group/description
-    thread-locals.
 
-    Round 13: gated on ``SPARK_GRAFT_SYNC_OVERLAP`` and DEFAULT OFF.
-    The round-12 verdict flagged a +59% l38 wall regression at
-    local[32] in the grading environment; this round's A/B on a
-    32-core/128GB box reproduced it - overlap=1 vs 0 measured
-    30.5-33.5 s vs 24.5-28.8 s at 32 cores and 57.6 s vs 27.8 s at
-    8 cores (profile_l38.py, plans/r13). Two concurrent commit jobs
-    contend instead of back-filling when executor slots are the
-    driver-local CPUs; on a real cluster with remote executors the
-    §2.6 back-fill argument may still hold, so the knob stays."""
-    if os.environ.get("SPARK_GRAFT_SYNC_OVERLAP", "0") == "0":
-        # Sequential mode keeps the same contract as the pool: BOTH
-        # commits are attempted before any exception propagates (a
-        # failure in one never orphans the other mid-commit).
-        ea = eb = None
+def _commit_both(fn_a, fn_b) -> None:
+    """Run two commits on independent stores, one after the other.
+    Both are attempted before any failure propagates, so a failure in
+    the first never skips the second; the first failure is raised."""
+    err = None
+    for fn in (fn_a, fn_b):
         try:
-            fn_a()
-        except BaseException as e:  # noqa: BLE001 - re-raised below
-            ea = e
-        try:
-            fn_b()
-        except BaseException as e:  # noqa: BLE001 - re-raised below
-            eb = e
-        if ea is not None:
-            raise ea
-        if eb is not None:
-            raise eb
-        return
-    from concurrent.futures import ThreadPoolExecutor
+            fn()
+        except Exception as e:  # noqa: BLE001 - re-raised below
+            if err is None:
+                err = e
+    if err is not None:
+        raise err
 
-    from pyspark import inheritable_thread_target
 
-    inherit = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        fa = ex.submit(inherit(fn_a))
-        fb = ex.submit(inherit(fn_b))
-        ea, eb = fa.exception(), fb.exception()
-    if ea is not None:
-        raise ea
-    if eb is not None:
-        raise eb
+def _thin_ladder(ladder: list, n_rows: int) -> list:
+    """Thin a key-quantile ladder measured at ``len(ladder) + 1``
+    slices to the largest even subsample whose slices each hold at
+    least ``SLICE_TARGET_ROWS`` rows (a single slice when the store is
+    smaller than that). The slice count must divide the ladder's so
+    the kept quantiles stay evenly spaced; it is searched DOWNWARD,
+    because rounding up would cut slices below the target."""
+    qn = len(ladder) + 1
+    n_eff = max(1, min(qn, n_rows // SLICE_TARGET_ROWS))
+    while qn % n_eff:
+        n_eff -= 1
+    step = qn // n_eff
+    return ladder[step - 1::step]
 
 
 class KeyedStore(Protocol):
-    """What the engine needs from a side: snapshot read, bootstrap
-    overwrite, and an LWW delta apply. A store may additionally expose
-    ``read_since(wm)`` - a read equal to ``read().filter(version >=
-    wm)`` that is allowed to prune the scan (the engine falls back to
-    the plain filtered read when absent)."""
+    """What the engine needs from a side - the connector seam: a
+    Cassandra table or an ES index implements this and the cycle logic
+    does not change. Rows carry ``key``, ``price``, ``version`` (the
+    LWW timestamp) and ``side`` (provenance).
+
+    - ``read()``: the current snapshot.
+    - ``read_since(wm)``: rows equal to ``read().filter(version >=
+      wm)`` - the boundary is inclusive - and ``wm=None`` means every
+      row (first sync). A store may prune the scan to get there
+      (``AcidStore``: manifest version-range stats).
+    - ``overwrite(df, key_quantiles)``: the bootstrap write; the
+      optional ladder of ascending key bounds sets its slice layout.
+    - ``apply_delta(delta, key_stats)``: LWW-apply a ship set holding
+      at most one row per key; ``key_stats`` = (rows, min key, max
+      key) of that set, a pruning hint.
+    - ``n_slices``: the maximum bootstrap granularity - the ladder the
+      engine measures has ``n_slices - 1`` bounds before it is thinned
+      to the store's size; 1 means an unsliced bootstrap.
+
+    The sync key is non-null: the conflict accounting counts distinct
+    keys, and ``SyncEngine.incremental_cycle`` raises ``ValueError``
+    when a shipped row has a NULL key."""
+
+    n_slices: int
 
     def read(self) -> DataFrame: ...
+
+    def read_since(self, wm) -> DataFrame: ...
 
     def overwrite(self, df: DataFrame,
                   key_quantiles: list | None = None) -> None: ...
@@ -130,44 +123,6 @@ def _lww_ord_cols(columns: list[str]) -> list[str]:
     the MERGE apply: (version, side, payload columns in name order)."""
     payload = sorted(c for c in columns if c not in ("key", "version", "side"))
     return ["version", "side", *payload]
-
-
-class ParquetStore:
-    """A keyed store on snapshot-swap parquet (schema: key, price,
-    version, side). Production: Cassandra table / ES index."""
-
-    def __init__(self, spark: SparkSession, root: str, init: DataFrame | None = None):
-        self.spark = spark
-        self.root = root
-        self.version = 0
-        if init is not None:
-            init.write.mode("overwrite").parquet(self._path(0))
-
-    def _path(self, v: int) -> str:
-        return os.path.join(self.root, f"v{v}")
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self._path(self.version))
-
-    def read_since(self, wm) -> DataFrame:
-        """Post-watermark rows. A snapshot swap has no file-level
-        stats to prune with - this is the plain filtered read."""
-        return extract_delta_since(self.read(), wm)
-
-    def overwrite(self, df: DataFrame,
-                  key_quantiles: list | None = None) -> None:
-        # key_quantiles is the ACID backend's layout hint; a snapshot
-        # swap has no slice layout to shape, so it is ignored here.
-        self.version += 1
-        df.write.mode("overwrite").parquet(self._path(self.version))
-
-    def apply_delta(self, delta: DataFrame,
-                    key_stats: tuple | None = None) -> None:
-        """Snapshot-swap apply: LWW-fold the delta into the full
-        snapshot and rewrite it whole - correct, but a cycle costs
-        O(store), not O(delta). ``key_stats`` (a file-pruning hint for
-        the ACID backend) has no use here and is ignored."""
-        self.overwrite(lww_merge(self.read(), delta))
 
 
 class AcidStore:
@@ -220,16 +175,13 @@ class AcidStore:
         scale-adaptive width - ``n_slices`` is the store's MAX
         granularity, not a constant layout)."""
         if (key_quantiles is not None
-                and 1 <= len(key_quantiles) <= self.n_slices - 1):
-            # last slice unbounded above (covers max key and NULLs)
+                and len(key_quantiles) <= self.n_slices - 1):
+            # last slice unbounded above (covers max key and NULLs); an
+            # empty ladder is one clustered entry, no sampling
             uppers = [*key_quantiles, None]
             self.table.init_clustered(df, ["key"],
                                       n_slices=len(uppers),
                                       slice_uppers=uppers)
-        elif key_quantiles is not None and len(key_quantiles) == 0:
-            # one-slice ladder: a single clustered entry, no sampling
-            self.table.init_clustered(df, ["key"], n_slices=1,
-                                      slice_uppers=[None])
         else:
             self.table.init_clustered(df, ["key"],
                                       n_slices=self.n_slices)
@@ -298,16 +250,15 @@ class SyncEngine:
         converged snapshot to both sides, persist the watermark."""
         merged = lww_merge(self.a.read(), self.b.read()).persist()
         # ONE action materializes the converged snapshot (so the two
-        # overlapped overwrites read the cache instead of racing to
-        # compute it), measures the new watermark, AND - when a store
+        # overwrites read the cache instead of each recomputing it),
+        # measures the new watermark, AND - when a store
         # wants a sliced bootstrap layout - the key-quantile ladder
         # that lets each overwrite slice deterministically instead of
         # running repartitionByRange's sampling job over the cache.
         # Previously three separate jobs (count + max(version) +
         # 2 samplers); round 12, guide 2.4. The watermark is still
         # saved only AFTER both commits succeed.
-        qn = max(getattr(self.a, "n_slices", 1),
-                 getattr(self.b, "n_slices", 1), 1)
+        qn = max(self.a.n_slices, self.b.n_slices)
         aggs = [F.max("version").alias("m"), F.count("*").alias("n")]
         if qn > 1:
             aggs.append(F.percentile_approx(
@@ -315,41 +266,16 @@ class SyncEngine:
         row = merged.agg(*aggs).collect()[0]
         wm = row["m"]
         qs = list(row["qs"]) if qn > 1 and row["qs"] is not None else None
-        # Scale-adaptive slice count (round 13, guide §2/§6): the
-        # ladder is measured at the stores' max granularity, then
-        # THINNED so each bootstrap slice targets
-        # SPARK_GRAFT_SLICE_TARGET_ROWS rows (default 2M ~ a few
-        # hundred MB at engine row widths - guide §6's file-size
-        # band). A 150k-row bench store gets ONE slice instead of 16
-        # near-empty ones (16-task stages on every later merge/read
-        # were pure scheduling overhead at small SF); a 100 TB store
-        # still gets the full manifest-pruning granularity. The count
-        # rides the same single pass.
+        # Scale-adaptive slice count: the ladder is measured at the
+        # stores' max granularity, then thinned to the row count the
+        # same pass measured.
         if qs is not None:
-            target = int(os.environ.get(
-                "SPARK_GRAFT_SLICE_TARGET_ROWS", "2000000"))
-            n_eff = max(1, min(qn, -(-int(row["n"]) // max(target, 1))))
-            while qn % n_eff:   # keep the ladder an even subsample
-                n_eff += 1
-            step = qn // n_eff
-            qs = qs[step - 1::step][:n_eff - 1] if n_eff > 1 else []
-        _overlap_commits(self.spark,
-                         lambda: self.a.overwrite(merged, key_quantiles=qs),
-                         lambda: self.b.overwrite(merged, key_quantiles=qs))
+            qs = _thin_ladder(qs, int(row["n"]))
+        _commit_both(lambda: self.a.overwrite(merged, key_quantiles=qs),
+                     lambda: self.b.overwrite(merged, key_quantiles=qs))
         if wm is not None:
             save_watermark(self.spark, self.state_dir, wm)
         merged.unpersist()
-
-    @staticmethod
-    def _delta_since(store: KeyedStore, wm) -> DataFrame:
-        """Post-watermark rows from one side. A store that can prune
-        the scan exposes ``read_since`` (AcidStore: manifest
-        version-range stats); any other ``KeyedStore`` gets the plain
-        filtered read."""
-        rs = getattr(store, "read_since", None)
-        if rs is not None:
-            return rs(wm)
-        return extract_delta_since(store.read(), wm)
 
     # -- L7: one incremental cycle ---------------------------------------
     def incremental_cycle(self) -> int:
@@ -357,8 +283,8 @@ class SyncEngine:
         apply the ones the other side is missing (LWW), advance the
         watermark. Returns the number of rows shipped (0 => in sync).
 
-        The watermark boundary is INCLUSIVE (extract_delta_since uses
-        >=): the watermark is max(version) of the rows seen, so a
+        The watermark boundary is INCLUSIVE (``read_since`` uses >=):
+        the watermark is max(version) of the rows seen, so a
         concurrent write landing later with version exactly equal to it
         must still be picked up next cycle. Inclusive extraction would
         re-ship the boundary rows forever, so each delta is anti-joined
@@ -371,8 +297,8 @@ class SyncEngine:
         quiet cycles.
         """
         wm = load_watermark(self.spark, self.state_dir)
-        delta_a = self._delta_since(self.a, wm).persist()
-        delta_b = self._delta_since(self.b, wm).persist()
+        delta_a = self.a.read_since(wm).persist()
+        delta_b = self.b.read_since(wm).persist()
         cols = [c for c in delta_a.columns if c != "side"]
         # The payload anti-join's match set is the OTHER SIDE'S DELTA,
         # not its full snapshot (round 12, guide §2.3): the join keys
@@ -469,13 +395,12 @@ class SyncEngine:
         # The ship sets are materialized (persist + the metrics job
         # above), so each apply sees the pre-apply other side - which
         # also makes the two directions independent commits on
-        # different roots: overlap them when both have news.
+        # different roots.
         stats_a = (n_a, m["lo_a"], m["hi_a"])
         stats_b = (n_b, m["lo_b"], m["hi_b"])
         if n_a and n_b:
-            _overlap_commits(self.spark,
-                             lambda: self.b.apply_delta(ship_a, stats_a),
-                             lambda: self.a.apply_delta(ship_b, stats_b))
+            _commit_both(lambda: self.b.apply_delta(ship_a, stats_a),
+                         lambda: self.a.apply_delta(ship_b, stats_b))
         elif n_a:
             self.b.apply_delta(ship_a, stats_a)
         elif n_b:

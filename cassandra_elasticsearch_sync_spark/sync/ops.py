@@ -2431,21 +2431,10 @@ def l38_sync_lag_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="ces_sync_slo_")
     try:
-        from cassandra_elasticsearch_sync_spark.sync.engine import (
-            _overlap_commits,
-        )
-
-        # The two store bootstraps and cycle 2's two-side edit burst
-        # are commits on independent roots - overlapped (guide §2.6,
-        # same measurement as the engine-internal overlap).
         a = AcidStore(spark, f"{root}/a")
         b = AcidStore(spark, f"{root}/b")
-        _overlap_commits(
-            spark,
-            lambda: a.table.init(
-                side_a(spark, sf_dir).withColumn("side", F.lit("a"))),
-            lambda: b.table.init(
-                side_b(spark, sf_dir).withColumn("side", F.lit("b"))))
+        a.table.init(side_a(spark, sf_dir).withColumn("side", F.lit("a")))
+        b.table.init(side_b(spark, sf_dir).withColumn("side", F.lit("b")))
         eng = SyncEngine(spark, a, b, f"{root}/state", record_ledger=True)
         eng.full_sync()
         # cycle 1: one-sided repricing burst on B
@@ -2455,16 +2444,14 @@ def l38_sync_lag_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
              "version": F.col("version") + F.expr("INTERVAL 2557 DAYS")})
         eng.incremental_cycle()
         # cycle 2: overlapping edits on both sides (conflicts on %103=7)
-        _overlap_commits(
-            spark,
-            lambda: a.table.update_where(
-                F.col("key") % 103 == 7,
-                {"price": F.col("price") + 111.0,
-                 "version": F.col("version") + F.expr("INTERVAL 2922 DAYS")}),
-            lambda: b.table.update_where(
-                (F.col("key") % 103 == 7) | (F.col("key") % 103 == 11),
-                {"price": F.col("price") + 222.0,
-                 "version": F.col("version") + F.expr("INTERVAL 2923 DAYS")}))
+        a.table.update_where(
+            F.col("key") % 103 == 7,
+            {"price": F.col("price") + 111.0,
+             "version": F.col("version") + F.expr("INTERVAL 2922 DAYS")})
+        b.table.update_where(
+            (F.col("key") % 103 == 7) | (F.col("key") % 103 == 11),
+            {"price": F.col("price") + 222.0,
+             "version": F.col("version") + F.expr("INTERVAL 2923 DAYS")})
         eng.incremental_cycle()
         # cycle 3: quiet - the convergence heartbeat row
         eng.incremental_cycle()

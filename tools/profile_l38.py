@@ -3,8 +3,8 @@
 l38_sync_lag_slo scenario with a wall-clock stamp after every engine
 step, so the ~40 s of commit-bound work decomposes into named phases.
 
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_SYNC_OVERLAP,
-SPARK_GRAFT_PERIODIC_GC (all honored by the engine/session).
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (both honored by the
+engine/session).
 Prints one JSON line with per-step seconds.
 """
 from __future__ import annotations
@@ -27,7 +27,6 @@ from cassandra_elasticsearch_sync_spark.session import get_spark  # noqa: E402
 from cassandra_elasticsearch_sync_spark.sync.engine import (  # noqa: E402
     AcidStore,
     SyncEngine,
-    _overlap_commits,
 )
 from cassandra_elasticsearch_sync_spark.sync.ops import side_a, side_b  # noqa: E402
 
@@ -51,12 +50,8 @@ def main() -> None:
         t0 = time.perf_counter()
         a = AcidStore(spark, f"{root}/a")
         b = AcidStore(spark, f"{root}/b")
-        _overlap_commits(
-            spark,
-            lambda: a.table.init(
-                side_a(spark, sf_dir).withColumn("side", F.lit("a"))),
-            lambda: b.table.init(
-                side_b(spark, sf_dir).withColumn("side", F.lit("b"))))
+        a.table.init(side_a(spark, sf_dir).withColumn("side", F.lit("a")))
+        b.table.init(side_b(spark, sf_dir).withColumn("side", F.lit("b")))
         stamp("bootstrap_init", t0)
 
         eng = SyncEngine(spark, a, b, f"{root}/state", record_ledger=True)
@@ -75,16 +70,14 @@ def main() -> None:
         stamp("cycle_1", t0)
 
         t0 = time.perf_counter()
-        _overlap_commits(
-            spark,
-            lambda: a.table.update_where(
-                F.col("key") % 103 == 7,
-                {"price": F.col("price") + 111.0,
-                 "version": F.col("version") + F.expr("INTERVAL 2922 DAYS")}),
-            lambda: b.table.update_where(
-                (F.col("key") % 103 == 7) | (F.col("key") % 103 == 11),
-                {"price": F.col("price") + 222.0,
-                 "version": F.col("version") + F.expr("INTERVAL 2923 DAYS")}))
+        a.table.update_where(
+            F.col("key") % 103 == 7,
+            {"price": F.col("price") + 111.0,
+             "version": F.col("version") + F.expr("INTERVAL 2922 DAYS")})
+        b.table.update_where(
+            (F.col("key") % 103 == 7) | (F.col("key") % 103 == 11),
+            {"price": F.col("price") + 222.0,
+             "version": F.col("version") + F.expr("INTERVAL 2923 DAYS")})
         stamp("update_2", t0)
         t0 = time.perf_counter()
         eng.incremental_cycle()
@@ -103,8 +96,6 @@ def main() -> None:
     print(json.dumps({
         "total": round(time.perf_counter() - t_all, 3),
         "steps": steps,
-        "overlap": os.environ.get("SPARK_GRAFT_SYNC_OVERLAP", "0"),
-        "periodic_gc": os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30min"),
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
     }))
 
