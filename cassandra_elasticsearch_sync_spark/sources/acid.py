@@ -107,6 +107,19 @@ class AcidParquetTable:
         with open(self._manifest_path(v)) as fh:
             return json.load(fh)
 
+    def commit_info(self, version: int | None = None) -> dict:
+        """What the commit that created ``version`` (default: the
+        current one) did: ``{"operation": str | None,
+        "operation_metrics": dict}``, read from its manifest. Only the
+        row-level rewrites record metrics today (``update_where`` ->
+        ``UPDATE`` with ``num_updated_rows``, ``delete_where`` ->
+        ``DELETE`` with ``num_deleted_rows``), measured on the write
+        job itself; every other commit reads ``None`` / ``{}``."""
+        v = self.current_version() if version is None else version
+        m = self._manifest(v)
+        return {"operation": m.get("operation"),
+                "operation_metrics": m.get("operation_metrics", {})}
+
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read: the file list is resolved NOW; later commits
         do not change what this DataFrame scans (time travel via
@@ -479,7 +492,9 @@ class AcidParquetTable:
                 deletes: list | None = None,
                 manifests_dir: str | None = None,
                 cluster_by: list[str] | None = None,
-                txns: dict | None = None) -> int:
+                txns: dict | None = None,
+                operation: str | None = None,
+                operation_metrics: dict | None = None) -> int:
         """Conditional-put commit: atomically create manifest
         ``v{base+1}``. Creation succeeding IS the commit; creation
         failing means another writer committed on the same base first -
@@ -488,7 +503,11 @@ class AcidParquetTable:
         is written to a private temp file first and ``os.link``ed into
         the claimed name (link fails with EEXIST exactly like a
         conditional put; readers can never observe a half-written
-        manifest)."""
+        manifest).
+
+        ``operation`` / ``operation_metrics`` describe THIS commit
+        (Delta's ``commitInfo``); they belong to one version and are
+        never carried forward (see ``commit_info``)."""
         next_v = base_version + 1
         if txns is None:
             # carry the idempotence ledger forward on every main-chain
@@ -516,6 +535,8 @@ class AcidParquetTable:
             # by every maintenance commit so rewrites can preserve the
             # sliced layout instead of collapsing entries
             "cluster_by": cluster_by,
+            "operation": operation,
+            "operation_metrics": operation_metrics or {},
             "schema": schema.jsonValue(),
         }
         mdir = manifests_dir or os.path.join(self.root, _MANIFESTS)
@@ -723,34 +744,66 @@ class AcidParquetTable:
                 source = source.withColumn(
                     f.name, F.lit(None).cast(f.dataType))
 
-        # Materialize the source for the duration of the merge (the
-        # Delta merge-source-materialization trade, and its
-        # correctness rationale too): the pre-pass, the file probe,
-        # and the full-outer rewrite all read the SAME source bytes
-        # instead of recomputing the plan three times - and a
+        # Materialize the source for the duration of the merge when a
+        # second pass reads it (the Delta merge-source-materialization
+        # trade, and its correctness rationale too): the pre-pass, the
+        # file probe, and the full-outer rewrite then read the SAME
+        # source bytes instead of recomputing the plan - and a
         # non-deterministic source (a changing view, a re-read of a
         # mutating upstream) cannot give the probe and the rewrite
-        # different answers. MEMORY_AND_DISK: executor-distributed,
-        # spills instead of OOMing on a backfill-sized source.
+        # different answers. The pre-pass runs unless the caller
+        # passed ``source_stats``; the probe runs unless those stats
+        # prune the candidates to <=1 entry. With neither, the rewrite
+        # join is the only reader and a cache would cost a job (AQE
+        # materializes it as its own stage) for nothing.
+        # MEMORY_AND_DISK: executor-distributed, spills instead of
+        # OOMing on a backfill-sized source.
         from pyspark import StorageLevel
 
-        source = source.persist(StorageLevel.MEMORY_AND_DISK)
+        caller_bounds = None
+        if source_stats is not None and None not in source_stats[1:3]:
+            caller_bounds = (source_stats[1], source_stats[2])
+        rereads = source_stats is None or len(
+            self._key_candidates(manifest, keys, caller_bounds)) > 1
+        if rereads:
+            source = source.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             return self.__merge_against_materialized(
                 manifest, source, keys, matched_condition,
                 delete_condition, commit_dir, commit_base,
                 assume_unique_keys, assignments, txns,
                 nmbs_action, nmbs_condition, nmbs_assignments, schema,
-                source_stats)
+                source_stats, caller_bounds)
         finally:
-            source.unpersist()
+            if rereads:
+                source.unpersist()
+
+    def _key_candidates(self, manifest: dict, keys: list[str],
+                        key_bounds: tuple | None) -> list[str]:
+        """STATS pruning for a merge: the manifest entries whose key
+        range may intersect the source's [lo, hi] (all entries when
+        the bounds are unknown or the merge is multi-key)."""
+        entries = list(manifest["files"])
+        if key_bounds is None or len(keys) != 1:
+            return entries
+        lo, hi = key_bounds
+        stats = manifest.get("stats", {})
+        return [
+            d for d in entries
+            if stats.get(d, {}).get(keys[0]) is None
+            or self._range_may_overlap(
+                stats[d][keys[0]],
+                lo if isinstance(lo, (int, float)) else str(lo),
+                hi if isinstance(hi, (int, float)) else str(hi),
+            )
+        ]
 
     def __merge_against_materialized(
             self, manifest, source, keys, matched_condition,
             delete_condition, commit_dir, commit_base,
             assume_unique_keys, assignments, txns,
             nmbs_action, nmbs_condition, nmbs_assignments,
-            schema, source_stats=None) -> int:
+            schema, source_stats=None, key_bounds=None) -> int:
         # ONE fused source-side pre-pass (VERDICT r7 #2): the
         # <=1-row-per-key precondition, the stats-pruning key range,
         # and the broadcast-probe cardinality all come out of a single
@@ -759,19 +812,16 @@ class AcidParquetTable:
         # (a snapshot of a keyed store, a distinct'd delta) skips the
         # uniqueness half; with no stats index either, no pre-pass
         # runs at all and the probe keeps its bounded early-stop count.
+        # Caller-measured ``source_stats`` over this exact source skip
+        # the pre-pass: the job is already paid for inside the
+        # caller's own metrics action (``key_bounds`` holds their
+        # usable range).
         single_key_stats = len(keys) == 1 and bool(manifest.get("stats"))
         n_src_rows: int | None = None
-        key_bounds = None
-        if assume_unique_keys:
-            if source_stats is not None:
-                # Caller-measured (rows, lo, hi) over this exact
-                # materialized source: the pre-pass job is already
-                # paid for inside the caller's own metrics action.
-                n_src_rows = int(source_stats[0])
-                if (single_key_stats and source_stats[1] is not None
-                        and source_stats[2] is not None):
-                    key_bounds = (source_stats[1], source_stats[2])
-            elif single_key_stats:
+        if source_stats is not None:
+            n_src_rows = int(source_stats[0])
+        elif assume_unique_keys:
+            if single_key_stats:
                 pre = source.agg(
                     F.count("*").alias("__n"),
                     F.min(keys[0]).alias("__lo"),
@@ -802,32 +852,25 @@ class AcidParquetTable:
         # semi-join probe over the survivors (files-not-rows sized
         # collect - the skipping index for entries stats can't rule
         # out).
-        probe_dirs = list(manifest["files"])
-        if single_key_stats and key_bounds is not None:
-            lo, hi = key_bounds
-            stats = manifest["stats"]
-            probe_dirs = [
-                d for d in probe_dirs
-                if stats.get(d, {}).get(keys[0]) is None
-                or self._range_may_overlap(
-                    stats[d][keys[0]],
-                    lo if isinstance(lo, (int, float)) else str(lo),
-                    hi if isinstance(hi, (int, float)) else str(hi),
-                )
-            ]
+        probe_dirs = self._key_candidates(manifest, keys, key_bounds)
         def _strip_scheme(p: str) -> str:
             return p[7:] if p.startswith("file://") else p
 
         all_files = list(manifest["files"])
-        if len(probe_dirs) <= 1:
-            # Stats pruning already reduced the candidate set to at
-            # most ONE entry: a semi-join probe job cannot shrink it
-            # further in a way that changes the rewrite (rewriting a
-            # range-overlapping entry that happens to hold no matched
-            # key reproduces its rows verbatim - the same conservative
-            # trade stats-only CoW formats make). Skipping the probe
-            # removes one whole Spark action from every small merge
-            # (round 13, guide §2.4).
+        if not probe_dirs or (len(probe_dirs) == 1
+                              and source_stats is not None):
+            # Caller-measured stats already reduced the candidate set
+            # to at most ONE entry: a semi-join probe job cannot shrink
+            # it further in a way that changes the rewrite's rows
+            # (rewriting a range-overlapping entry that happens to hold
+            # no matched key reproduces them verbatim - the same
+            # conservative trade stats-only CoW formats make). Skipping
+            # the probe removes one whole Spark action from every
+            # small sync/CQL merge (round 13, guide §2.4). Without
+            # caller stats the probe runs, so an entry the source
+            # matches nothing in keeps its path: a merge that inserts
+            # into a single-entry table must not fold the untouched
+            # entry into the rewrite.
             affected = list(probe_dirs)
         else:
             probe = self.spark.read.schema(schema).parquet(*probe_dirs)
@@ -967,13 +1010,19 @@ class AcidParquetTable:
 
     # -- DELETE / UPDATE (copy-on-write) -----------------------------------
 
-    def _rewrite_where(self, condition: Column, transform) -> int:
+    def _rewrite_where(self, condition: Column, transform,
+                       operation: str, metric: str) -> int:
         """Shared CoW core for DELETE/UPDATE: find the data entries
         that contain rows matching ``condition`` (one probe job with
         ``input_file_name``, files-not-rows sized collect), rewrite
         ONLY those entries through ``transform``, carry the rest
         verbatim - the same affected-files contract as ``merge_into``,
-        so a predicate touching 1% of a 100 TB table rewrites 1%."""
+        so a predicate touching 1% of a 100 TB table rewrites 1%.
+
+        The commit records ``operation`` and ``{metric: n}``, where n
+        counts the live rows ``condition`` holds for (NULL = no match),
+        observed on the rewrite's own input: the rewrite job already
+        reads every such row, so the count costs no job of its own."""
         base = self.current_version()
         manifest = self._manifest(base)
         schema = StructType.fromJson(manifest["schema"])
@@ -1007,9 +1056,29 @@ class AcidParquetTable:
                 d for d in all_files
                 if any(h.startswith(d.rstrip("/") + "/") for h in hits)]
         untouched = [d for d in all_files if d not in affected]
-        rewritten = transform(self._read_entries(manifest, affected), condition)
-        fresh, fresh_stats = self._write_rewrite(
-            rewritten.select(*schema.names), manifest, affected)
+        n_matched = 0
+        fresh, fresh_stats = [], {}
+        if affected:
+            from pyspark.sql import Observation
+
+            matched = F.coalesce(condition, F.lit(False))
+            live = self._read_entries(manifest, affected)
+            cb = manifest.get("cluster_by")
+            # The sampling clustered writer (no usable slice bounds)
+            # evaluates its input twice - range sketch, then write -
+            # which would double an observed count.
+            exact = not (cb and len(affected) > 1 and self._slice_uppers(
+                manifest, affected, cb[0], schema) is None)
+            obs, src = None, live
+            if exact:
+                obs = Observation()
+                src = live.observe(obs, F.count(F.when(matched, 1)).alias("n"))
+            rewritten = transform(src, condition)
+            fresh, fresh_stats = self._write_rewrite(
+                rewritten.select(*schema.names), manifest, affected)
+            n_matched = self._observed(obs, "n") if obs else None
+            if n_matched is None:
+                n_matched = live.filter(matched).count()
         new_files = list(untouched) + fresh
         base_stats = manifest.get("stats", {})
         stats = {d: base_stats[d] for d in untouched if d in base_stats}
@@ -1019,7 +1088,22 @@ class AcidParquetTable:
         seq.update({d: self._next_seq(manifest, base) for d in fresh})
         return self._commit(base, new_files, schema, stats, seq=seq,
                             deletes=manifest.get("deletes", []),
-                            cluster_by=manifest.get("cluster_by"))
+                            cluster_by=manifest.get("cluster_by"),
+                            operation=operation,
+                            operation_metrics={metric: int(n_matched)})
+
+    @staticmethod
+    def _observed(obs, name: str):
+        """One metric of an Observation whose action has run, or None
+        when the optimizer removed the observed node: a filter that
+        folds to FALSE above it (``DELETE WHERE true``) turns the whole
+        subtree into an empty relation and no metrics are produced."""
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            return obs.get[name]
+        except Py4JJavaError:  # the JVM holds an empty metrics row
+            return None
 
     def replace_where(self, condition: Column, df: DataFrame) -> int:
         """Delta-style ``INSERT OVERWRITE ... replaceWhere``: ONE atomic
@@ -1081,7 +1165,8 @@ class AcidParquetTable:
         NULL predicate results keep the row (SQL DELETE semantics), so
         the kept set is NOT(coalesce(cond, false))."""
         return self._rewrite_where(
-            condition, lambda df, c: df.filter(~F.coalesce(c, F.lit(False))))
+            condition, lambda df, c: df.filter(~F.coalesce(c, F.lit(False))),
+            "DELETE", "num_deleted_rows")
 
     def update_where(self, condition: Column, assignments: dict[str, Column]) -> int:
         """``UPDATE t SET col=expr, ... WHERE condition`` as a
@@ -1101,7 +1186,8 @@ class AcidParquetTable:
                 (F.when(c, assignments[col]).otherwise(F.col(col))
                  .alias(col)) if col in assignments else F.col(col)
                 for col in df.columns])
-        return self._rewrite_where(condition, _apply)
+        return self._rewrite_where(condition, _apply,
+                                   "UPDATE", "num_updated_rows")
 
     # -- merge-on-read deletes ---------------------------------------------
 

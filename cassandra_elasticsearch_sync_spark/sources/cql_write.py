@@ -761,9 +761,19 @@ def apply_cql_writes(table: AcidParquetTable, key_cols: list[str],
         (F.col("src.__if") == F.lit("exists"))
         & F.col(f"tgt.`{key_cols[0]}`").isNull()
     )
+    # The fold left one row per key, so the batch's own (rows, min
+    # key, max key) are exact and the merge needs no source pre-pass.
+    # Bounds only where Python's order is Spark's: a single integral
+    # or string key (UTF-8 byte order == code point order).
+    stats = (len(rows), None, None)
+    kt = types[key_cols[0]]
+    if len(key_cols) == 1 and isinstance(kt, (T.IntegralType, T.StringType)):
+        ks = [r[0] for r in rows]
+        if None not in ks:
+            stats = (len(rows), min(ks), max(ks))
     return table.merge_into(src, key_cols, matched_condition=upd,
                             delete_condition=dele, assume_unique_keys=True,
-                            assignments=assignments)
+                            assignments=assignments, source_stats=stats)
 
 
 # -- registered, oracle-verified write-path query ---------------------------

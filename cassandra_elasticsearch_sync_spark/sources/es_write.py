@@ -180,6 +180,17 @@ def _check_write_params(conflicts: str, max_docs) -> None:
             "reproducible; filter the query instead")
 
 
+def _committed_rows(table: AcidParquetTable, write, metric: str) -> int:
+    """Run ``write`` (returns the version it committed, or the base
+    version when there was nothing to commit) and read ``metric`` back
+    from that commit; 0 when it made none."""
+    base = table.current_version()
+    v = write()
+    if v == base:
+        return 0
+    return int(table.commit_info(v)["operation_metrics"][metric])
+
+
 def es_update_by_query(table: AcidParquetTable, query: dict, *,
                        script: str, conflicts: str = "abort",
                        max_docs: int | None = None) -> dict:
@@ -187,15 +198,14 @@ def es_update_by_query(table: AcidParquetTable, query: dict, *,
     document matching the DSL ``query``, as ONE copy-on-write ACID
     commit (module docstring). Returns the ES response counters:
     ``{"total": n, "updated": n, "deleted": 0, "version_conflicts": 0,
-    "noops": 0}`` - the matched count is ES's snapshot count, one
-    count job over the same predicate (exactly what ES's initial
-    scroll pays)."""
+    "noops": 0}`` - the matched count is the one the commit recorded,
+    observed on the rewrite job itself (no count job of its own)."""
     _check_write_params(conflicts, max_docs)
     cond = compile_query(query)
-    snapshot = table.read()
-    assignments = compile_update_script(script, snapshot.columns)
-    total = snapshot.filter(F.coalesce(cond, F.lit(False))).count()
-    table.update_where(cond, assignments)
+    assignments = compile_update_script(script, table.read().columns)
+    total = _committed_rows(
+        table, lambda: table.update_where(cond, assignments),
+        "num_updated_rows")
     return {"total": total, "updated": total, "deleted": 0,
             "version_conflicts": 0, "noops": 0}
 
@@ -211,8 +221,8 @@ def es_delete_by_query(table: AcidParquetTable, query: dict, *,
     counters."""
     _check_write_params(conflicts, max_docs)
     cond = compile_query(query)
-    total = table.read().filter(F.coalesce(cond, F.lit(False))).count()
-    table.delete_where(cond)
+    total = _committed_rows(table, lambda: table.delete_where(cond),
+                            "num_deleted_rows")
     return {"total": total, "updated": 0, "deleted": total,
             "version_conflicts": 0, "noops": 0}
 

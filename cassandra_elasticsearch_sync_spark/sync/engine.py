@@ -91,7 +91,10 @@ class KeyedStore(Protocol):
     - ``read_since(wm)``: rows equal to ``read().filter(version >=
       wm)`` - the boundary is inclusive - and ``wm=None`` means every
       row (first sync). A store may prune the scan to get there
-      (``AcidStore``: manifest version-range stats).
+      (``AcidStore``: manifest version-range stats). Snapshot-stable:
+      every evaluation of the returned DataFrame yields the same rows
+      (``AcidStore`` fixes its file list at call time), so the engine
+      reads it more than once without caching it.
     - ``overwrite(df, key_quantiles)``: the bootstrap write; the
       optional ladder of ascending key bounds sets its slice layout.
     - ``apply_delta(delta, key_stats)``: LWW-apply a ship set holding
@@ -297,30 +300,33 @@ class SyncEngine:
         quiet cycles.
         """
         wm = load_watermark(self.spark, self.state_dir)
-        delta_a = self.a.read_since(wm).persist()
-        delta_b = self.b.read_since(wm).persist()
+        # Not persisted: ``read_since`` is snapshot-stable (KeyedStore),
+        # so the frontier job and the ship-set builds below read the
+        # same rows without a cache - and under AQE a cache is one more
+        # job per delta.
+        delta_a = self.a.read_since(wm)
+        delta_b = self.b.read_since(wm)
         cols = [c for c in delta_a.columns if c != "side"]
         # The payload anti-join's match set is the OTHER SIDE'S DELTA,
         # not its full snapshot (round 12, guide §2.3): the join keys
         # include `version`, and every delta row has version >= wm, so
         # a full-snapshot row can only match if its version >= wm -
         # i.e. iff it is in that side's own delta (NULL versions never
-        # equality-match anything). Same ship sets, but each store is
-        # scanned ONCE per cycle instead of twice - and the anti-join's
+        # equality-match anything). Same ship sets, but the anti-join's
         # broadcast side is delta-sized instead of store-sized, which
-        # is what makes the shape hold at 100 TB. The deltas are the
-        # persisted DataFrames above, so the anti-joins read the cache.
+        # is what makes the shape hold at 100 TB. The ship sets are
+        # persisted: the metrics job below materializes them and each
+        # apply reads the cache.
         ship_a = delta_a.join(delta_b, cols, "left_anti").persist()
         ship_b = delta_b.join(delta_a, cols, "left_anti").persist()
         # The version frontier over everything SEEN (not just shipped:
         # rows present on both sides up to v are already synced, and
         # the inclusive boundary still catches a straggler landing at
-        # exactly v) - ONE scalar job, which also materializes the
-        # delta cache every later step reuses. Round 12: it previously
-        # rode the metrics plan as a crossJoined 1-row aggregate, which
-        # the plan evaluated TWICE (once feeding the lag expression,
-        # once re-attached for the watermark) - two broadcast builds
-        # each re-scanning both deltas.
+        # exactly v) - ONE scalar job over the two delta scans. Round
+        # 12: it previously rode the metrics plan as a crossJoined
+        # 1-row aggregate, which the plan evaluated TWICE (once feeding
+        # the lag expression, once re-attached for the watermark) -
+        # two broadcast builds each re-scanning both deltas.
         # The same single job also yields the frontier as RAW unix
         # micros for the lag arithmetic (round 13, ADVICE r12): the
         # previous F.lit(<collected naive datetime>).cast('timestamp')
@@ -421,7 +427,7 @@ class SyncEngine:
                 "watermark_s": (eff.strftime("%Y-%m-%d %H:%M:%S")
                                 if eff is not None else None),
             })
-        for df in (ship_a, ship_b, delta_a, delta_b):
+        for df in (ship_a, ship_b):
             df.unpersist()
         return n
 

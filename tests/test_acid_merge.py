@@ -1189,6 +1189,23 @@ def test_merge_schema_evolution_contract(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
+@pytest.mark.parametrize("vouched", [False, True])
+def test_merge_keeps_entry_it_matches_nothing_in(spark, root, vouched):
+    """A merge whose source range overlaps an entry but matches none
+    of its keys leaves that entry's path in the manifest, also when it
+    is the only candidate: without caller-measured ``source_stats``
+    the file probe runs and the merge only appends its inserts."""
+    t = _table(spark, root, [(1, 1.0, 1), (10, 10.0, 1)])
+    before = set(t._manifest(t.current_version())["files"])
+    src = spark.createDataFrame([(4, 4.0, 2), (6, 6.0, 2)],
+                                "key bigint, price double, version int")
+    t.merge_into(src, ["key"], assume_unique_keys=vouched)
+    after = t._manifest(t.current_version())["files"]
+    assert before <= set(after) and len(after) == 2
+    assert _rows(t.read()) == [(1, 1.0, 1), (4, 4.0, 2), (6, 6.0, 2),
+                               (10, 10.0, 1)]
+
+
 def test_write_path_action_count_pinned(spark, tmp_path):
     """The round-8 commit-constant diet, pinned as an invariant
     (VERDICT r8 #9): with AQE off, Spark jobs == driver-sequenced
@@ -1197,11 +1214,11 @@ def test_write_path_action_count_pinned(spark, tmp_path):
     as a failing count, not as a bench drift three rounds later.
 
     Expected: init = 1 (the write job - per-entry stats ride it via
-    an Observation); merge = 2 (fused source pre-pass, rewrite+write
-    job - round 13 skips the file-probe collect and its broadcast
-    build when stats pruning already leaves <=1 candidate entry, as
-    on this single-entry table). The pre-diet shapes were 2 and 7+;
-    round 12's was 4."""
+    an Observation); merge = 4 (fused source pre-pass, file-probe
+    collect plus its broadcast build, rewrite+write job). The probe
+    is skipped only when CALLER-measured stats leave <=1 candidate
+    entry; this unvouched merge probes, so an entry it matches nothing
+    in keeps its path. The pre-diet shapes were 2 and 7+."""
     from cassandra_elasticsearch_sync_spark.sources.acid import (
         AcidParquetTable,
     )
@@ -1223,7 +1240,7 @@ def test_write_path_action_count_pinned(spark, tmp_path):
         upd = spark.createDataFrame(
             [(i, i * 3) for i in range(50, 150)], "k long, v long")
         assert jobs("pin-init", lambda: t.init(src)) == 1
-        assert jobs("pin-merge", lambda: t.merge_into(upd, ["k"])) == 2
+        assert jobs("pin-merge", lambda: t.merge_into(upd, ["k"])) == 4
         # and the merge actually landed
         assert t.read().count() == 150
     finally:

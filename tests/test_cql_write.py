@@ -577,3 +577,36 @@ def test_truncate_is_one_commit_and_time_travels(spark, table):
         cql_truncate(table, "TRUNCATE")
     with pytest.raises(CqlError, match="unsupported CQL DML"):
         parse_cql_dml("TRUNCATE kv", KEY)
+
+
+def test_cql_batch_job_count_pinned(spark, table, shipped_jobs):
+    """With AQE on, an 8-key UPDATE batch is 3 Spark jobs. The fold
+    leaves one row per key, so the batch hands the merge its exact
+    (rows, min key, max key): no source pre-pass, no probe on the one
+    candidate entry, and no cache of a source only the rewrite reads."""
+    stmts = [f"UPDATE kv SET price = {k}.5, version = 300 WHERE key = {k}"
+             for k in range(1, 9)]
+    assert shipped_jobs(lambda: apply_cql_writes(table, KEY, stmts)) == 3
+    assert _rows(table) == [(k, k + 0.5, 300) for k in range(1, 9)]
+
+
+def test_cql_batch_stats_prune_but_keep_every_match(spark, tmp_path):
+    """The batch's own key bounds prune the merge to the entries they
+    overlap: untouched slices keep their paths, and an upsert landing
+    in a slice, on a slice edge, or past every slice is applied."""
+    t = AcidParquetTable(spark, str(tmp_path / "kv"))
+    t.init_clustered(spark.createDataFrame(
+        [(k, float(k), 100) for k in range(30)],
+        "key bigint, price double, version bigint"),
+        ["key"], n_slices=3, slice_uppers=[9, 19, None])
+    before = set(t._manifest(t.current_version())["files"])
+    apply_cql_writes(t, KEY, [
+        "UPDATE kv SET price = -1.0 WHERE key = 20",
+        "UPDATE kv SET price = -2.0 WHERE key = 29",
+        "INSERT INTO kv (key, price, version) VALUES (35, 3.5, 200)",
+    ])
+    after = set(t._manifest(t.current_version())["files"])
+    assert len(before & after) == 2           # keys 0-19 carried over
+    got = dict((r[0], r[1]) for r in _rows(t))
+    assert (got[20], got[29], got[35], got[19]) == (-1.0, -2.0, 3.5, 19.0)
+    assert len(got) == 31

@@ -225,3 +225,115 @@ def test_single_doc_update(spark, root):
         es_update(t, id_field="key", id_value=1)
     with pytest.raises(EsWriteError, match="not in the schema"):
         es_update(t, id_field="key", id_value=1, doc={"nope": 1})
+
+
+# -- response counters ride the rewrite commit --------------------------------
+
+_CTR_SCHEMA = "key bigint, status string, price double, day date"
+
+
+def _ctr_table(spark, root, layout):
+    """12 docs, even keys status 'F'; ``layout`` picks the manifest
+    shape the counters must stay exact on."""
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [(k, "F" if k % 2 == 0 else "O", float(k),
+          dt.date(2020, 1, 1 + k)) for k in range(12)], _CTR_SCHEMA)
+    t = AcidParquetTable(spark, root)
+    if layout == "sliced":
+        # three key-range entries with usable stats: the probe runs
+        t.init_clustered(df, ["key"], n_slices=3, slice_uppers=[3, 7, None])
+    elif layout == "sampled":
+        # date clustering: a multi-entry rewrite takes the sampling
+        # writer, which evaluates its input twice
+        t.init_clustered(df, ["day"], n_slices=3)
+    else:
+        t.init(df)
+    if layout == "mor":
+        t.delete_keys_mor(spark.createDataFrame([(0,), (2,), (5,)],
+                                                "key bigint"), ["key"])
+    return t
+
+
+def _live(t):
+    return {r["key"]: tuple(r) for r in t.read().collect()}
+
+
+_CTR_CASES = [
+    ("single", {"term": {"status": "X"}}, 0),
+    ("single", {"term": {"status": "F"}}, 6),
+    ("single", {"match_all": {}}, 12),
+    ("sliced", {"bool": {"must": [{"term": {"status": "F"}},
+                                  {"range": {"key": {"lte": 3}}}]}}, 2),
+    ("sliced", {"term": {"status": "X"}}, 0),
+    ("sampled", {"term": {"status": "F"}}, 6),
+    ("mor", {"term": {"status": "F"}}, 4),
+]
+
+
+@pytest.mark.parametrize("op", ["update", "delete"])
+@pytest.mark.parametrize("layout, query, want", _CTR_CASES)
+def test_by_query_counters_equal_changed_rows(spark, root, op, layout,
+                                              query, want):
+    """``total``/``updated``/``deleted`` equal the rows the commit
+    actually changed - counted on the rewrite job, not by a count job
+    of its own - on every manifest shape: one entry (no probe), probed
+    key-range entries, the double-evaluating sampling writer, and
+    pending merge-on-read deletes (deleted docs are not counted)."""
+    t = _ctr_table(spark, root, layout)
+    before = _live(t)
+    if op == "update":
+        resp = es_update_by_query(
+            t, query, script="ctx._source.price = ctx._source.price + 100;")
+    else:
+        resp = es_delete_by_query(t, query)
+    after = _live(t)
+    changed = sum(1 for k, r in before.items() if after.get(k) != r)
+    assert changed == want
+    if op == "update":
+        assert set(after) == set(before)
+        assert (resp["total"], resp["updated"], resp["deleted"]) \
+            == (want, want, 0)
+    else:
+        assert len(before) - len(after) == want
+        assert (resp["total"], resp["updated"], resp["deleted"]) \
+            == (want, 0, want)
+    info = t.commit_info()
+    metric = "num_updated_rows" if op == "update" else "num_deleted_rows"
+    assert info == {"operation": op.upper(),
+                    "operation_metrics": {metric: want}}
+
+
+def test_commit_metrics_are_not_carried_forward(spark, root):
+    """Operation metrics describe ONE commit: the maintenance and
+    merge commits after an UPDATE record none of their own, and the
+    UPDATE's version still reads its own metrics (time travel)."""
+    t = _ctr_table(spark, root, "single")
+    assert t.commit_info()["operation"] is None        # init
+    v = t.update_where(F.col("key") < 3, {"price": F.lit(0.0)})
+    assert t.commit_info(v) == {"operation": "UPDATE",
+                                "operation_metrics": {"num_updated_rows": 3}}
+    t.delete_keys_mor(spark.createDataFrame([(1,)], "key bigint"), ["key"])
+    t.compact_deletes()
+    t.merge_into(spark.createDataFrame(
+        [(1, "F", 1.0, None)], _CTR_SCHEMA), ["key"])
+    t.compact_small()
+    t.optimize(["key"], n_slices=2)
+    for u in range(v + 1, t.current_version() + 1):
+        assert t.commit_info(u) == {"operation": None,
+                                    "operation_metrics": {}}, u
+    assert t.commit_info(v)["operation_metrics"] == {"num_updated_rows": 3}
+
+
+def test_update_by_query_job_count_pinned(spark, root, shipped_jobs):
+    """With AQE on, a single-entry ``_update_by_query`` is ONE Spark
+    job: the rewrite+write, which also counts the matched docs (no
+    separate count job, no probe on one entry)."""
+    t = _table(spark, root, [(k, "F" if k % 2 else "O", float(k), 0.0)
+                             for k in range(40)])
+    n = shipped_jobs(lambda: es_update_by_query(
+        t, {"terms": {"key": list(range(0, 20, 2))}},
+        script="ctx._source.price = 1.5;"))
+    assert n == 1
+    assert t.commit_info()["operation_metrics"] == {"num_updated_rows": 10}

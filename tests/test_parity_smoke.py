@@ -5,8 +5,9 @@ The FULL 556-query sweep lives in test_oracle_parity.py and is marked
 VERIFY_r12); this file keeps one representative query per tier in the
 fast tier so a plain ``pytest tests/`` still proves the Spark/DuckDB
 semantics bridge end to end: relational star joins, window top-k,
-as-of union-window, LWW merge, ACID MERGE, CQL and ES compilers, and
-the LLM-pipeline dedup/text/similarity/sketch operators.
+as-of union-window, LWW merge, ACID MERGE, CQL and ES compilers, the
+CQL/ES write paths and the sync cycle on the ACID store, and the
+LLM-pipeline dedup/text/similarity/sketch operators.
 """
 
 from __future__ import annotations
@@ -32,6 +33,9 @@ SMOKE = [
     "l14_acid_merge_upsert",       # ACID MERGE commit path
     "a2m_cql_group_by_aggregate",  # CQL compiler
     "a2r_cql_write_path",          # CQL DML write path
+    "a3dy_es_update_by_query",     # ES update-by-query write path
+    "a3dz_es_delete_by_query",     # ES delete-by-query write path
+    "l26_sync_cycle_on_acid",      # sync cycle on the ACID store
     "a3g_es_composite_agg",        # ES DSL compiler
     "a3x_es_field_collapse",       # ES search features
     "k1_exact_dedup",              # pipeline dedup

@@ -259,6 +259,34 @@ def test_ledger_records_slo_metrics(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_trickle_cycle_job_count_pinned(spark, shipped_jobs):
+    """With AQE on, an 18-row cycle between two single-entry
+    AcidStores is 14 Spark jobs. The deltas are read twice without a
+    cache (``read_since`` is snapshot-stable): the frontier job and
+    the ship-set builds inside the metrics job. A cache stage per
+    delta, or a merge that re-measures what the metrics job already
+    handed it, shows up here as a higher count."""
+    eng, root = _mk_engine(spark, functools.partial(AcidStore, n_slices=1))
+    try:
+        eng.full_sync()
+        for store, keys, day in ((eng.a, range(1, 9), 1),
+                                 (eng.b, range(101, 111), 2)):
+            assert len(store.table._manifest(
+                store.table.current_version())["files"]) == 1
+            store.table.update_where(
+                F.col("key").isin(list(keys)),
+                {"price": F.lit(float(day)),
+                 "version": F.lit(dt.datetime(2003, 1, day)).cast(
+                     "timestamp")})
+        shipped = []
+        assert shipped_jobs(
+            lambda: shipped.append(eng.incremental_cycle())) == 14
+        assert shipped == [18]
+        assert eng.in_sync()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_commit_both_attempts_both_and_raises():
     """`_commit_both` runs two independent commits in order, but a
     failure in one must NEVER skip the other - both closures run
