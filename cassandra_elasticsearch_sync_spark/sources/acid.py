@@ -180,10 +180,6 @@ class AcidParquetTable:
 
     # -- write paths -------------------------------------------------------
 
-    def _write_data_files(self, df: DataFrame) -> list[str]:
-        """Write ``df`` as one immutable data entry (paths only)."""
-        return self._write_one_entry(df)[0]
-
     def _write_one_entry(self, df: DataFrame,
                          stats_schema: StructType | None = None,
                          ) -> tuple[list[str], dict]:
@@ -579,6 +575,64 @@ class AcidParquetTable:
             + [base, 0]
         )
 
+    def _recommit(self, base: int, m: dict, **changes) -> int:
+        """Commit manifest ``m``'s snapshot (files, schema, stats, seq,
+        pending deletes, clustering) on ``base``, with the given
+        ``_commit`` arguments overriding it - the one carry-over every
+        metadata-only commit (MoR delete, publish, add_columns,
+        restore, clones) and every rewrite commit goes through."""
+        kw = dict(files=m["files"], schema=StructType.fromJson(m["schema"]),
+                  stats=m.get("stats", {}), seq=m.get("seq"),
+                  deletes=m.get("deletes", []),
+                  cluster_by=m.get("cluster_by"))
+        kw.update(changes)
+        return self._commit(base, **kw)
+
+    def _commit_rewrite(self, manifest: dict, base: int, affected: list[str],
+                        fresh: list[str], fresh_stats: dict,
+                        **commit_kw) -> int:
+        """The one copy-on-write commit tail: entries outside
+        ``affected`` carry over with their stats and commit generation
+        verbatim (their bytes did not change, and pending MoR deletes
+        must still apply to them); the ``fresh`` entries that replace
+        ``affected`` take their stats from the write and are stamped
+        AFTER every existing generation and pending delete
+        (``_next_seq`` - computed from the base manifest, so it is
+        right both on main and on a branch whose version counter
+        restarted at 1)."""
+        untouched = [d for d in manifest["files"] if d not in affected]
+        base_stats = manifest.get("stats", {})
+        stats = {d: base_stats[d] for d in untouched if d in base_stats}
+        stats.update(fresh_stats)
+        base_seq = manifest.get("seq", {})
+        seq = {d: int(base_seq.get(d, 0)) for d in untouched}
+        next_seq = self._next_seq(manifest, base)
+        seq.update({d: next_seq for d in fresh})
+        return self._recommit(base, manifest, files=untouched + fresh,
+                              stats=stats, seq=seq, **commit_kw)
+
+    def _entries_with(self, schema: StructType, files: list[str],
+                      narrow) -> list[str]:
+        """The file probe: which of the manifest entries ``files`` hold
+        a row that survives ``narrow`` (a DataFrame -> DataFrame step
+        over the raw rows), from one files-not-rows sized collect of
+        the distinct ``input_file_name`` hits. The files are read RAW
+        (``input_file_name`` needs a single scan, and
+        ``_read_entries`` may anti-join delete files): an entry whose
+        only hits are MoR-deleted is reported too - conservative, as
+        every rewrite reads its content delete-applied."""
+        if not files:
+            return []
+        raw = self.spark.read.schema(schema).parquet(*files)
+        rows = (narrow(raw.withColumn("__f", F.input_file_name()))
+                .select("__f").distinct().collect())
+        hits = {r["__f"][7:] if r["__f"].startswith("file://") else r["__f"]
+                for r in rows}
+        # A manifest entry is a directory; it is hit if any of its part
+        # files is.
+        return [d for d in files
+                if any(h.startswith(d.rstrip("/") + "/") for h in hits)]
+
     # -- MERGE INTO --------------------------------------------------------
 
     def merge_into(
@@ -695,7 +749,6 @@ class AcidParquetTable:
     # (the 100 TB risk case: broadcasting an arbitrarily large key
     # set to every executor) takes the shuffle plan instead.
     BROADCAST_PROBE_ROW_CAP = 1_000_000
-    _PROBE_CAP_CONF = "spark.cesync.merge.broadcastKeyRowLimit"
 
     def _probe_semi_join(self, with_file: DataFrame, skeys: DataFrame,
                          source: DataFrame, keys: list[str],
@@ -711,13 +764,32 @@ class AcidParquetTable:
         above, so the decision errs only toward the always-safe
         shuffle plan. VERDICT r4 "what's wrong" item 2.
         """
-        cap = int(self.spark.conf.get(
-            self._PROBE_CAP_CONF, str(self.BROADCAST_PROBE_ROW_CAP)))
+        cap = self.BROADCAST_PROBE_ROW_CAP
         if n_source_rows is None:
             n_source_rows = source.select(*keys).limit(cap + 1).count()
         if n_source_rows <= cap:
             return with_file.join(F.broadcast(skeys), keys, "left_semi")
         return with_file.join(skeys.hint("shuffle_hash"), keys, "left_semi")
+
+    def _key_candidates(self, manifest: dict, keys: list[str],
+                        key_bounds: tuple | None) -> list[str]:
+        """STATS pruning for a merge: the manifest entries whose key
+        range may intersect the source's [lo, hi] (all entries when
+        the bounds are unknown or the merge is multi-key)."""
+        entries = list(manifest["files"])
+        if key_bounds is None or len(keys) != 1:
+            return entries
+        lo, hi = key_bounds
+        stats = manifest.get("stats", {})
+        return [
+            d for d in entries
+            if stats.get(d, {}).get(keys[0]) is None
+            or self._range_may_overlap(
+                stats[d][keys[0]],
+                lo if isinstance(lo, (int, float)) else str(lo),
+                hi if isinstance(hi, (int, float)) else str(hi),
+            )
+        ]
 
     def _merge_against(self, manifest: dict, source: DataFrame,
                        keys: list[str],
@@ -760,253 +832,185 @@ class AcidParquetTable:
         # OOMing on a backfill-sized source.
         from pyspark import StorageLevel
 
-        caller_bounds = None
+        key_bounds = None
         if source_stats is not None and None not in source_stats[1:3]:
-            caller_bounds = (source_stats[1], source_stats[2])
+            key_bounds = (source_stats[1], source_stats[2])
         rereads = source_stats is None or len(
-            self._key_candidates(manifest, keys, caller_bounds)) > 1
+            self._key_candidates(manifest, keys, key_bounds)) > 1
         if rereads:
             source = source.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            return self.__merge_against_materialized(
-                manifest, source, keys, matched_condition,
-                delete_condition, commit_dir, commit_base,
-                assume_unique_keys, assignments, txns,
-                nmbs_action, nmbs_condition, nmbs_assignments, schema,
-                source_stats, caller_bounds)
+            # ONE fused source-side pre-pass (VERDICT r7 #2): the
+            # <=1-row-per-key precondition, the stats-pruning key
+            # range, and the broadcast-probe cardinality all come out
+            # of a single aggregate job instead of three
+            # driver-sequenced passes over the source. A caller whose
+            # source is keyed BY CONSTRUCTION (a snapshot of a keyed
+            # store, a distinct'd delta) skips the uniqueness half;
+            # with no stats index either, no pre-pass runs at all and
+            # the probe keeps its bounded early-stop count.
+            # Caller-measured ``source_stats`` over this exact source
+            # skip the pre-pass: the job is already paid for inside
+            # the caller's own metrics action (``key_bounds`` holds
+            # their usable range).
+            single_key_stats = len(keys) == 1 and bool(manifest.get("stats"))
+            n_src_rows: int | None = None
+            if source_stats is not None:
+                n_src_rows = int(source_stats[0])
+            elif assume_unique_keys:
+                if single_key_stats:
+                    pre = source.agg(
+                        F.count("*").alias("__n"),
+                        F.min(keys[0]).alias("__lo"),
+                        F.max(keys[0]).alias("__hi")).collect()[0]
+                    n_src_rows = pre["__n"]
+                    key_bounds = (pre["__lo"], pre["__hi"])
+            else:
+                pre_aggs = [F.max("__c").alias("__dup"),
+                            F.sum("__c").alias("__n")]
+                if single_key_stats:
+                    pre_aggs += [F.min(keys[0]).alias("__lo"),
+                                 F.max(keys[0]).alias("__hi")]
+                pre = (source.groupBy(*keys).agg(F.count("*").alias("__c"))
+                       .agg(*pre_aggs).collect()[0])
+                if (pre["__dup"] or 0) > 1:
+                    raise ValueError(
+                        "MERGE source has multiple rows per key; aggregate "
+                        "it first (e.g. LWW top-1) - ANSI MERGE requires <=1"
+                    )
+                n_src_rows = int(pre["__n"] or 0)
+                if single_key_stats:
+                    key_bounds = (pre["__lo"], pre["__hi"])
+
+            # File-level pruning: which data files hold matched keys?
+            # Two stages, like a real format: (1) STATS pruning - skip
+            # manifest entries whose key range cannot intersect the
+            # source's key range without reading them at all; (2) a
+            # semi-join probe over the survivors (files-not-rows sized
+            # collect - the skipping index for entries stats can't
+            # rule out).
+            probe_dirs = self._key_candidates(manifest, keys, key_bounds)
+            all_files = list(manifest["files"])
+            if not probe_dirs or (len(probe_dirs) == 1
+                                  and source_stats is not None):
+                # Caller-measured stats already reduced the candidate
+                # set to at most ONE entry: a semi-join probe job cannot
+                # shrink it further in a way that changes the rewrite's
+                # rows (rewriting a range-overlapping entry that happens
+                # to hold no matched key reproduces them verbatim - the
+                # same conservative trade stats-only CoW formats make).
+                # Skipping the probe removes one whole Spark action from
+                # every small sync/CQL merge (round 13, guide §2.4).
+                # Without caller stats the probe runs, so an entry the
+                # source matches nothing in keeps its path: a merge that
+                # inserts into a single-entry table must not fold the
+                # untouched entry into the rewrite.
+                affected = list(probe_dirs)
+            else:
+                # A source vouched unique (<=1 row per key) needs no
+                # distinct before the semi-join probe - the build side
+                # is already minimal, and the distinct was a pure extra
+                # exchange inside the broadcast build (guide §2.4: a
+                # distinct on data that is already unique). Without the
+                # vouch, dedup still bounds the broadcast relation.
+                skeys = source.select(*keys)
+                if not assume_unique_keys:
+                    skeys = skeys.distinct()
+                affected = self._entries_with(
+                    schema, probe_dirs,
+                    lambda wf: self._probe_semi_join(
+                        wf, skeys, source, keys, n_source_rows=n_src_rows))
+            if nmbs_action is not None:
+                # WHEN NOT MATCHED BY SOURCE inverts the pruning logic:
+                # any file may hold target rows without a source match.
+                # With a condition, prune to files containing rows that
+                # satisfy it (conservative superset - a
+                # rewritten-but-unchanged row is harmless); without one,
+                # all files qualify.
+                if nmbs_condition is not None:
+                    nm_affected = self._entries_with(
+                        schema, all_files,
+                        lambda wf: wf.alias("tgt").filter(nmbs_condition))
+                else:
+                    nm_affected = list(all_files)
+                affected = [d for d in all_files
+                            if d in affected or d in nm_affected]
+
+            # Affected files are read with MoR deletes applied, so a
+            # previously-deleted key never resurrects through the KEEP
+            # branch.
+            tgt_aff = self._read_entries(manifest, affected)
+            src, tgt = source.alias("src"), tgt_aff.alias("tgt")
+            # Explicit join condition (a USING-style name list would
+            # coalesce the key columns and break src./tgt. references
+            # below).
+            cond = F.lit(True)
+            for k in keys:
+                cond = cond & (F.col(f"tgt.`{k}`") == F.col(f"src.`{k}`"))
+            joined = tgt.join(src, cond, "full_outer")
+            t_key = F.col(f"tgt.{keys[0]}")
+            s_key = F.col(f"src.{keys[0]}")
+
+            upd = (matched_condition if matched_condition is not None
+                   else F.lit(True))
+            dele = (delete_condition if delete_condition is not None
+                    else F.lit(False))
+            take_src = (
+                # INSERT: no target row
+                t_key.isNull()
+                # UPDATE: matched and condition holds
+                | (s_key.isNotNull() & upd)
+            )
+            keep = ~(s_key.isNotNull() & t_key.isNotNull() & dele) & ~(
+                t_key.isNull() & dele
+            )
+            tgt_only = t_key.isNotNull() & s_key.isNull()
+            nmbs_cond = (nmbs_condition if nmbs_condition is not None
+                         else F.lit(True))
+            if nmbs_action == "delete":
+                keep = keep & ~(tgt_only & nmbs_cond)
+            assignments = assignments or {}
+            # Delta's UPDATE SET * / INSERT * contract for narrow
+            # sources (the norm after schema evolution - old writers
+            # don't know the new columns): a target column absent from
+            # the source and from `assignments` keeps the target value
+            # on update and reads NULL on insert (tgt is NULL there),
+            # instead of failing analysis on a dangling src reference.
+            src_cols = set(source.columns)
+
+            def _src_val(c):
+                if c in assignments:
+                    return assignments[c]
+                if c in src_cols:
+                    return F.col(f"src.{c}")
+                return F.col(f"tgt.{c}")
+
+            cols = [
+                F.when(take_src, _src_val(c))
+                .otherwise(F.col(f"tgt.{c}")).alias(c)
+                if c not in keys
+                else F.coalesce(F.col(f"tgt.{c}"), F.col(f"src.{c}")).alias(c)
+                for c in schema.names
+            ]
+            if nmbs_action == "update":
+                nmbs_assignments = nmbs_assignments or {}
+                cols = [
+                    F.when(tgt_only & nmbs_cond,
+                           nmbs_assignments.get(c, F.col(f"tgt.{c}")))
+                    .otherwise(col).alias(c)
+                    if c not in keys else col
+                    for col, c in zip(cols, schema.names)
+                ]
+            rewritten = joined.filter(keep).select(*cols)
+
+            fresh, fresh_stats = self._write_rewrite(
+                rewritten, manifest, affected)
+            return self._commit_rewrite(
+                manifest, commit_base, affected, fresh, fresh_stats,
+                manifests_dir=commit_dir, txns=txns)
         finally:
             if rereads:
                 source.unpersist()
-
-    def _key_candidates(self, manifest: dict, keys: list[str],
-                        key_bounds: tuple | None) -> list[str]:
-        """STATS pruning for a merge: the manifest entries whose key
-        range may intersect the source's [lo, hi] (all entries when
-        the bounds are unknown or the merge is multi-key)."""
-        entries = list(manifest["files"])
-        if key_bounds is None or len(keys) != 1:
-            return entries
-        lo, hi = key_bounds
-        stats = manifest.get("stats", {})
-        return [
-            d for d in entries
-            if stats.get(d, {}).get(keys[0]) is None
-            or self._range_may_overlap(
-                stats[d][keys[0]],
-                lo if isinstance(lo, (int, float)) else str(lo),
-                hi if isinstance(hi, (int, float)) else str(hi),
-            )
-        ]
-
-    def __merge_against_materialized(
-            self, manifest, source, keys, matched_condition,
-            delete_condition, commit_dir, commit_base,
-            assume_unique_keys, assignments, txns,
-            nmbs_action, nmbs_condition, nmbs_assignments,
-            schema, source_stats=None, key_bounds=None) -> int:
-        # ONE fused source-side pre-pass (VERDICT r7 #2): the
-        # <=1-row-per-key precondition, the stats-pruning key range,
-        # and the broadcast-probe cardinality all come out of a single
-        # aggregate job instead of three driver-sequenced passes over
-        # the source. A caller whose source is keyed BY CONSTRUCTION
-        # (a snapshot of a keyed store, a distinct'd delta) skips the
-        # uniqueness half; with no stats index either, no pre-pass
-        # runs at all and the probe keeps its bounded early-stop count.
-        # Caller-measured ``source_stats`` over this exact source skip
-        # the pre-pass: the job is already paid for inside the
-        # caller's own metrics action (``key_bounds`` holds their
-        # usable range).
-        single_key_stats = len(keys) == 1 and bool(manifest.get("stats"))
-        n_src_rows: int | None = None
-        if source_stats is not None:
-            n_src_rows = int(source_stats[0])
-        elif assume_unique_keys:
-            if single_key_stats:
-                pre = source.agg(
-                    F.count("*").alias("__n"),
-                    F.min(keys[0]).alias("__lo"),
-                    F.max(keys[0]).alias("__hi")).collect()[0]
-                n_src_rows = pre["__n"]
-                key_bounds = (pre["__lo"], pre["__hi"])
-        else:
-            pre_aggs = [F.max("__c").alias("__dup"),
-                        F.sum("__c").alias("__n")]
-            if single_key_stats:
-                pre_aggs += [F.min(keys[0]).alias("__lo"),
-                             F.max(keys[0]).alias("__hi")]
-            pre = (source.groupBy(*keys).agg(F.count("*").alias("__c"))
-                   .agg(*pre_aggs).collect()[0])
-            if (pre["__dup"] or 0) > 1:
-                raise ValueError(
-                    "MERGE source has multiple rows per key; aggregate it "
-                    "first (e.g. LWW top-1) - ANSI MERGE requires <=1"
-                )
-            n_src_rows = int(pre["__n"] or 0)
-            if single_key_stats:
-                key_bounds = (pre["__lo"], pre["__hi"])
-
-        # File-level pruning: which data files hold matched keys?
-        # Two stages, like a real format: (1) STATS pruning - skip
-        # manifest entries whose key range cannot intersect the
-        # source's key range without reading them at all; (2) a
-        # semi-join probe over the survivors (files-not-rows sized
-        # collect - the skipping index for entries stats can't rule
-        # out).
-        probe_dirs = self._key_candidates(manifest, keys, key_bounds)
-        def _strip_scheme(p: str) -> str:
-            return p[7:] if p.startswith("file://") else p
-
-        all_files = list(manifest["files"])
-        if not probe_dirs or (len(probe_dirs) == 1
-                              and source_stats is not None):
-            # Caller-measured stats already reduced the candidate set
-            # to at most ONE entry: a semi-join probe job cannot shrink
-            # it further in a way that changes the rewrite's rows
-            # (rewriting a range-overlapping entry that happens to hold
-            # no matched key reproduces them verbatim - the same
-            # conservative trade stats-only CoW formats make). Skipping
-            # the probe removes one whole Spark action from every
-            # small sync/CQL merge (round 13, guide §2.4). Without
-            # caller stats the probe runs, so an entry the source
-            # matches nothing in keeps its path: a merge that inserts
-            # into a single-entry table must not fold the untouched
-            # entry into the rewrite.
-            affected = list(probe_dirs)
-        else:
-            probe = self.spark.read.schema(schema).parquet(*probe_dirs)
-            with_file = probe.withColumn("__f", F.input_file_name())
-            # A source vouched unique (<=1 row per key) needs no
-            # distinct before the semi-join probe - the build side is
-            # already minimal, and the distinct was a pure extra
-            # exchange inside the broadcast build (guide §2.4: a
-            # distinct on data that is already unique). Without the
-            # vouch, dedup still bounds the broadcast relation.
-            skeys = source.select(*keys)
-            if not assume_unique_keys:
-                skeys = skeys.distinct()
-            hit_rows = (
-                self._probe_semi_join(with_file, skeys, source, keys,
-                                      n_source_rows=n_src_rows)
-                .select("__f").distinct().collect()
-            )
-            hit_files = {_strip_scheme(r["__f"]) for r in hit_rows}
-            # A manifest entry is a directory; it is "affected" if any
-            # of its part files got a hit.
-            affected = [
-                d for d in all_files
-                if any(h.startswith(d.rstrip("/") + "/")
-                       for h in hit_files)
-            ]
-        if nmbs_action is not None:
-            # WHEN NOT MATCHED BY SOURCE inverts the pruning logic:
-            # any file may hold target rows without a source match.
-            # With a condition, prune to files containing rows that
-            # satisfy it (conservative superset - a rewritten-but-
-            # unchanged row is harmless); without one, all files
-            # qualify.
-            if nmbs_condition is not None and all_files:
-                raw = self.spark.read.schema(schema).parquet(*all_files)
-                cond_tgt = raw.alias("tgt").filter(nmbs_condition)
-                nm_rows = (cond_tgt.withColumn("__f", F.input_file_name())
-                           .select("__f").distinct().collect())
-                nm_hits = {_strip_scheme(r["__f"]) for r in nm_rows}
-                nm_affected = [
-                    d for d in all_files
-                    if any(h.startswith(d.rstrip("/") + "/")
-                           for h in nm_hits)
-                ]
-            else:
-                nm_affected = list(all_files)
-            affected = [d for d in all_files
-                        if d in affected or d in nm_affected]
-        untouched = [d for d in all_files if d not in affected]
-
-        # Affected files are read with MoR deletes applied, so a
-        # previously-deleted key never resurrects through the KEEP branch.
-        tgt_aff = self._read_entries(manifest, affected)
-        src, tgt = source.alias("src"), tgt_aff.alias("tgt")
-        # Explicit join condition (a USING-style name list would coalesce
-        # the key columns and break src./tgt. references below).
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & (F.col(f"tgt.`{k}`") == F.col(f"src.`{k}`"))
-        joined = tgt.join(src, cond, "full_outer")
-        t_key = F.col(f"tgt.{keys[0]}")
-        s_key = F.col(f"src.{keys[0]}")
-
-        upd = matched_condition if matched_condition is not None else F.lit(True)
-        dele = delete_condition if delete_condition is not None else F.lit(False)
-        take_src = (
-            # INSERT: no target row
-            t_key.isNull()
-            # UPDATE: matched and condition holds
-            | (s_key.isNotNull() & upd)
-        )
-        keep = ~(s_key.isNotNull() & t_key.isNotNull() & dele) & ~(
-            t_key.isNull() & dele
-        )
-        tgt_only = t_key.isNotNull() & s_key.isNull()
-        nmbs_cond = (nmbs_condition if nmbs_condition is not None
-                     else F.lit(True))
-        if nmbs_action == "delete":
-            keep = keep & ~(tgt_only & nmbs_cond)
-        assignments = assignments or {}
-        # Delta's UPDATE SET * / INSERT * contract for narrow sources
-        # (the norm after schema evolution - old writers don't know
-        # the new columns): a target column absent from the source and
-        # from `assignments` keeps the target value on update and
-        # reads NULL on insert (tgt is NULL there), instead of failing
-        # analysis on a dangling src reference.
-        src_cols = set(source.columns)
-
-        def _src_val(c):
-            if c in assignments:
-                return assignments[c]
-            if c in src_cols:
-                return F.col(f"src.{c}")
-            return F.col(f"tgt.{c}")
-
-        cols = [
-            F.when(take_src, _src_val(c))
-            .otherwise(F.col(f"tgt.{c}")).alias(c)
-            if c not in keys
-            else F.coalesce(F.col(f"tgt.{c}"), F.col(f"src.{c}")).alias(c)
-            for c in schema.names
-        ]
-        if nmbs_action == "update":
-            nmbs_assignments = nmbs_assignments or {}
-            cols = [
-                F.when(tgt_only & nmbs_cond,
-                       nmbs_assignments.get(c, F.col(f"tgt.{c}")))
-                .otherwise(col).alias(c)
-                if c not in keys else col
-                for col, c in zip(cols, schema.names)
-            ]
-        rewritten = joined.filter(keep).select(*cols)
-
-        fresh, fresh_stats = self._write_rewrite(
-            rewritten, manifest, affected)
-        new_files = list(untouched) + fresh
-        # Stats carry over verbatim for untouched entries (their bytes
-        # did not change - the CoW payoff extends to the index); the
-        # rewritten entries' stats rode the write job (Observation).
-        base_stats = manifest.get("stats", {})
-        stats = {d: base_stats[d] for d in untouched if d in base_stats}
-        stats.update(fresh_stats)
-        # Untouched entries keep their commit generation (pending MoR
-        # deletes must still apply to them); fresh entries are stamped
-        # AFTER every existing generation and pending delete - computed
-        # from the base manifest, so it is correct both on main and on
-        # a branch whose local version counter restarted at 1.
-        base_seq = manifest.get("seq", {})
-        next_seq = self._next_seq(manifest, commit_base)
-        seq = {d: int(base_seq.get(d, 0)) for d in untouched}
-        seq.update({d: next_seq for d in fresh})
-        return self._commit(commit_base, new_files, schema, stats, seq=seq,
-                            deletes=manifest.get("deletes", []),
-                            manifests_dir=commit_dir,
-                            cluster_by=manifest.get("cluster_by"),
-                            txns=txns)
 
     # -- DELETE / UPDATE (copy-on-write) -----------------------------------
 
@@ -1029,11 +1033,6 @@ class AcidParquetTable:
         all_files = list(manifest["files"])
         if not all_files:
             return base
-        # The probe reads the files RAW (input_file_name requires a
-        # single source, and _read_entries may anti-join delete files):
-        # a file whose only matching rows are MoR-deleted is rewritten
-        # conservatively - harmless, since the rewrite content below
-        # comes from the delete-applied read.
         if len(all_files) == 1:
             # One entry: the probe can only choose between "rewrite
             # it" and "rewrite nothing"; rewriting a no-match entry
@@ -1044,18 +1043,8 @@ class AcidParquetTable:
             # update/delete (round 13, guide §2.4).
             affected = list(all_files)
         else:
-            probe = self.spark.read.schema(schema).parquet(*all_files)
-            hit_rows = (
-                probe.withColumn("__f", F.input_file_name())
-                .filter(condition).select("__f").distinct().collect()
-            )
-            hits = {r["__f"][7:]
-                    if r["__f"].startswith("file://") else r["__f"]
-                    for r in hit_rows}
-            affected = [
-                d for d in all_files
-                if any(h.startswith(d.rstrip("/") + "/") for h in hits)]
-        untouched = [d for d in all_files if d not in affected]
+            affected = self._entries_with(
+                schema, all_files, lambda wf: wf.filter(condition))
         n_matched = 0
         fresh, fresh_stats = [], {}
         if affected:
@@ -1079,18 +1068,9 @@ class AcidParquetTable:
             n_matched = self._observed(obs, "n") if obs else None
             if n_matched is None:
                 n_matched = live.filter(matched).count()
-        new_files = list(untouched) + fresh
-        base_stats = manifest.get("stats", {})
-        stats = {d: base_stats[d] for d in untouched if d in base_stats}
-        stats.update(fresh_stats)
-        base_seq = manifest.get("seq", {})
-        seq = {d: int(base_seq.get(d, 0)) for d in untouched}
-        seq.update({d: self._next_seq(manifest, base) for d in fresh})
-        return self._commit(base, new_files, schema, stats, seq=seq,
-                            deletes=manifest.get("deletes", []),
-                            cluster_by=manifest.get("cluster_by"),
-                            operation=operation,
-                            operation_metrics={metric: int(n_matched)})
+        return self._commit_rewrite(
+            manifest, base, affected, fresh, fresh_stats,
+            operation=operation, operation_metrics={metric: int(n_matched)})
 
     @staticmethod
     def _observed(obs, name: str):
@@ -1118,19 +1098,8 @@ class AcidParquetTable:
         base = self.current_version()
         manifest = self._manifest(base)
         schema = StructType.fromJson(manifest["schema"])
-        all_files = list(manifest["files"])
-        hits: set[str] = set()
-        if all_files:
-            probe = self.spark.read.schema(schema).parquet(*all_files)
-            hit_rows = (
-                probe.withColumn("__f", F.input_file_name())
-                .filter(condition).select("__f").distinct().collect()
-            )
-            hits = {r["__f"][7:] if r["__f"].startswith("file://") else r["__f"]
-                    for r in hit_rows}
-        affected = [d for d in all_files
-                    if any(h.startswith(d.rstrip("/") + "/") for h in hits)]
-        untouched = [d for d in all_files if d not in affected]
+        affected = self._entries_with(
+            schema, manifest["files"], lambda wf: wf.filter(condition))
         kept = self._read_entries(manifest, affected).filter(
             ~F.coalesce(condition, F.lit(False)))
         proof = F.assert_true(
@@ -1147,18 +1116,9 @@ class AcidParquetTable:
             kept, manifest, affected)
         inc_files, inc_stats = self._write_one_entry(
             incoming, stats_schema=schema)
-        fresh += inc_files
-        fresh_stats = {**fresh_stats, **inc_stats}
-        new_files = untouched + fresh
-        base_stats = manifest.get("stats", {})
-        stats = {d: base_stats[d] for d in untouched if d in base_stats}
-        stats.update(fresh_stats)
-        base_seq = manifest.get("seq", {})
-        seq = {d: int(base_seq.get(d, 0)) for d in untouched}
-        seq.update({d: self._next_seq(manifest, base) for d in fresh})
-        return self._commit(base, new_files, schema, stats, seq=seq,
-                            deletes=manifest.get("deletes", []),
-                            cluster_by=manifest.get("cluster_by"))
+        return self._commit_rewrite(manifest, base, affected,
+                                    fresh + inc_files,
+                                    {**fresh_stats, **inc_stats})
 
     def delete_where(self, condition: Column) -> int:
         """``DELETE FROM t WHERE condition`` as a copy-on-write commit.
@@ -1212,11 +1172,7 @@ class AcidParquetTable:
         keys_df.select(*keys).distinct().write.mode("errorifexists").parquet(d)
         deletes.append({"path": d, "seq": self._next_seq(manifest, base),
                         "keys": keys})
-        schema = StructType.fromJson(manifest["schema"])
-        return self._commit(base, manifest["files"], schema,
-                            manifest.get("stats", {}),
-                            seq=manifest.get("seq"), deletes=deletes,
-                            cluster_by=manifest.get("cluster_by"))
+        return self._recommit(base, manifest, deletes=deletes)
 
     def compact_deletes(self) -> int:
         """Materialize pending MoR delete files into the data entries
@@ -1227,7 +1183,6 @@ class AcidParquetTable:
         entries carry over byte-for-byte."""
         base = self.current_version()
         manifest = self._manifest(base)
-        schema = StructType.fromJson(manifest["schema"])
         deletes = manifest.get("deletes", [])
         if not deletes:
             return base
@@ -1239,24 +1194,16 @@ class AcidParquetTable:
         stats_m = manifest.get("stats", {})
         seqs = manifest.get("seq", {})
         max_del_seq = max(e["seq"] for e in deletes)
-        affected, untouched = [], []
+        affected = []
         for d in manifest["files"]:
             s = stats_m.get(d, {}).get(keys[0]) if len(keys) == 1 else None
             subject = int(seqs.get(d, 0)) < max_del_seq
             if subject and (s is None or self._range_may_overlap(s, lo, hi)):
                 affected.append(d)
-            else:
-                untouched.append(d)
-        rewritten = self._read_entries(manifest, affected)
         fresh, fresh_stats = self._write_rewrite(
-            rewritten, manifest, affected)
-        new_files = list(untouched) + fresh
-        stats = {d: stats_m[d] for d in untouched if d in stats_m}
-        stats.update(fresh_stats)
-        seq = {d: int(seqs.get(d, 0)) for d in untouched}
-        seq.update({d: self._next_seq(manifest, base) for d in fresh})
-        return self._commit(base, new_files, schema, stats, seq=seq, deletes=[],
-                            cluster_by=manifest.get("cluster_by"))
+            self._read_entries(manifest, affected), manifest, affected)
+        return self._commit_rewrite(manifest, base, affected, fresh,
+                                    fresh_stats, deletes=[])
 
     def _entry_bytes(self, d: str) -> int:
         total = 0
@@ -1285,7 +1232,6 @@ class AcidParquetTable:
         small = [d for d in manifest["files"] if sizes[d] < target_bytes]
         if len(small) < 2:
             return base
-        untouched = [d for d in manifest["files"] if d not in small]
         rewritten = self._read_entries(manifest, small)
         n_out = max(1, math.ceil(sum(sizes[d] for d in small) / target_bytes))
         cb = manifest.get("cluster_by")
@@ -1295,16 +1241,7 @@ class AcidParquetTable:
         else:
             fresh, fresh_stats = self._write_one_entry(
                 rewritten.coalesce(n_out), stats_schema=schema)
-        new_files = untouched + fresh
-        base_stats = manifest.get("stats", {})
-        stats = {d: base_stats[d] for d in untouched if d in base_stats}
-        stats.update(fresh_stats)
-        base_seq = manifest.get("seq", {})
-        seq = {d: int(base_seq.get(d, 0)) for d in untouched}
-        seq.update({d: self._next_seq(manifest, base) for d in fresh})
-        return self._commit(base, new_files, schema, stats, seq=seq,
-                            deletes=manifest.get("deletes", []),
-                            cluster_by=cb)
+        return self._commit_rewrite(manifest, base, small, fresh, fresh_stats)
 
     # -- branches: write-audit-publish -------------------------------------
 
@@ -1379,10 +1316,7 @@ class AcidParquetTable:
             raise CommitConflict(
                 f"main advanced v{main_base} -> v{base} since branch "
                 f"{branch!r} was cut; re-stage and re-audit on the new base")
-        schema = StructType.fromJson(m["schema"])
-        return self._commit(base, m["files"], schema, m.get("stats", {}),
-                            seq=m.get("seq"), deletes=m.get("deletes", []),
-                            cluster_by=m.get("cluster_by"))
+        return self._recommit(base, m)
 
     # -- change data feed --------------------------------------------------
 
@@ -1448,9 +1382,7 @@ class AcidParquetTable:
             if f.name in names:
                 raise ValueError(f"column {f.name!r} already exists")
             schema = schema.add(f)
-        return self._commit(v, m["files"], schema, m.get("stats", {}),
-                            seq=m.get("seq"), deletes=m.get("deletes", []),
-                            cluster_by=m.get("cluster_by"))
+        return self._recommit(v, m, schema=schema)
 
     def restore(self, version: int) -> int:
         """RESTORE TABLE TO VERSION AS OF ``version``: commit a NEW
@@ -1476,11 +1408,7 @@ class AcidParquetTable:
                 f"cannot restore to v{version}: {len(missing)} data "
                 f"entries were vacuumed (run restore before vacuum "
                 f"passes the retention horizon)")
-        return self._commit(base, m["files"],
-                            StructType.fromJson(m["schema"]),
-                            m.get("stats", {}), seq=m.get("seq"),
-                            deletes=m.get("deletes", []),
-                            cluster_by=m.get("cluster_by"))
+        return self._recommit(base, m)
 
     def shallow_clone(self, target_root: str) -> "AcidParquetTable":
         """CREATE TABLE ... SHALLOW CLONE: a new, independently
@@ -1499,10 +1427,7 @@ class AcidParquetTable:
         clone = AcidParquetTable(self.spark, target_root)
         if clone.current_version() != 0:
             raise ValueError(f"{target_root} already has commits")
-        clone._commit(0, m["files"], StructType.fromJson(m["schema"]),
-                      m.get("stats", {}), seq=m.get("seq"),
-                      deletes=m.get("deletes", []),
-                      cluster_by=m.get("cluster_by"))
+        clone._recommit(0, m)
         return clone
 
     def deep_clone(self, target_root: str) -> "AcidParquetTable":
@@ -1534,13 +1459,11 @@ class AcidParquetTable:
             shutil.copytree(e["path"], nd)
             new_deletes.append({**e, "path": nd})
         remap = lambda k: mapping.get(k, k)  # noqa: E731
-        clone._commit(
-            0, [mapping[d] for d in m["files"]],
-            StructType.fromJson(m["schema"]),
-            {remap(k): v for k, v in m.get("stats", {}).items()},
+        clone._recommit(
+            0, m, files=[mapping[d] for d in m["files"]],
+            stats={remap(k): v for k, v in m.get("stats", {}).items()},
             seq={remap(k): v for k, v in m.get("seq", {}).items()},
-            deletes=new_deletes,
-            cluster_by=m.get("cluster_by"))
+            deletes=new_deletes)
         return clone
 
     # -- CHECK constraints -------------------------------------------------
@@ -1554,13 +1477,16 @@ class AcidParquetTable:
         except FileNotFoundError:
             return {}
 
-    def _write_constraints(self, cons: dict[str, str]) -> None:
+    def _write_table_json(self, name: str, obj) -> None:
+        """Durably replace the table-level JSON file ``name``: write a
+        temp file, fsync it, then ``os.replace`` it into place, so a
+        reader sees the old or the new content, never a torn one."""
         tmp = os.path.join(self.root, f".tmp.{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
-            json.dump(cons, fh)
+            json.dump(obj, fh)
             fh.flush()
             os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(self.root, self._CONSTRAINTS))
+        os.replace(tmp, os.path.join(self.root, name))
 
     def add_constraint(self, name: str, condition_sql: str) -> None:
         """ALTER TABLE ADD CONSTRAINT name CHECK (condition): from now
@@ -1586,12 +1512,12 @@ class AcidParquetTable:
                     f"violate ({condition_sql})")
         cons = self._constraints()
         cons[name] = condition_sql
-        self._write_constraints(cons)
+        self._write_table_json(self._CONSTRAINTS, cons)
 
     def drop_constraint(self, name: str) -> None:
         cons = self._constraints()
         cons.pop(name, None)
-        self._write_constraints(cons)
+        self._write_table_json(self._CONSTRAINTS, cons)
 
     # -- generated columns -------------------------------------------------
 
@@ -1621,12 +1547,7 @@ class AcidParquetTable:
                 f"generated column {name!r} is not in the table schema")
         gen = self._generated()
         gen[name] = expr_sql
-        tmp = os.path.join(self.root, f".tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(gen, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(self.root, self._GENERATED))
+        self._write_table_json(self._GENERATED, gen)
 
     def _apply_generated(self, df: DataFrame) -> DataFrame:
         gen = self._generated()
@@ -1756,27 +1677,44 @@ class AcidParquetTable:
         return z
 
     def _write_clustered(self, df: DataFrame, cluster_by: list[str],
-                         n_slices: int, zorder: bool = False) -> list[str]:
-        """Shared clustered-write core for ``optimize`` and
-        ``init_clustered``: one distributed job - range repartition on
-        the cluster key, Hive-style slice write - returning the slice
-        directories (the new manifest entries)."""
-        sort_key = (self._zvalue(df, cluster_by) if zorder
-                    else F.col(cluster_by[0]))
+                         n_slices: int, zorder: bool = False,
+                         uppers: list | None = None) -> list[str]:
+        """The one clustered-write core (``optimize``,
+        ``init_clustered``, sliced rewrites, ``compact_small``): one
+        distributed job - slice assignment, Hive-style slice write -
+        returning the slice directories (the new manifest entries).
+
+        With ``uppers`` (inclusive ascending slice upper bounds, last
+        None) each row's slice comes from a literal when-chain on the
+        cluster key: one shuffle keyed on the deterministic slice id,
+        no sampling pass. Without them, ``repartitionByRange`` samples
+        the input into ``n_slices`` ranges (on the Morton key when
+        ``zorder``)."""
+        key = F.col(cluster_by[0])
+        sort_key = self._zvalue(df, cluster_by) if zorder else key
         d = os.path.join(self.root, _DATA, uuid.uuid4().hex)
         # CHECK constraints and generated columns apply to every data
         # write, including the clustered bootstrap/optimize path (this
-        # writer does not go through _write_data_files)
+        # writer does not go through _write_one_entry)
         df = self._enforce_constraints(self._apply_generated(df))
-        (
-            df.withColumn("__zk", sort_key)
-            .repartitionByRange(n_slices, F.col("__zk"))
-            .sortWithinPartitions("__zk")
-            .withColumn("__slice", F.spark_partition_id())
-            .drop("__zk")
-            .write.partitionBy("__slice")
-            .parquet(d)
-        )
+        if uppers is not None:
+            n = len(uppers)
+            slice_expr = F.lit(0)
+            if n > 1:
+                chain = F.when(key <= F.lit(uppers[0]), F.lit(0))
+                for i, u in enumerate(uppers[1:-1], start=1):
+                    chain = chain.when(key <= F.lit(u), F.lit(i))
+                slice_expr = chain.otherwise(F.lit(n - 1))
+            out = (df.withColumn("__slice", slice_expr)
+                   .repartition(n, F.col("__slice"))
+                   .sortWithinPartitions("__slice", cluster_by[0]))
+        else:
+            out = (df.withColumn("__zk", sort_key)
+                   .repartitionByRange(n_slices, F.col("__zk"))
+                   .sortWithinPartitions("__zk")
+                   .withColumn("__slice", F.spark_partition_id())
+                   .drop("__zk"))
+        out.write.partitionBy("__slice").parquet(d)
         slices = sorted(
             os.path.join(d, sub)
             for sub in os.listdir(d) if sub.startswith("__slice=")
@@ -1815,11 +1753,9 @@ class AcidParquetTable:
         n_affected = len(affected)
         cb = manifest.get("cluster_by")
         if cb and n_affected > 1:
-            uppers = self._slice_uppers(manifest, affected, cb[0], schema)
-            if uppers is not None:
-                files = self._write_sliced_by_bounds(df, cb, uppers)
-            else:
-                files = self._write_clustered(df, cb, n_slices=n_affected)
+            files = self._write_clustered(
+                df, cb, n_affected,
+                uppers=self._slice_uppers(manifest, affected, cb[0], schema))
             return files, self._collect_stats(files, schema)
         return self._write_one_entry(df, stats_schema=schema)
 
@@ -1855,37 +1791,6 @@ class AcidParquetTable:
         # merge INSERTs beyond every historical range and NULL keys)
         return [r[1] for r in ranges[:-1]] + [None]
 
-    def _write_sliced_by_bounds(self, df: DataFrame, cluster_by: list[str],
-                                uppers: list) -> list[str]:
-        """Clustered-write core for rewrites with KNOWN slice bounds:
-        one shuffle keyed on the (deterministic, literal-derived)
-        slice id, zero sampling passes, Hive-style slice write."""
-        key = F.col(cluster_by[0])
-        n = len(uppers)
-        slice_expr = F.lit(0)
-        if n > 1:
-            chain = F.when(key <= F.lit(uppers[0]), F.lit(0))
-            for i, u in enumerate(uppers[1:-1], start=1):
-                chain = chain.when(key <= F.lit(u), F.lit(i))
-            slice_expr = chain.otherwise(F.lit(n - 1))
-        d = os.path.join(self.root, _DATA, uuid.uuid4().hex)
-        df = self._enforce_constraints(self._apply_generated(df))
-        (
-            df.withColumn("__slice", slice_expr)
-            .repartition(n, F.col("__slice"))
-            .sortWithinPartitions("__slice", cluster_by[0])
-            .write.partitionBy("__slice")
-            .parquet(d)
-        )
-        slices = sorted(
-            os.path.join(d, sub)
-            for sub in os.listdir(d) if sub.startswith("__slice=")
-        )
-        if not slices:
-            import shutil
-            shutil.rmtree(d, ignore_errors=True)
-        return slices
-
     def init_clustered(self, df: DataFrame, cluster_by: list[str],
                        n_slices: int = 8,
                        slice_uppers: list | None = None) -> int:
@@ -1906,11 +1811,10 @@ class AcidParquetTable:
         either way."""
         df = self._apply_generated(df)  # schema must include the column
         schema = df.schema
-        if slice_uppers is not None and len(slice_uppers) == n_slices:
-            files = self._write_sliced_by_bounds(df, cluster_by,
-                                                 slice_uppers)
-        else:
-            files = self._write_clustered(df, cluster_by, n_slices)
+        if slice_uppers is not None and len(slice_uppers) != n_slices:
+            slice_uppers = None  # unusable bounds: sample instead
+        files = self._write_clustered(df, cluster_by, n_slices,
+                                      uppers=slice_uppers)
         stats = self._collect_stats(files, schema)
         return self._commit(self.current_version(), files, schema, stats,
                             cluster_by=cluster_by)

@@ -115,7 +115,7 @@ def test_commit_conflict_detected(spark, root):
     t1.merge_into(src1, ["key"])
     # Writer 2 simulates having planned against the stale base version
     # by committing directly at that base.
-    files = t2._write_data_files(src2)
+    files = t2._write_one_entry(src2)[0]
     with pytest.raises(CommitConflict):
         t2._commit(base, files, src2.schema)
     # Table still shows writer 1's result; retry on fresh snapshot works.
@@ -136,7 +136,7 @@ def test_crash_before_manifest_create_is_invisible(spark, root):
     orphan_src = spark.createDataFrame(
         [(9, 99.0, 9)], "key bigint, price double, version int"
     )
-    (orphan_dir,) = t._write_data_files(orphan_src)
+    (orphan_dir,) = t._write_one_entry(orphan_src)[0]
     assert t.current_version() == v
     assert _rows(t.read()) == [(1, 10.0, 1)]
     # Later commits are unaffected and claim the next version.
@@ -945,7 +945,7 @@ def test_txn_version_makes_replayed_merge_a_noop(spark, root):
 
 
 def test_check_constraint_applies_to_clustered_bootstrap(spark, root):
-    """The clustered writer bypasses _write_data_files; constraints
+    """The clustered writer bypasses _write_one_entry; constraints
     must still gate it (init_clustered is the bootstrap everyone
     uses)."""
     t = AcidParquetTable(spark, root)
@@ -1002,27 +1002,25 @@ def test_probe_broadcasts_delta_sized_source(spark, root):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_probe_backfill_sized_source_avoids_broadcast(spark, root):
+def test_probe_backfill_sized_source_avoids_broadcast(spark, root,
+                                                     monkeypatch):
     """Above the key-row cap the probe takes a shuffle semi-join: a
     full-table backfill at 100 TB must never broadcast its key set
-    (VERDICT r4). Cap forced to 0 via conf to simulate 'huge'."""
+    (VERDICT r4). Cap forced to 0 to simulate 'huge'."""
     t = _table(spark, root, [(1, 10.0, 1), (2, 20.0, 1)])
     src = spark.createDataFrame(
         [(1, 11.0, 2), (2, 22.0, 2), (3, 33.0, 2)],
         "key bigint, price double, version int")
-    spark.conf.set(AcidParquetTable._PROBE_CAP_CONF, "0")
-    try:
-        with_file = t.read().withColumn("__f", F.input_file_name())
-        plan = t._probe_semi_join(
-            with_file, src.select("key").distinct(), src, ["key"]
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
-        assert "BroadcastExchange" not in plan
-        # end-to-end: the shuffle-probe merge is still correct
-        t.merge_into(src, ["key"])
-        assert _rows(t.read()) == [(1, 11.0, 2), (2, 22.0, 2), (3, 33.0, 2)]
-    finally:
-        spark.conf.unset(AcidParquetTable._PROBE_CAP_CONF)
+    monkeypatch.setattr(AcidParquetTable, "BROADCAST_PROBE_ROW_CAP", 0)
+    with_file = t.read().withColumn("__f", F.input_file_name())
+    plan = t._probe_semi_join(
+        with_file, src.select("key").distinct(), src, ["key"]
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan
+    assert "BroadcastExchange" not in plan
+    # end-to-end: the shuffle-probe merge is still correct
+    t.merge_into(src, ["key"])
+    assert _rows(t.read()) == [(1, 11.0, 2), (2, 22.0, 2), (3, 33.0, 2)]
 
 
 def test_merge_with_caller_measured_source_stats(spark, root):
@@ -1286,3 +1284,71 @@ def test_deep_clone_owns_its_bytes(spark, tmp_path):
     import pytest
     with pytest.raises(ValueError, match="already has commits"):
         clone.deep_clone(str(tmp_path / "deep"))
+
+
+_COW_OPS = {
+    # op -> (action, indexes of the init slices it must rewrite)
+    "merge_into": (lambda t, spark: t.merge_into(
+        spark.createDataFrame([(5, 55.0, 2)],
+                              "key bigint, price double, version int"),
+        ["key"]), {0}),
+    "update_where": (lambda t, spark: t.update_where(
+        F.col("key") == 15, {"price": F.lit(0.0)}), {1}),
+    "delete_where": (lambda t, spark: t.delete_where(
+        F.col("key") == 15), {1}),
+    "replace_where": (lambda t, spark: t.replace_where(
+        F.col("key") == 15,
+        spark.createDataFrame([(15, 150.0, 2)],
+                              "key bigint, price double, version int")),
+        {1}),
+    "compact_deletes": (lambda t, spark: t.compact_deletes(), {2}),
+    "compact_small": (lambda t, spark: t.compact_small(
+        target_bytes=max(t._entry_bytes(d) for d in
+                         t._manifest(t.current_version())["files"])),
+        {0, 1}),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_COW_OPS))
+def test_cow_rewrite_commit_contract(spark, root, op):
+    """Every copy-on-write rewrite commits the same way: entries it
+    does not rewrite keep their path, stats and MoR sequence stamp;
+    each fresh entry is stamped after every earlier entry and every
+    pending delete file (a lower stamp would let a pending delete mask
+    the rewritten rows, or a later delete miss them); pending deletes
+    and the declared clustering carry over; and the operation is one
+    ``_commit`` call, the single point crash/race injection hooks."""
+    t = AcidParquetTable(spark, root)
+    t.init_clustered(
+        spark.createDataFrame([(k, float(k), 1) for k in range(60)],
+                              "key bigint, price double, version int"),
+        ["key"], n_slices=3, slice_uppers=[9, 19, None])
+    t.delete_keys_mor(spark.createDataFrame([(25,)], "key bigint"), ["key"])
+    before = t._manifest(t.current_version())
+    files = before["files"]
+    assert len(files) == 3 and len(before["deletes"]) == 1
+    sizes = sorted(t._entry_bytes(d) for d in files)
+    assert sizes[1] < sizes[2]  # compact_small leaves exactly one entry
+
+    action, rewritten = _COW_OPS[op]
+    calls = []
+    commit = t._commit
+    t._commit = lambda *a, **kw: calls.append(1) or commit(*a, **kw)
+    action(t, spark)
+    assert len(calls) == 1
+    after = t._manifest(t.current_version())
+
+    untouched = [d for i, d in enumerate(files) if i not in rewritten]
+    fresh = [d for d in after["files"] if d not in files]
+    assert untouched and fresh
+    assert [d for d in after["files"] if d in files] == untouched
+    for d in untouched:
+        assert after["stats"][d] == before["stats"][d]
+        assert after["seq"][d] == before["seq"][d]
+    earlier = ([int(s) for s in before["seq"].values()]
+               + [int(e["seq"]) for e in before["deletes"]])
+    assert all(int(after["seq"][d]) > max(earlier) for d in fresh)
+    assert set(after["stats"]) == set(after["files"])
+    assert after["deletes"] == ([] if op == "compact_deletes"
+                                else before["deletes"])
+    assert after["cluster_by"] == ["key"]

@@ -5,8 +5,9 @@ The FULL 556-query sweep lives in test_oracle_parity.py and is marked
 VERIFY_r12); this file keeps one representative query per tier in the
 fast tier so a plain ``pytest tests/`` still proves the Spark/DuckDB
 semantics bridge end to end: relational star joins, window top-k,
-as-of union-window, LWW merge, ACID MERGE, CQL and ES compilers, the
-CQL/ES write paths and the sync cycle on the ACID store, and the
+as-of union-window, LWW merge, ACID MERGE and its maintenance,
+branch and clone commits, CQL and ES compilers, the CQL/ES write
+paths and the sync cycle on the ACID store, and the
 LLM-pipeline dedup/text/similarity/sketch operators.
 """
 
@@ -36,6 +37,12 @@ SMOKE = [
     "a3dy_es_update_by_query",     # ES update-by-query write path
     "a3dz_es_delete_by_query",     # ES delete-by-query write path
     "l26_sync_cycle_on_acid",      # sync cycle on the ACID store
+    "l27_acid_replace_where",      # ACID replaceWhere rewrite commit
+    "l28_acid_compact_small",      # ACID bin-packing compaction
+    "l19_acid_mor_delete",         # ACID merge-on-read delete + compact
+    "l35_merge_not_matched_by_source",  # MERGE NOT MATCHED BY SOURCE
+    "l23_acid_wap_publish",        # ACID branch write-audit-publish
+    "l39_acid_deep_clone",         # ACID deep clone
     "a3g_es_composite_agg",        # ES DSL compiler
     "a3x_es_field_collapse",       # ES search features
     "k1_exact_dedup",              # pipeline dedup

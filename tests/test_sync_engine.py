@@ -362,22 +362,39 @@ def test_acid_read_since_prunes_files_and_matches_filtered_read(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_env_knob_inventory():
-    """Every ``SPARK_GRAFT_*`` environment name the package reads. A
-    new knob doubles the configurations tests and benchmarks must
-    cover, so adding one means editing this set on purpose."""
+def _package_string_constants(pattern: str) -> set[str]:
+    """Every string literal in the package's source that matches
+    ``pattern`` in full (an AST scan, so comments and docstring prose
+    do not count unless they are the whole literal)."""
     import ast
     import pathlib
     import re
 
     import cassandra_elasticsearch_sync_spark as pkg
 
-    name = re.compile(r"SPARK_GRAFT_[A-Z_]+")
+    name = re.compile(pattern)
     found = set()
     for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if (isinstance(node, ast.Constant) and isinstance(node.value, str)
                     and name.fullmatch(node.value)):
-                found.add(node.value.removeprefix("SPARK_GRAFT_"))
+                found.add(node.value)
+    return found
+
+
+def test_env_knob_inventory():
+    """Every ``SPARK_GRAFT_*`` environment name the package reads. A
+    new knob doubles the configurations tests and benchmarks must
+    cover, so adding one means editing this set on purpose."""
+    found = {n.removeprefix("SPARK_GRAFT_")
+             for n in _package_string_constants(r"SPARK_GRAFT_[A-Z_]+")}
     assert found == {"SF_DIR", "CPUS", "SHUFFLE_PARTITIONS", "AQE",
                      "DRIVER_MEM"}
+
+
+def test_package_defines_no_spark_conf_knobs():
+    """The package reads no Spark conf name of its own
+    (``spark.cesync.*``): a conf-keyed knob is an environment knob by
+    another route, so one cannot come back unnoticed. Tests change
+    engine constants with ``monkeypatch`` instead."""
+    assert _package_string_constants(r"spark\.cesync\..*") == set()
