@@ -130,21 +130,6 @@ def load_watermark(spark: SparkSession, state_dir: str) -> dt.datetime | None:
     return v
 
 
-def extract_delta_since(snapshot: DataFrame, watermark: dt.datetime | None) -> DataFrame:
-    """L2 with persisted state: rows at-or-after the stored watermark
-    (everything, on first sync). The version predicate reaches the
-    scan - on a date-partitioned target it prunes whole partitions.
-
-    The boundary is INCLUSIVE (>=): the engine advances the watermark
-    to max(version) of the applied delta, so a concurrent write landing
-    later with version exactly equal to the watermark would be silently
-    skipped under a strict `>`. Re-shipping the boundary rows is safe -
-    applies are idempotent LWW merges (the L4 property test)."""
-    if watermark is None:
-        return snapshot
-    return snapshot.filter(F.col("version") >= F.lit(watermark))
-
-
 def compact_snapshot(spark: SparkSession, path: str, out_path: str,
                      target_files: int = 8) -> None:
     """Small-file compaction: rewrite a snapshot directory into

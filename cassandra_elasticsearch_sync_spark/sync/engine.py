@@ -33,6 +33,7 @@ from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 from cassandra_elasticsearch_sync_spark.sources.storage import (
@@ -93,8 +94,10 @@ class KeyedStore(Protocol):
       row (first sync). A store may prune the scan to get there
       (``AcidStore``: manifest version-range stats). Snapshot-stable:
       every evaluation of the returned DataFrame yields the same rows
-      (``AcidStore`` fixes its file list at call time), so the engine
-      reads it more than once without caching it.
+      (``AcidStore`` fixes its file list at call time). The engine
+      scans each delta once, into the grouped pass it materializes;
+      stability is what lets a recomputed partition of that pass agree
+      with the rest.
     - ``overwrite(df, key_quantiles)``: the bootstrap write; the
       optional ladder of ascending key bounds sets its slice layout.
     - ``apply_delta(delta, key_stats)``: LWW-apply a ship set holding
@@ -290,118 +293,101 @@ class SyncEngine:
         the watermark is max(version) of the rows seen, so a
         concurrent write landing later with version exactly equal to it
         must still be picked up next cycle. Inclusive extraction would
-        re-ship the boundary rows forever, so each delta is anti-joined
-        on the full payload (every column but the provenance `side`)
-        against the other side's post-watermark rows - its own delta,
-        which is a provably sufficient match set because the payload
-        includes `version` (see the inline proof below): `n` counts
-        only rows the other side actually lacks, which keeps 0 an
-        honest convergence signal AND skips the no-op overwrite on
+        re-ship the boundary rows forever, so a delta row ships only
+        when its full payload (every column but the provenance `side`)
+        is absent from the other side's delta. The other side's delta
+        is a sufficient match set because the payload includes
+        `version`: a row of that side can only match a delta row if its
+        version >= wm, i.e. if it is in that side's own delta. `n`
+        counts only rows the other side actually lacks, which keeps 0
+        an honest convergence signal AND skips the no-op apply on
         quiet cycles.
+
+        Both decisions come from ONE grouped pass: the two deltas,
+        tagged by origin, grouped on the payload. A group of one row is
+        a row the other side lacks; ``groupBy`` groups NULLs together,
+        so a payload holding a NULL matches its twin too.
         """
         wm = load_watermark(self.spark, self.state_dir)
-        # Not persisted: ``read_since`` is snapshot-stable (KeyedStore),
-        # so the frontier job and the ship-set builds below read the
-        # same rows without a cache - and under AQE a cache is one more
-        # job per delta.
         delta_a = self.a.read_since(wm)
         delta_b = self.b.read_since(wm)
         cols = [c for c in delta_a.columns if c != "side"]
-        # The payload anti-join's match set is the OTHER SIDE'S DELTA,
-        # not its full snapshot (round 12, guide §2.3): the join keys
-        # include `version`, and every delta row has version >= wm, so
-        # a full-snapshot row can only match if its version >= wm -
-        # i.e. iff it is in that side's own delta (NULL versions never
-        # equality-match anything). Same ship sets, but the anti-join's
-        # broadcast side is delta-sized instead of store-sized, which
-        # is what makes the shape hold at 100 TB. The ship sets are
-        # persisted: the metrics job below materializes them and each
-        # apply reads the cache.
-        ship_a = delta_a.join(delta_b, cols, "left_anti").persist()
-        ship_b = delta_b.join(delta_a, cols, "left_anti").persist()
-        # The version frontier over everything SEEN (not just shipped:
-        # rows present on both sides up to v are already synced, and
-        # the inclusive boundary still catches a straggler landing at
-        # exactly v) - ONE scalar job over the two delta scans. Round
-        # 12: it previously rode the metrics plan as a crossJoined
-        # 1-row aggregate, which the plan evaluated TWICE (once feeding
-        # the lag expression, once re-attached for the watermark) -
-        # two broadcast builds each re-scanning both deltas.
-        # The same single job also yields the frontier as RAW unix
-        # micros for the lag arithmetic (round 13, ADVICE r12): the
-        # previous F.lit(<collected naive datetime>).cast('timestamp')
-        # round-trip re-encodes through the driver's local timezone -
-        # identical under UTC, but an ambiguous DST instant could
-        # re-encode to a different micros value. The long never leaves
-        # integer space.
-        frow = (
-            delta_a.select("version").unionAll(delta_b.select("version"))
-            .agg(F.max("version").alias("__frontier"),
-                 F.unix_micros(F.max("version").cast("timestamp"))
-                 .alias("__frontier_us"))
-            .collect()[0]
+        # Materialized once: the metrics job below fills it and each
+        # apply reads it, so each apply sees the pre-apply other side -
+        # which also makes the two directions independent commits on
+        # different roots. A lazy local checkpoint, not a cache: a
+        # cached plan keeps every shuffle partition (one task each per
+        # later scan), the checkpoint keeps the post-shuffle layout.
+        grouped = (
+            delta_a.withColumn("__from", F.lit("a"))
+            .unionByName(delta_b.withColumn("__from", F.lit("b")))
+            .groupBy(*cols)
+            .agg(F.count("*").alias("__n"), F.max("__from").alias("__from"),
+                 F.max("side").alias("side"))
+            .localCheckpoint(eager=False)
         )
-        frontier, frontier_us = frow[0], frow[1]
-        # ONE metrics job over the persisted cycle-sized ship sets:
-        # per-direction counts and key bounds, and - when the ledger is
-        # on - the lag percentiles (against the now-literal frontier)
-        # and the conflict-key count, folded into this same pass via
-        # inclusion-exclusion over exact distinct counts
-        # (|keys_a ∩ keys_b| = |keys_a| + |keys_b| - |keys_a ∪ keys_b|;
-        # sync keys are non-null by contract - every join in the
-        # pipeline is null-rejecting on them). Previously a separate
-        # groupBy-per-key subplan crossJoined as a 1-row broadcast.
-        # The watermark itself is driver-side I/O (storage.py).
-        ships = (
-            ship_a.select("key", "version", F.lit("a").alias("s"))
-            .unionAll(ship_b.select("key", "version", F.lit("b").alias("s")))
-        )
-        f_us = F.lit(frontier_us).cast("bigint")
-        lag_us = f_us - F.unix_micros(F.col("version").cast("timestamp"))
+        ship = F.col("__n") == 1
+        is_a = ship & (F.col("__from") == "a")
+        is_b = ship & (F.col("__from") == "b")
+        ship_a = grouped.filter(is_a).select(*delta_a.columns)
+        ship_b = grouped.filter(is_b).select(*delta_a.columns)
+        # ONE metrics job over the grouped rows yields everything the
+        # cycle needs. The version frontier is over everything SEEN, not
+        # just shipped: rows present on both sides up to v are already
+        # synced, and the inclusive boundary still catches a straggler
+        # landing at exactly v. The watermark itself is driver-side I/O
+        # (storage.py).
         aggs = [
-            F.coalesce(F.sum(F.when(F.col("s") == "a", 1)),
-                       F.lit(0)).alias("n_a"),
-            F.coalesce(F.sum(F.when(F.col("s") == "b", 1)),
-                       F.lit(0)).alias("n_b"),
-            # Per-direction key bounds, measured in this same job and
-            # handed to the ACID merge as its source pre-pass (round
-            # 12): the apply then skips one whole aggregate job per
-            # direction - same values, same materialized ship set.
-            F.min(F.when(F.col("s") == "a", F.col("key"))).alias("lo_a"),
-            F.max(F.when(F.col("s") == "a", F.col("key"))).alias("hi_a"),
-            F.min(F.when(F.col("s") == "b", F.col("key"))).alias("lo_b"),
-            F.max(F.when(F.col("s") == "b", F.col("key"))).alias("hi_b"),
+            F.max("version").alias("frontier"),
+            F.count(F.when(is_a, 1)).alias("n_a"),
+            F.count(F.when(is_b, 1)).alias("n_b"),
+            # Per-direction key bounds, handed to the ACID merge as its
+            # source pre-pass: the apply then skips one whole aggregate
+            # job per direction - same values, same materialized rows.
+            F.min(F.when(is_a, F.col("key"))).alias("lo_a"),
+            F.max(F.when(is_a, F.col("key"))).alias("hi_a"),
+            F.min(F.when(is_b, F.col("key"))).alias("lo_b"),
+            F.max(F.when(is_b, F.col("key"))).alias("hi_b"),
             # Enforce the non-null-key contract the conflict-key
-            # inclusion-exclusion depends on (round 13, ADVICE r12):
-            # count_distinct silently drops NULLs, so a NULL key
-            # shipped both ways would undercount conflicts - fail loud
-            # instead of diverging silently.
-            F.max(F.col("key").isNull()).alias("null_key"),
+            # inclusion-exclusion depends on: count_distinct silently
+            # drops NULLs, so a NULL key shipped both ways would
+            # undercount conflicts - fail loud instead of diverging
+            # silently.
+            F.max(F.when(ship, F.col("key").isNull())).alias("null_key"),
         ]
+        rows = grouped
         if self.record_ledger:
+            # The lag of each shipped row behind the frontier, with the
+            # frontier put on every row by a window so the percentiles
+            # ride this same job (the window's single partition bounds
+            # nothing new: an exact percentile already gathers every
+            # value into one buffer). Raw unix micros throughout: the
+            # arithmetic never leaves integer space, so no timezone
+            # re-encoding can move a value. The conflict-key count is
+            # inclusion-exclusion over exact distinct counts
+            # (|keys_a ∩ keys_b| = |keys_a| + |keys_b| - |keys_a ∪ keys_b|).
+            v_us = F.unix_micros(F.col("version").cast("timestamp"))
+            rows = grouped.withColumn(
+                "__lag", F.max(v_us).over(Window.partitionBy()) - v_us)
+            lag_us = F.when(ship, F.col("__lag"))
             aggs += [
                 F.round(F.percentile(lag_us, F.lit(0.5))
                         / 1000000.0, 6).alias("p50"),
                 F.round(F.percentile(lag_us, F.lit(0.95))
                         / 1000000.0, 6).alias("p95"),
                 F.round(F.max(lag_us) / 1000000.0, 6).alias("mx"),
-                F.count_distinct(
-                    F.when(F.col("s") == "a", F.col("key"))).alias("ka"),
-                F.count_distinct(
-                    F.when(F.col("s") == "b", F.col("key"))).alias("kb"),
-                F.count_distinct(F.col("key")).alias("kab"),
+                F.count_distinct(F.when(is_a, F.col("key"))).alias("ka"),
+                F.count_distinct(F.when(is_b, F.col("key"))).alias("kb"),
+                F.count_distinct(F.when(ship, F.col("key"))).alias("kab"),
             ]
-        m = ships.agg(*aggs).collect()[0]
+        m = rows.agg(*aggs).collect()[0]
         if m["null_key"]:
             raise ValueError(
                 "sync key is NULL in a shipped row: the ledger's "
                 "conflict accounting requires non-null keys")
         n_a, n_b = int(m["n_a"]), int(m["n_b"])
         n = n_a + n_b
-        # The ship sets are materialized (persist + the metrics job
-        # above), so each apply sees the pre-apply other side - which
-        # also makes the two directions independent commits on
-        # different roots.
+        frontier = m["frontier"]
         stats_a = (n_a, m["lo_a"], m["hi_a"])
         stats_b = (n_b, m["lo_b"], m["hi_b"])
         if n_a and n_b:
@@ -427,8 +413,6 @@ class SyncEngine:
                 "watermark_s": (eff.strftime("%Y-%m-%d %H:%M:%S")
                                 if eff is not None else None),
             })
-        for df in (ship_a, ship_b):
-            df.unpersist()
         return n
 
     def ledger_df(self) -> DataFrame:

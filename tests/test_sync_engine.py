@@ -259,13 +259,14 @@ def test_ledger_records_slo_metrics(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_trickle_cycle_job_count_pinned(spark, shipped_jobs):
+def test_trickle_cycle_job_count_pinned(spark, shipped_cost):
     """With AQE on, an 18-row cycle between two single-entry
-    AcidStores is 14 Spark jobs. The deltas are read twice without a
-    cache (``read_since`` is snapshot-stable): the frontier job and
-    the ship-set builds inside the metrics job. A cache stage per
-    delta, or a merge that re-measures what the metrics job already
-    handed it, shows up here as a higher count."""
+    AcidStores is 9 Spark jobs and 10 tasks. Each delta is scanned
+    once, by the grouped pass that decides both ship sets; one metrics
+    job over its materialized rows measures everything the applies
+    need. A second scan of a delta, a merge that re-measures what the
+    metrics job already handed it, or a cache that keeps every shuffle
+    partition (one task each on every later scan) shows up here."""
     eng, root = _mk_engine(spark, functools.partial(AcidStore, n_slices=1))
     try:
         eng.full_sync()
@@ -279,10 +280,36 @@ def test_trickle_cycle_job_count_pinned(spark, shipped_jobs):
                  "version": F.lit(dt.datetime(2003, 1, day)).cast(
                      "timestamp")})
         shipped = []
-        assert shipped_jobs(
-            lambda: shipped.append(eng.incremental_cycle())) == 14
+        assert shipped_cost(
+            lambda: shipped.append(eng.incremental_cycle())) == (9, 10)
         assert shipped == [18]
         assert eng.in_sync()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_null_payload_boundary_row_converges(spark):
+    """A row holding a NULL at the watermark is in both deltas on every
+    later cycle (the boundary is inclusive). It is the same row on both
+    sides, so it must not ship: an equality match would never pair the
+    NULLs and would re-ship it both ways, counted as a conflict, on
+    every cycle of stores that are in sync."""
+    ts = lambda d: dt.datetime(2000, 1, d)  # noqa: E731
+    root = tempfile.mkdtemp(prefix="ces_nullrow_")
+    try:
+        rows = spark.createDataFrame(
+            [(1, 10.0, ts(1), "a"), (2, None, ts(3), "a"),
+             (3, 30.0, ts(2), "a")],
+            "key bigint, price double, version timestamp, side string")
+        a = AcidStore(spark, f"{root}/a", rows)
+        b = AcidStore(spark, f"{root}/b", rows)
+        eng = SyncEngine(spark, a, b, f"{root}/state", record_ledger=True)
+        eng.full_sync()          # watermark = 2000-01-03, the NULL row
+        assert eng.in_sync()
+        assert [eng.incremental_cycle() for _ in range(3)] == [0, 0, 0]
+        assert eng.in_sync()
+        assert [(r["shipped_a"], r["shipped_b"], r["conflict_keys"])
+                for r in eng.ledger] == [(0, 0, 0)] * 3
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
