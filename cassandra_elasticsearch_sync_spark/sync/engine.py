@@ -141,7 +141,12 @@ class AcidStore:
     write range-clusters the table into ``n_slices`` manifest entries
     with per-entry key stats so the merge probe prunes at the manifest
     before touching bytes. This is VERDICT r3's #1: the engine's own
-    loop on the lakehouse store it ships, 1% delta -> ~1% rewrite."""
+    loop on the lakehouse store it ships, 1% delta -> ~1% rewrite.
+    A ship set of at most ``AcidParquetTable.BROADCAST_SOURCE_ROW_CAP``
+    rows (its row count rides ``key_stats``) is broadcast into the
+    scan of the touched entries: the rewrite never shuffles the
+    target, and a cycle that only updates keys runs one broadcast
+    build and one write job per direction."""
 
     def __init__(self, spark: SparkSession, root: str,
                  init: DataFrame | None = None, n_slices: int = 16):

@@ -1011,7 +1011,7 @@ def test_probe_backfill_sized_source_avoids_broadcast(spark, root,
     src = spark.createDataFrame(
         [(1, 11.0, 2), (2, 22.0, 2), (3, 33.0, 2)],
         "key bigint, price double, version int")
-    monkeypatch.setattr(AcidParquetTable, "BROADCAST_PROBE_ROW_CAP", 0)
+    monkeypatch.setattr(AcidParquetTable, "BROADCAST_SOURCE_ROW_CAP", 0)
     with_file = t.read().withColumn("__f", F.input_file_name())
     plan = t._probe_semi_join(
         with_file, src.select("key").distinct(), src, ["key"]
@@ -1028,7 +1028,12 @@ def test_merge_with_caller_measured_source_stats(spark, root):
     pre-pass (round 12: the sync engine measures these in its cycle
     metrics job over the same materialized ship set). Same result,
     one fewer Spark job, and the stats still prune files: a merge
-    whose key range misses an entry leaves that entry untouched."""
+    whose key range misses an entry leaves that entry untouched.
+
+    With AQE off this merge is 3 jobs (the full outer join was 1: its
+    two shuffles were stages inside the write job). The 2-row source
+    is broadcast, and a broadcast build is a job of its own; so is the
+    second write that appends the insert (key 4)."""
     t = _table(spark, root, [(1, 10.0, 1), (2, 20.0, 1), (3, 30.0, 1)])
     src = spark.createDataFrame(
         [(2, 99.0, 2), (4, 40.0, 2)], "key bigint, price double, version int")
@@ -1043,12 +1048,12 @@ def test_merge_with_caller_measured_source_stats(spark, root):
         n_jobs = len(sc.statusTracker().getJobIdsForGroup("stats-merge"))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
-    # rewrite write only: the pre-pass aggregate job is gone (round
-    # 12), and on a single-entry table the semi-join file probe is
-    # skipped too (round 13: stats pruning already reduced the
-    # candidate set to <=1 entry, which a probe cannot shrink further
-    # in a way that changes the rewrite)
-    assert n_jobs == 1
+    # no pre-pass aggregate job (round 12), and on a single-entry
+    # table no semi-join file probe either (round 13: stats pruning
+    # already reduced the candidate set to <=1 entry, which a probe
+    # cannot shrink further in a way that changes the rewrite): source
+    # broadcast build, rewrite write, insert write
+    assert n_jobs == 3
     assert _rows(t.read()) == [
         (1, 10.0, 1), (2, 99.0, 2), (3, 30.0, 1), (4, 40.0, 2)
     ]
@@ -1212,11 +1217,17 @@ def test_write_path_action_count_pinned(spark, tmp_path):
     as a failing count, not as a bench drift three rounds later.
 
     Expected: init = 1 (the write job - per-entry stats ride it via
-    an Observation); merge = 4 (fused source pre-pass, file-probe
-    collect plus its broadcast build, rewrite+write job). The probe
-    is skipped only when CALLER-measured stats leave <=1 candidate
-    entry; this unvouched merge probes, so an entry it matches nothing
-    in keeps its path. The pre-diet shapes were 2 and 7+."""
+    an Observation); merge = 6 (fused source pre-pass, file-probe
+    collect plus its broadcast build, the source's broadcast build,
+    the rewrite write, the insert write). The probe is skipped only
+    when CALLER-measured stats leave <=1 candidate entry; this
+    unvouched merge probes, so an entry it matches nothing in keeps
+    its path. The full outer
+    rewrite this merge ran before was 4 jobs with AQE off (its
+    shuffles were stages inside the write job); broadcasting the
+    100-row source and appending its 50 inserts in a second write
+    makes each of those a job of its own. The pre-diet shapes were 2
+    and 7+."""
     from cassandra_elasticsearch_sync_spark.sources.acid import (
         AcidParquetTable,
     )
@@ -1238,7 +1249,7 @@ def test_write_path_action_count_pinned(spark, tmp_path):
         upd = spark.createDataFrame(
             [(i, i * 3) for i in range(50, 150)], "k long, v long")
         assert jobs("pin-init", lambda: t.init(src)) == 1
-        assert jobs("pin-merge", lambda: t.merge_into(upd, ["k"])) == 4
+        assert jobs("pin-merge", lambda: t.merge_into(upd, ["k"])) == 6
         # and the merge actually landed
         assert t.read().count() == 150
     finally:

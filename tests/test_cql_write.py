@@ -3,6 +3,7 @@ Cassandra's upsert/cell-level/LWT-guard semantics, verified."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -580,14 +581,40 @@ def test_truncate_is_one_commit_and_time_travels(spark, table):
 
 
 def test_cql_batch_job_count_pinned(spark, table, shipped_jobs):
-    """With AQE on, an 8-key UPDATE batch is 3 Spark jobs. The fold
+    """With AQE on, a batch that only updates is 2 Spark jobs. The fold
     leaves one row per key, so the batch hands the merge its exact
     (rows, min key, max key): no source pre-pass, no probe on the one
-    candidate entry, and no cache of a source only the rewrite reads."""
-    stmts = [f"UPDATE kv SET price = {k}.5, version = 300 WHERE key = {k}"
-             for k in range(1, 9)]
-    assert shipped_jobs(lambda: apply_cql_writes(table, KEY, stmts)) == 3
+    candidate entry, and no cache of a source the merge reads at most
+    twice. The batch rows are broadcast into the target scan (the
+    build job) and the entry is rewritten (the write job). An 8-key
+    batch that also upserts 5 absent keys is 3 jobs, as the full outer
+    join this replaced was (two shuffle-map stages and the write):
+    those rows match nothing, so a third job appends them, reading the
+    batch through a filter that holds the matched keys as literals.
+
+    A DELETE of an absent key is such a row too, which the merge then
+    drops: the append still runs, but the 0-row part file it writes
+    is removed, so the entry keeps only files with rows."""
+    import pyarrow.parquet as pq
+
+    def batch(keys, price):
+        return [f"UPDATE kv SET price = {k}{price}, version = 300 "
+                f"WHERE key = {k}" for k in keys]
+
+    assert shipped_jobs(
+        lambda: apply_cql_writes(table, KEY, batch(range(1, 4), ".25"))) == 2
+    assert _rows(table) == [(k, k + 0.25, 300) for k in range(1, 4)]
+    assert shipped_jobs(
+        lambda: apply_cql_writes(table, KEY, batch(range(1, 9), ".5"))) == 3
     assert _rows(table) == [(k, k + 0.5, 300) for k in range(1, 9)]
+    assert shipped_jobs(lambda: apply_cql_writes(
+        table, KEY, batch([1], ".75") + ["DELETE FROM kv WHERE key = 99"])) == 3
+    assert _rows(table) == [(1, 1.75, 300)] + [
+        (k, k + 0.5, 300) for k in range(2, 9)]
+    (entry,) = table._manifest(table.current_version())["files"]
+    parts = [f for f in os.listdir(entry) if f.endswith(".parquet")]
+    assert parts and all(
+        pq.read_metadata(os.path.join(entry, f)).num_rows for f in parts)
 
 
 def test_cql_batch_stats_prune_but_keep_every_match(spark, tmp_path):

@@ -261,12 +261,15 @@ def test_ledger_records_slo_metrics(spark):
 
 def test_trickle_cycle_job_count_pinned(spark, shipped_cost):
     """With AQE on, an 18-row cycle between two single-entry
-    AcidStores is 9 Spark jobs and 10 tasks. Each delta is scanned
+    AcidStores is 7 Spark jobs and 8 tasks. Each delta is scanned
     once, by the grouped pass that decides both ship sets; one metrics
     job over its materialized rows measures everything the applies
-    need. A second scan of a delta, a merge that re-measures what the
-    metrics job already handed it, or a cache that keeps every shuffle
-    partition (one task each on every later scan) shows up here."""
+    need. Each apply broadcasts its ship set into the target scan (one
+    build job, one write job) instead of shuffling the whole entry
+    against it. A second scan of a delta, a merge that re-measures
+    what the metrics job already handed it, a shuffle of the target,
+    or a cache that keeps every shuffle partition (one task each on
+    every later scan) shows up here."""
     eng, root = _mk_engine(spark, functools.partial(AcidStore, n_slices=1))
     try:
         eng.full_sync()
@@ -281,7 +284,7 @@ def test_trickle_cycle_job_count_pinned(spark, shipped_cost):
                      "timestamp")})
         shipped = []
         assert shipped_cost(
-            lambda: shipped.append(eng.incremental_cycle())) == (9, 10)
+            lambda: shipped.append(eng.incremental_cycle())) == (7, 8)
         assert shipped == [18]
         assert eng.in_sync()
     finally:
