@@ -181,24 +181,17 @@ class AcidParquetTable:
     # -- write paths -------------------------------------------------------
 
     def _write_one_entry(self, df: DataFrame,
-                         stats_schema: StructType | None = None,
-                         into: str | None = None,
-                         ) -> tuple[list[str], dict]:
-        """Write ``df`` as immutable data files, return (paths, stats) -
-        or ``([], {})`` if the result was empty (detected from the
+                         into: str | None = None) -> list[str]:
+        """Write ``df`` as immutable data files, return the entry's
+        path - or ``[]`` if the result was empty (detected from the
         written output, NOT with a pre-flight isEmpty(): an
         isEmpty-then-write would execute the plan twice, and for a
         MERGE the plan is the full-outer join that dominates the
         commit). Each Spark task writes its own part file; we keep the
         directory as the manifest unit to stay file-count-frugal at
         small scale (a real format tracks part files individually -
-        same protocol).
-
-        With ``stats_schema``, the entry's min/max column statistics
-        ride the write job itself via an Observation - the metrics
-        accumulate task-side during the one pass that writes the bytes,
-        so the commit never re-reads what it just wrote (the read-back
-        stats job the round-7 verdict counted is gone).
+        same protocol). The entry's stats are folded from its footers
+        at commit (``_collect_stats``), not here.
 
         With ``into`` (an uncommitted entry this transaction wrote),
         the part files are appended to that entry instead."""
@@ -206,18 +199,6 @@ class AcidParquetTable:
 
         d = into or os.path.join(self.root, _DATA, uuid.uuid4().hex)
         df = self._enforce_constraints(self._apply_generated(df))
-        obs = None
-        cols: list[str] = []
-        if stats_schema is not None:
-            cols = self._stats_cols(stats_schema)
-        if cols:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            df = df.observe(
-                obs,
-                *[F.min(F.col(c)).alias(f"min__{c}") for c in cols],
-                *[F.max(F.col(c)).alias(f"max__{c}") for c in cols])
         before = set(os.listdir(d)) if into else set()
         df.write.mode("append" if into else "errorifexists").parquet(d)
         if into:
@@ -233,51 +214,48 @@ class AcidParquetTable:
                             os.remove(q)
         if not any(f.endswith(".parquet") for f in os.listdir(d)):
             shutil.rmtree(d, ignore_errors=True)
-            return [], {}
-        if obs is None:
-            return [d], {}
-        m = obs.get
-        return [d], {d: {
-            c: [self._enc_stat(m[f"min__{c}"]), self._enc_stat(m[f"max__{c}"])]
-            for c in cols
-        }}
+            return []
+        return [d]
 
     # -- column statistics (the file-skipping index) ------------------------
 
+    # Decimals carry no stats: their plain-string encoding compares
+    # lexicographically ("20.00" < "9.00"), which would prune wrongly.
     _STATS_TYPES = ("integer", "long", "short", "byte", "float", "double",
                     "string", "date", "timestamp", "timestamp_ntz")
 
     @classmethod
     def _stats_cols(cls, schema: StructType) -> list[str]:
         return [f.name for f in schema.fields
-                if f.dataType.typeName() in cls._STATS_TYPES
-                or f.dataType.typeName().startswith("decimal")]
+                if f.dataType.typeName() in cls._STATS_TYPES]
 
     @staticmethod
     def _enc_stat(v):
         if v is None or isinstance(v, (int, float)):
             return v
-        return str(v)  # Decimal / datetime / date / str
+        return str(v)  # datetime / date / str
 
     def _collect_stats(self, files: list[str], schema: StructType) -> dict:
         """Per-manifest-entry min/max for every stats-eligible column,
         written into the manifest exactly like a format's file-level
-        column stats. Values are JSON-encoded: numerics native,
-        temporal/decimal as ISO/plain strings (ISO compares
-        lexicographically, so pruning needs no type reconstruction).
+        column stats - the ONLY producer of entry stats: every commit
+        that writes entries (``init``, ``init_clustered``,
+        ``optimize``, ``_commit_rewrite``) calls it once on them.
+        Values are JSON-encoded: numerics native, temporal as ISO
+        strings (ISO compares lexicographically, so pruning needs no
+        type reconstruction).
 
-        Fast path: the parquet FOOTERS of the just-written files
-        already carry exact per-row-group min/max for every primitive
-        column, so the stats are folded driver-side from footer
-        metadata - zero Spark jobs, zero data-byte re-reads. A commit
-        that previously re-read everything it wrote to index it (at
-        100 TB: 2x the write I/O) now reads a few KB of footers.
+        The parquet FOOTERS of the just-written files already carry
+        exact per-row-group min/max for every primitive column, so the
+        stats are folded driver-side from footer metadata - zero Spark
+        jobs, zero data-byte re-reads (a few KB of footers per entry).
         tests/test_acid_footer_stats.py proves value-parity against
-        the aggregate job on every stats-eligible type. Any footer
-        surprise (absent stats with live values - e.g. NaN columns or
-        oversized truncated values - or an unexpected value type)
-        falls back to the one-job Spark aggregate, which stays the
-        semantic definition."""
+        the aggregate job on every stats-eligible type and every
+        writer. A column the footers cannot prove (NaN, oversized
+        strings, INT96 timestamps) degrades to ``[None, None]`` (see
+        ``_footer_stats``); only an unreadable footer falls back to
+        the one-job Spark aggregate, which stays the semantic
+        definition."""
         stats: dict[str, dict] = {}
         cols = self._stats_cols(schema)
         if not cols or not files:
@@ -305,13 +283,6 @@ class AcidParquetTable:
             }
         return stats
 
-    # Python-side stat values a parquet footer can yield that encode
-    # EXACTLY like the Spark-collect values the aggregate job returns
-    # (int/float native; str by UTF-8 order == code-point order;
-    # date/datetime/Decimal via the same str()). Anything else -> the
-    # Spark path decides.
-    _FOOTER_OK_TYPES = None  # built lazily (needs datetime/decimal)
-
     # String stat bounds at or past this many UTF-8 bytes are not
     # trusted as exact unless the footer carries exactness flags:
     # parquet writers truncate or drop oversized binary min/max, and a
@@ -325,7 +296,7 @@ class AcidParquetTable:
         Per-column contract: a column whose footers PROVE the same
         min/max the aggregate job would compute gets real bounds; any
         column the footers cannot prove (stats absent with live
-        values, a value pyarrow cannot decode - e.g. decimals, INT96
+        values, a value pyarrow cannot decode - e.g. INT96
         timestamps - or a NaN bound) degrades to ``[None, None]``,
         which every pruning consumer treats as "keep the file" -
         always sound, never a wrong skip. Only a file-level failure
@@ -334,15 +305,16 @@ class AcidParquetTable:
         written untruncated or not at all (oversized values drop the
         stats -> has_min_max=False -> [None, None])."""
         import datetime as _dt
-        import decimal as _decimal
 
         try:
             import pyarrow.parquet as _pq
         except Exception:  # pragma: no cover - pyarrow is a hard dep
             return None
 
-        ok_types = (int, float, str, _dt.date, _dt.datetime,
-                    _decimal.Decimal)
+        # footer values that encode EXACTLY like the Spark-collect
+        # values the aggregate job returns (str by UTF-8 order ==
+        # code-point order; date/datetime via the same str())
+        ok_types = (int, float, str, _dt.date, _dt.datetime)
 
         def _to_collect_value(v):
             """Footer value -> what Row[field] from the agg job holds."""
@@ -466,20 +438,22 @@ class AcidParquetTable:
             return False
         return True
 
+    @classmethod
+    def _entries_in_range(cls, manifest: dict, col: str, lo, hi) -> list[str]:
+        """The one stats-pruning loop: ``manifest``'s entries whose
+        [min, max] for ``col`` may intersect [lo, hi] (inclusive; None
+        = unbounded). Entries without stats are kept - pruning is
+        always sound, never required."""
+        stats = manifest.get("stats", {})
+        return [d for d in manifest["files"] if cls._range_may_overlap(
+            stats.get(d, {}).get(col, (None, None)), lo, hi)]
+
     def candidate_files(self, col: str, lo=None, hi=None,
                         version: int | None = None) -> list[str]:
         """Manifest entries whose [min, max] for ``col`` may intersect
-        [lo, hi] (inclusive; None = unbounded). Entries without stats
-        are kept - pruning is always sound, never required."""
+        [lo, hi] (see ``_entries_in_range``)."""
         v = self.current_version() if version is None else version
-        m = self._manifest(v)
-        stats = m.get("stats", {})
-        out = []
-        for d in m["files"]:
-            s = stats.get(d, {}).get(col)
-            if s is None or self._range_may_overlap(s, lo, hi):
-                out.append(d)
-        return out
+        return self._entries_in_range(self._manifest(v), col, lo, hi)
 
     def read_where(self, col: str, lo=None, hi=None,
                    version: int | None = None) -> DataFrame:
@@ -572,8 +546,9 @@ class AcidParquetTable:
     def init(self, df: DataFrame) -> int:
         """Create the first snapshot (or append a full overwrite)."""
         df = self._apply_generated(df)  # schema must include the column
-        files, stats = self._write_one_entry(df, stats_schema=df.schema)
-        return self._commit(self.current_version(), files, df.schema, stats)
+        files = self._write_one_entry(df)
+        return self._commit(self.current_version(), files, df.schema,
+                            self._collect_stats(files, df.schema))
 
     @staticmethod
     def _next_seq(manifest: dict, base: int) -> int:
@@ -605,21 +580,22 @@ class AcidParquetTable:
         return self._commit(base, **kw)
 
     def _commit_rewrite(self, manifest: dict, base: int, affected: list[str],
-                        fresh: list[str], fresh_stats: dict,
-                        **commit_kw) -> int:
+                        fresh: list[str], **commit_kw) -> int:
         """The one copy-on-write commit tail: entries outside
         ``affected`` carry over with their stats and commit generation
         verbatim (their bytes did not change, and pending MoR deletes
         must still apply to them); the ``fresh`` entries that replace
-        ``affected`` take their stats from the write and are stamped
-        AFTER every existing generation and pending delete
+        ``affected`` get their stats folded from their footers here
+        (``_collect_stats`` over ``manifest["schema"]``) and are
+        stamped AFTER every existing generation and pending delete
         (``_next_seq`` - computed from the base manifest, so it is
         right both on main and on a branch whose version counter
         restarted at 1)."""
         untouched = [d for d in manifest["files"] if d not in affected]
         base_stats = manifest.get("stats", {})
         stats = {d: base_stats[d] for d in untouched if d in base_stats}
-        stats.update(fresh_stats)
+        stats.update(self._collect_stats(
+            fresh, StructType.fromJson(manifest["schema"])))
         base_seq = manifest.get("seq", {})
         seq = {d: int(base_seq.get(d, 0)) for d in untouched}
         next_seq = self._next_seq(manifest, base)
@@ -820,21 +796,13 @@ class AcidParquetTable:
                         key_bounds: tuple | None) -> list[str]:
         """STATS pruning for a merge: the manifest entries whose key
         range may intersect the source's [lo, hi] (all entries when
-        the bounds are unknown or the merge is multi-key)."""
-        entries = list(manifest["files"])
+        the bounds are unknown or the merge is multi-key; none when
+        the source holds no non-NULL key, which matches no row)."""
         if key_bounds is None or len(keys) != 1:
-            return entries
-        lo, hi = key_bounds
-        stats = manifest.get("stats", {})
-        return [
-            d for d in entries
-            if stats.get(d, {}).get(keys[0]) is None
-            or self._range_may_overlap(
-                stats[d][keys[0]],
-                lo if isinstance(lo, (int, float)) else str(lo),
-                hi if isinstance(hi, (int, float)) else str(hi),
-            )
-        ]
+            return list(manifest["files"])
+        if key_bounds[0] is None:
+            return []
+        return self._entries_in_range(manifest, keys[0], *key_bounds)
 
     def _merge_against(self, manifest: dict, source: DataFrame,
                        keys: list[str],
@@ -1077,7 +1045,7 @@ class AcidParquetTable:
                 obs = Observation()
                 key_set = F.collect_set(F.when(
                     t_in & s_in, self._key_value(source, keys, "src.")))
-                fresh, fresh_stats = rewrite(
+                fresh = rewrite(
                     tgt.join(F.broadcast(src), cond, "left_outer")
                     .observe(obs, key_set.alias("matched")))
                 matched = self._observed(obs, "matched")
@@ -1095,15 +1063,15 @@ class AcidParquetTable:
                         inserts = source.filter(~F.coalesce(
                             self._key_value(source, keys).isin(matched),
                             F.lit(False)))
-                    fresh, fresh_stats = rewrite(
+                    fresh = rewrite(
                         tgt.limit(0).alias("tgt").join(
                             inserts.withColumn("__in_src", F.lit(True))
                             .alias("src"), cond, "right_outer"),
                         into=fresh)
             if not small:
-                fresh, fresh_stats = rewrite(tgt.join(src, cond, "full_outer"))
+                fresh = rewrite(tgt.join(src, cond, "full_outer"))
             return self._commit_rewrite(
-                manifest, commit_base, affected, fresh, fresh_stats,
+                manifest, commit_base, affected, fresh,
                 manifests_dir=commit_dir, txns=txns)
         finally:
             if rereads:
@@ -1143,7 +1111,7 @@ class AcidParquetTable:
             affected = self._entries_with(
                 schema, all_files, lambda wf: wf.filter(condition))
         n_matched = 0
-        fresh, fresh_stats = [], {}
+        fresh = []
         if affected:
             from pyspark.sql import Observation
 
@@ -1160,13 +1128,13 @@ class AcidParquetTable:
                 obs = Observation()
                 src = live.observe(obs, F.count(F.when(matched, 1)).alias("n"))
             rewritten = transform(src, condition)
-            fresh, fresh_stats = self._write_rewrite(
+            fresh = self._write_rewrite(
                 rewritten.select(*schema.names), manifest, affected)
             n_matched = self._observed(obs, "n") if obs else None
             if n_matched is None:
                 n_matched = live.filter(matched).count()
         return self._commit_rewrite(
-            manifest, base, affected, fresh, fresh_stats,
+            manifest, base, affected, fresh,
             operation=operation, operation_metrics={metric: int(n_matched)})
 
     @staticmethod
@@ -1232,13 +1200,9 @@ class AcidParquetTable:
             .filter(F.col("__proof").isNull())
             .select(*schema.names)
         )
-        fresh, fresh_stats = self._write_rewrite(
-            kept, manifest, affected)
-        inc_files, inc_stats = self._write_one_entry(
-            incoming, stats_schema=schema)
+        fresh = self._write_rewrite(kept, manifest, affected)
         return self._commit_rewrite(manifest, base, affected,
-                                    fresh + inc_files,
-                                    {**fresh_stats, **inc_stats})
+                                    fresh + self._write_one_entry(incoming))
 
     def delete_where(self, condition: Column) -> int:
         """``DELETE FROM t WHERE condition`` as a copy-on-write commit.
@@ -1309,21 +1273,15 @@ class AcidParquetTable:
         keys = deletes[0]["keys"]
         dk = self.spark.read.parquet(*[e["path"] for e in deletes])
         kb = dk.agg(F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi")).collect()[0]
-        lo = kb["lo"] if isinstance(kb["lo"], (int, float)) else str(kb["lo"])
-        hi = kb["hi"] if isinstance(kb["hi"], (int, float)) else str(kb["hi"])
-        stats_m = manifest.get("stats", {})
+        cand = (self._entries_in_range(manifest, keys[0], kb["lo"], kb["hi"])
+                if len(keys) == 1 else manifest["files"])
         seqs = manifest.get("seq", {})
         max_del_seq = max(e["seq"] for e in deletes)
-        affected = []
-        for d in manifest["files"]:
-            s = stats_m.get(d, {}).get(keys[0]) if len(keys) == 1 else None
-            subject = int(seqs.get(d, 0)) < max_del_seq
-            if subject and (s is None or self._range_may_overlap(s, lo, hi)):
-                affected.append(d)
-        fresh, fresh_stats = self._write_rewrite(
+        affected = [d for d in cand if int(seqs.get(d, 0)) < max_del_seq]
+        fresh = self._write_rewrite(
             self._read_entries(manifest, affected), manifest, affected)
         return self._commit_rewrite(manifest, base, affected, fresh,
-                                    fresh_stats, deletes=[])
+                                    deletes=[])
 
     def _entry_bytes(self, d: str) -> int:
         total = 0
@@ -1347,7 +1305,6 @@ class AcidParquetTable:
 
         base = self.current_version()
         manifest = self._manifest(base)
-        schema = StructType.fromJson(manifest["schema"])
         sizes = {d: self._entry_bytes(d) for d in manifest["files"]}
         small = [d for d in manifest["files"] if sizes[d] < target_bytes]
         if len(small) < 2:
@@ -1357,11 +1314,9 @@ class AcidParquetTable:
         cb = manifest.get("cluster_by")
         if cb and n_out > 1:
             fresh = self._write_clustered(rewritten, cb, n_slices=n_out)
-            fresh_stats = self._collect_stats(fresh, schema)
         else:
-            fresh, fresh_stats = self._write_one_entry(
-                rewritten.coalesce(n_out), stats_schema=schema)
-        return self._commit_rewrite(manifest, base, small, fresh, fresh_stats)
+            fresh = self._write_one_entry(rewritten.coalesce(n_out))
+        return self._commit_rewrite(manifest, base, small, fresh)
 
     # -- branches: write-audit-publish -------------------------------------
 
@@ -1850,13 +1805,14 @@ class AcidParquetTable:
 
     def _write_rewrite(self, df: DataFrame, manifest: dict,
                        affected: list[str],
-                       into: list[str] | None = None,
-                       ) -> tuple[list[str], dict]:
-        """Write a maintenance rewrite's output; returns (paths,
-        stats). On a table with a declared clustering, the rewrite of
-        N affected entries comes back as N range-clustered entries
-        with fresh stats - NOT one merged blob. Collapsing the layout
-        on every merge/compact would destroy the manifest's pruning
+                       into: list[str] | None = None) -> list[str]:
+        """Write a maintenance rewrite's output; returns the new
+        entries' paths (their stats are folded from the footers at
+        commit, ``_commit_rewrite``). A rewrite of one entry, or on a
+        table without a clustering, is one entry. On a table with a
+        declared clustering, the rewrite of N affected entries comes
+        back as N range-clustered entries - NOT one merged blob.
+        Collapsing the layout on every merge/compact would destroy the manifest's pruning
         granularity (observed in the scale smoke: a 16-slice table
         degraded to 1 entry after one merge+compact cycle); preserving
         it keeps every later merge probe and read_where O(affected
@@ -1871,28 +1827,20 @@ class AcidParquetTable:
         so the join runs once, and the layout is MORE stable (slices
         keep their historical boundaries instead of drifting with
         each resample). Entries without usable numeric/string key
-        bounds fall back to the sampling writer. Single-entry
-        rewrites carry their stats on the write job itself
-        (Observation); stats for the sliced path fold from parquet
-        footers driver-side (_collect_stats fast path).
+        bounds fall back to the sampling writer.
 
         ``into`` (the entries an earlier call in this transaction
         returned) appends ``df`` to them, routed by the same slice
         bounds: the entry count and slicing are those of ONE write of
-        both inputs, and the stats re-fold from the footers."""
-        schema = StructType.fromJson(manifest["schema"])
-        n_affected = len(affected)
+        both inputs."""
         cb = manifest.get("cluster_by")
-        if cb and n_affected > 1:
-            files = self._write_clustered(
-                df, cb, n_affected,
+        if cb and len(affected) > 1:
+            schema = StructType.fromJson(manifest["schema"])
+            return self._write_clustered(
+                df, cb, len(affected),
                 uppers=self._slice_uppers(manifest, affected, cb[0], schema),
                 into=os.path.dirname(into[0]) if into else None)
-            return files, self._collect_stats(files, schema)
-        if into:
-            files, _ = self._write_one_entry(df, into=into[0])
-            return files, self._collect_stats(files, schema)
-        return self._write_one_entry(df, stats_schema=schema)
+        return self._write_one_entry(df, into=into[0] if into else None)
 
     @staticmethod
     def _slice_uppers(manifest: dict, affected: list[str], key: str,

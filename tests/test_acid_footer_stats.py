@@ -9,10 +9,9 @@ parquet FOOTERS. These tests pin the contract:
   timestamps tz + ntz), including nulls and all-null columns;
 - per-column conservative degradation to [None, None] (which every
   pruning consumer treats as "keep the file") for anything footers
-  cannot prove - NaN doubles and pyarrow-undecodable decimals are the
-  canonical cases;
-- the clustered-write path actually commits footer stats that match
-  the job's;
+  cannot prove - NaN doubles are the canonical case;
+- every writer's commit records footer stats that match the job's;
+- a decimal column carries no stats, so it is never pruned wrongly;
 - the NaN pruning guard: a NaN max bound must never skip a file.
 """
 
@@ -23,6 +22,7 @@ import decimal
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
@@ -142,23 +142,115 @@ def test_footer_stats_multi_file_entry_and_missing_column(spark):
         assert footer == _spark_stats(t, [d], schema)
 
 
-def test_clustered_write_stats_equal_job_stats(spark, tmp_path):
-    """init_clustered's committed stats (footer path) must equal what
-    the aggregate job computes over the same slices."""
-    df = spark.range(0, 1000).select(
+def _parity_df(spark, lo, hi):
+    """One column of each engine stats type: long, double, string,
+    date, timestamp and timestamp_ntz."""
+    return spark.range(lo, hi).select(
         F.col("id").alias("key"),
         (F.col("id") * 1.5).alias("price"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("version"),
-        F.lit("a").alias("side"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("version"),
+        F.concat(F.lit("s"), F.lpad(F.col("id").cast("string"), 5, "0"))
+        .alias("side"),
+        F.date_add(F.lit("2020-01-01").cast("date"), F.col("id").cast("int"))
+        .alias("day"),
+        F.timestamp_seconds(F.col("id") * 60).cast("timestamp_ntz")
+        .alias("wall"),
     )
+
+
+def _merge(spark, t, cap, monkeypatch):
+    if cap is not None:
+        monkeypatch.setattr(AcidParquetTable, "BROADCAST_SOURCE_ROW_CAP", cap)
+    # 5 matched keys and 5 inserts
+    t.merge_into(_parity_df(spark, 995, 1005)
+                 .withColumn("price", F.col("price") + 1), ["key"])
+
+
+# writer -> (clustered starting table?, the commit under test or None)
+_WRITERS = {
+    "init": (False, None),
+    "init_clustered": (True, None),
+    "update_where": (False, lambda spark, t, mp: t.update_where(
+        F.col("key") < 10, {"price": F.col("price") * 2})),
+    "merge_broadcast_insert": (
+        False, lambda spark, t, mp: _merge(spark, t, None, mp)),
+    "merge_full_outer": (False, lambda spark, t, mp: _merge(spark, t, 0, mp)),
+    "replace_where": (False, lambda spark, t, mp: t.replace_where(
+        F.col("key") < 100, _parity_df(spark, 0, 100)
+        .withColumn("side", F.lit("replaced")))),
+    # every entry is small and they add up to several targets
+    "compact_small_clustered": (True, lambda spark, t, mp: t.compact_small(
+        target_bytes=max(t._entry_bytes(d) for d in
+                         t._manifest(t.current_version())["files"]) + 1)),
+    "compact_small_one_entry": (True, lambda spark, t, mp: t.compact_small(
+        target_bytes=1 << 30)),
+    "optimize_zorder": (True, lambda spark, t, mp: t.optimize(
+        ["key", "price"], n_slices=4, zorder=True)),
+}
+
+
+@pytest.mark.parametrize("writer", list(_WRITERS))
+def test_clustered_write_stats_equal_job_stats(spark, tmp_path, monkeypatch,
+                                               writer):
+    """Every writer's committed stats (folded from the parquet footers
+    at commit) equal what the aggregate job computes over the same
+    entries, on every engine stats type."""
+    clustered, commit = _WRITERS[writer]
     t = AcidParquetTable(spark, str(tmp_path / "tbl"))
-    t.init_clustered(df, ["key"], n_slices=4)
+    df = _parity_df(spark, 0, 1000)
+    if clustered:
+        t.init_clustered(df, ["key"], n_slices=4)
+    else:
+        t.init(df)
+    if commit is not None:
+        v = t.current_version()
+        commit(spark, t, monkeypatch)
+        assert t.current_version() == v + 1
     m = t._manifest(t.current_version())
     from pyspark.sql.types import StructType
     schema = StructType.fromJson(m["schema"])
+    assert set(m["stats"]) == set(m["files"])
     assert m["stats"] == _spark_stats(t, m["files"], schema)
+    for c in ("key", "price", "version", "side", "day", "wall"):
+        assert all(None not in s[c] for s in m["stats"].values()), c
     # and pruning over the committed stats behaves
-    assert len(t.candidate_files("key", 0, 10)) < len(m["files"])
+    if len(m["files"]) > 1:
+        assert len(t.candidate_files("key", 0, 10)) < len(m["files"])
+
+
+# -- decimals carry no stats ----------------------------------------------
+
+def test_decimal_read_where_is_not_pruned_wrongly(spark, tmp_path):
+    """Decimal stats recorded as strings compared lexicographically:
+    "20.00" < "9.00" pruned the only entry for lo=9.00. A decimal
+    column carries no stats, so it is never pruned."""
+    t = AcidParquetTable(spark, str(tmp_path / "tbl"))
+    t.init(spark.createDataFrame(
+        [(1, decimal.Decimal("10.50")), (2, decimal.Decimal("20.00"))],
+        "k long, d decimal(10,2)"))
+    rows = t.read_where("d", lo=decimal.Decimal("9.00")).collect()
+    assert sorted(r["k"] for r in rows) == [1, 2]
+    m = t._manifest(t.current_version())
+    assert all("d" not in s for s in m["stats"].values())
+
+
+@pytest.mark.parametrize("layout", ["init", "init_clustered"])
+def test_decimal_key_merge_matches_existing_key(spark, tmp_path, layout):
+    """A merge of key 10.50 into 9.00, 10.50 and 20.00 updates the
+    existing row. With string-compared decimal stats ("10.50" <
+    "9.00") every entry was pruned and the key was inserted twice."""
+    schema = "d decimal(20,2), v long"
+    t = AcidParquetTable(spark, str(tmp_path / "tbl"))
+    df = spark.createDataFrame(
+        [(decimal.Decimal(x), 0) for x in ("9.00", "10.50", "20.00")], schema)
+    if layout == "init":
+        t.init(df)
+    else:
+        t.init_clustered(df, ["d"], n_slices=2)
+    t.merge_into(spark.createDataFrame(
+        [(decimal.Decimal("10.50"), 1)], schema), ["d"])
+    rows = sorted((str(r["d"]), r["v"]) for r in t.read().collect())
+    assert rows == [("10.50", 1), ("20.00", 0), ("9.00", 0)]
 
 
 def test_footer_stats_distrust_long_string_bounds(spark):

@@ -115,7 +115,7 @@ def test_commit_conflict_detected(spark, root):
     t1.merge_into(src1, ["key"])
     # Writer 2 simulates having planned against the stale base version
     # by committing directly at that base.
-    files = t2._write_one_entry(src2)[0]
+    files = t2._write_one_entry(src2)
     with pytest.raises(CommitConflict):
         t2._commit(base, files, src2.schema)
     # Table still shows writer 1's result; retry on fresh snapshot works.
@@ -136,7 +136,7 @@ def test_crash_before_manifest_create_is_invisible(spark, root):
     orphan_src = spark.createDataFrame(
         [(9, 99.0, 9)], "key bigint, price double, version int"
     )
-    (orphan_dir,) = t._write_one_entry(orphan_src)[0]
+    (orphan_dir,) = t._write_one_entry(orphan_src)
     assert t.current_version() == v
     assert _rows(t.read()) == [(1, 10.0, 1)]
     # Later commits are unaffected and claim the next version.

@@ -29,7 +29,9 @@ def main() -> None:
     sf_dir = sys.argv[1]
     keys = sys.argv[2:]
     spark = (SparkSession.builder.master("local[8]")
-             .appName("parity-subset").getOrCreate())
+             .appName("parity-subset")
+             .config("spark.ui.showConsoleProgress", "false")
+             .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connection(sf_dir)
     qs, osql = queries(), oracle_sql()
