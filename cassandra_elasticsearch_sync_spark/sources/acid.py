@@ -63,7 +63,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import single_split, tiny_df
 
 _DATA = "data"
 _DELETES = "deletes"
@@ -694,24 +694,40 @@ class AcidParquetTable:
         absent from the dict keeps the default whole-row behavior
         (take the src value).
 
-        Plan: the affected entries are rewritten in one of two ways,
-        with the same row expressions and one commit either way.
-        When the source row count is known (``source_stats`` or the
-        merge's own pre-pass) and at most ``BROADCAST_SOURCE_ROW_CAP``
-        - the one cap, which also picks the broadcast file probe -
-        the source is broadcast into ``tgt LEFT OUTER JOIN src``, so
-        the target is scanned in place and never shuffled. The write
-        observes the set of matched source keys; the source rows
-        outside it (a filter holding those keys as literals) are
-        appended, in a second write, to the entries the rewrite just
-        wrote, routed by the same slice bounds.
-        Otherwise (count unknown or above the cap, no affected entry,
-        a clustered rewrite without usable slice bounds, or no
-        observation produced) the rewrite is a ``FULL OUTER JOIN``.
-        The insert write re-reads the source; the merge allows that
-        because the source is either persisted for the merge's own
-        passes or vouched for by the caller's ``source_stats``, which
-        promise a materialized source.
+        Plan: the affected entries are rewritten in one of three ways,
+        with the same row expressions and one commit each way.
+
+        1. Single partition. When the affected entries (with their
+           merge-on-read deletes applied) and the source each already
+           read as ONE split, and their size estimates sum to at most
+           the session's ``spark.sql.maxSinglePartitionBytes`` (128 MB
+           by default, the bound Spark's planner puts on a
+           single-partition input), both sides are coalesced to the
+           one partition they read anyway and joined ``FULL OUTER``:
+           no exchange, no broadcast, and the inserts come out of the
+           same write (one job). Spark's file planning makes a scan
+           one split only when it is small (``localdata.single_split``);
+           a source without a size estimate (a Python-RDD relation)
+           never counts.
+        2. Broadcast. Otherwise, when the source row count is known
+           (``source_stats`` or the merge's own pre-pass) and at most
+           ``BROADCAST_SOURCE_ROW_CAP`` - the one cap, which also
+           picks the broadcast file probe - the source is broadcast
+           into ``tgt LEFT OUTER JOIN src``, so the target is scanned
+           in place and never shuffled. The write observes the set of
+           matched source keys; the source rows outside it (a filter
+           holding those keys as literals) are appended, in a second
+           write, to the entries the rewrite just wrote, routed by the
+           same slice bounds.
+        3. Shuffled ``FULL OUTER JOIN`` in every other case (count
+           unknown or above the cap, no affected entry, a clustered
+           rewrite without usable slice bounds, or no observation
+           produced).
+
+        The broadcast plan's insert write re-reads the source; the
+        merge allows that because the source is either persisted for
+        the merge's own passes or vouched for by the caller's
+        ``source_stats``, which promise a materialized source.
         """
         base = self.current_version()
         manifest = self._manifest(base)
@@ -768,7 +784,10 @@ class AcidParquetTable:
     # 2.7 at 100,000 and 4.2 vs 2.9 at 1,000,000. The broadcast
     # plan's JVM peak RSS was about half the full outer join's (1.0
     # vs 1.9 GiB at 500 and 1,000 rows). A ship set or a CQL batch
-    # stays below the cap; a backfill takes the shuffle plans.
+    # stays below the cap; a backfill takes the shuffle plans. The
+    # cap binds only where the single-partition plan does not: a
+    # merge whose inputs each read one split takes that plan at any
+    # source row count.
     BROADCAST_SOURCE_ROW_CAP = 500
 
     def _probe_semi_join(self, with_file: DataFrame, skeys: DataFrame,
@@ -957,9 +976,15 @@ class AcidParquetTable:
             # "no target row" must not be read off the target KEY, which
             # a NULL-key target row also has NULL (its payload would be
             # taken from the absent source row, i.e. wiped).
-            tgt = (self._read_entries(manifest, affected)
-                   .withColumn("__in_tgt", F.lit(True)).alias("tgt"))
-            src = source.withColumn("__in_src", F.lit(True)).alias("src")
+            tgt_rows, src_rows = self._read_entries(manifest, affected), source
+            # The single-partition plan (merge_into's docstring): with
+            # both sides in the one split they already read, the full
+            # outer join needs no exchange and no broadcast.
+            one_part = bool(affected) and single_split(tgt_rows, src_rows)
+            if one_part:
+                tgt_rows, src_rows = tgt_rows.coalesce(1), src_rows.coalesce(1)
+            tgt = tgt_rows.withColumn("__in_tgt", F.lit(True)).alias("tgt")
+            src = src_rows.withColumn("__in_src", F.lit(True)).alias("src")
             t_in = F.col("tgt.__in_tgt").isNotNull()
             s_in = F.col("src.__in_src").isNotNull()
             # Explicit join condition (a USING-style name list would
@@ -1022,20 +1047,21 @@ class AcidParquetTable:
                 return self._write_rewrite(joined.filter(keep).select(*cols),
                                            manifest, affected, into=into)
 
-            # The plan choice of merge_into's docstring. A full outer
-            # join repartitions the whole affected entry to change a few
-            # rows; the broadcast LEFT OUTER join scans it in place but
-            # cannot see the source rows that match nothing, so the
-            # write observes the matched source keys (a set: immune to
-            # a writer that evaluates its input twice) and a second
-            # write appends the rest - the same keep/cols over an empty
-            # target side - to the entries just written. The sampling
-            # clustered writer has no slice bounds to route those by.
+            # The plan choice of merge_into's docstring. Over more
+            # than one split a full outer join repartitions the
+            # whole affected entry to change a few rows; the broadcast
+            # LEFT OUTER join scans it in place but cannot see the
+            # source rows that match nothing, so the write observes
+            # the matched source keys (a set: immune to a writer that
+            # evaluates its input twice) and a second write appends
+            # the rest - the same keep/cols over an empty target side -
+            # to the entries just written. The sampling clustered
+            # writer has no slice bounds to route those by.
             # Every matched key comes back to the driver and, when a
             # row is left to insert, into the plan as a literal: that
             # cost is what bounds the cap for this plan.
             cb = manifest.get("cluster_by")
-            small = (bool(affected) and n_src_rows is not None
+            small = (not one_part and bool(affected) and n_src_rows is not None
                      and n_src_rows <= self.BROADCAST_SOURCE_ROW_CAP
                      and not (cb and len(affected) > 1 and self._slice_uppers(
                          manifest, affected, cb[0], schema) is None))

@@ -45,6 +45,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 from cassandra_elasticsearch_sync_spark.sources.cql_query import (
     CqlError,
@@ -693,7 +694,13 @@ def apply_cql_writes(table: AcidParquetTable, key_cols: list[str],
             row.append(int(wt))
             row.append(w.ttl_s)
         rows.append(tuple(row))
-    src = tiny_df(table.spark, rows, T.StructType(src_fields))
+    # A JVM LocalRelation: its size estimate lets the merge take the
+    # single-partition plan, and a value that does not fit its column
+    # fails here, before any job runs.
+    try:
+        src = local_relation(table.spark, rows, T.StructType(src_fields))
+    except ValueError as e:
+        raise CqlError(str(e)) from e
 
     def _cell_value(c: str):
         """The value a write lands in cell ``c``: the src literal for

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cassandra_elasticsearch_sync_spark.localdata import single_split
 from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 from cassandra_elasticsearch_sync_spark.sources.storage import (
     load_watermark,
@@ -142,11 +143,15 @@ class AcidStore:
     with per-entry key stats so the merge probe prunes at the manifest
     before touching bytes. This is VERDICT r3's #1: the engine's own
     loop on the lakehouse store it ships, 1% delta -> ~1% rewrite.
-    A ship set of at most ``AcidParquetTable.BROADCAST_SOURCE_ROW_CAP``
-    rows (its row count rides ``key_stats``) is broadcast into the
-    scan of the touched entries: the rewrite never shuffles the
-    target, and a cycle that only updates keys runs one broadcast
-    build and one write job per direction."""
+    The apply takes one of ``merge_into``'s three plans. When the ship
+    set and the touched entries each read as one split and together
+    fit the session's ``spark.sql.maxSinglePartitionBytes``, the merge
+    is a full outer join over that one partition: one write job per
+    direction, with no exchange and no broadcast. Otherwise, a ship
+    set of at most ``AcidParquetTable.BROADCAST_SOURCE_ROW_CAP`` rows
+    (its row count rides ``key_stats``) is broadcast into the scan of
+    the touched entries, so the rewrite never shuffles the target; a
+    larger one takes the shuffled full outer join."""
 
     def __init__(self, spark: SparkSession, root: str,
                  init: DataFrame | None = None, n_slices: int = 16):
@@ -317,6 +322,21 @@ class SyncEngine:
         delta_a = self.a.read_since(wm)
         delta_b = self.b.read_since(wm)
         cols = [c for c in delta_a.columns if c != "side"]
+        tagged = (delta_a.withColumn("__from", F.lit("a"))
+                  .unionByName(delta_b.withColumn("__from", F.lit("b"))))
+        # Sized from the delta: when each side's scan is one split and
+        # together they fit the planner's single-partition bound, the
+        # grouped pass and the metrics job below run in one partition
+        # with no exchange, and so do the ledger's window and distinct
+        # count. That joins at most two splits, one per side, in one
+        # task, and a split is small: Spark's file planning cuts a scan
+        # above ``spark.sql.files.openCostInBytes`` (4 MB by default)
+        # into about one split per core. A side that reads several
+        # splits (a whole-store read, a delta spread over entries or
+        # a large one) keeps the shuffled plan.
+        one_part = single_split(delta_a, delta_b)
+        if one_part:
+            tagged = tagged.coalesce(1)
         # Materialized once: the metrics job below fills it and each
         # apply reads it, so each apply sees the pre-apply other side -
         # which also makes the two directions independent commits on
@@ -324,8 +344,7 @@ class SyncEngine:
         # cached plan keeps every shuffle partition (one task each per
         # later scan), the checkpoint keeps the post-shuffle layout.
         grouped = (
-            delta_a.withColumn("__from", F.lit("a"))
-            .unionByName(delta_b.withColumn("__from", F.lit("b")))
+            tagged
             .groupBy(*cols)
             .agg(F.count("*").alias("__n"), F.max("__from").alias("__from"),
                  F.max("side").alias("side"))
@@ -360,7 +379,9 @@ class SyncEngine:
             # silently.
             F.max(F.when(ship, F.col("key").isNull())).alias("null_key"),
         ]
-        rows = grouped
+        # The checkpoint holds one partition but reports an unknown
+        # partitioning; coalesce(1) tells the planner so.
+        rows = grouped.coalesce(1) if one_part else grouped
         if self.record_ledger:
             # The lag of each shipped row behind the frontier, with the
             # frontier put on every row by a window so the percentiles
@@ -371,8 +392,14 @@ class SyncEngine:
             # re-encoding can move a value. The conflict-key count is
             # inclusion-exclusion over exact distinct counts
             # (|keys_a ∩ keys_b| = |keys_a| + |keys_b| - |keys_a ∪ keys_b|).
+            # A ship set holds at most one row per key (apply_delta's
+            # contract) and no NULL key (checked below), so |keys_a| is
+            # n_a and |keys_b| is n_b: one distinct count is left, which
+            # Spark plans without the Expand that several distinct
+            # counts need (an Expand reports no partitioning, so it
+            # would shuffle even a single-partition input).
             v_us = F.unix_micros(F.col("version").cast("timestamp"))
-            rows = grouped.withColumn(
+            rows = rows.withColumn(
                 "__lag", F.max(v_us).over(Window.partitionBy()) - v_us)
             lag_us = F.when(ship, F.col("__lag"))
             aggs += [
@@ -381,8 +408,6 @@ class SyncEngine:
                 F.round(F.percentile(lag_us, F.lit(0.95))
                         / 1000000.0, 6).alias("p95"),
                 F.round(F.max(lag_us) / 1000000.0, 6).alias("mx"),
-                F.count_distinct(F.when(is_a, F.col("key"))).alias("ka"),
-                F.count_distinct(F.when(is_b, F.col("key"))).alias("kb"),
                 F.count_distinct(F.when(ship, F.col("key"))).alias("kab"),
             ]
         m = rows.agg(*aggs).collect()[0]
@@ -411,7 +436,7 @@ class SyncEngine:
                 "cycle": self._cycle_no,
                 "shipped_a": n_a,
                 "shipped_b": n_b,
-                "conflict_keys": int(m["ka"]) + int(m["kb"]) - int(m["kab"]),
+                "conflict_keys": n - int(m["kab"]),
                 "p50_lag_s": m["p50"],
                 "p95_lag_s": m["p95"],
                 "max_lag_s": m["mx"],

@@ -1,8 +1,19 @@
-"""The small-source MERGE plan (sources/acid.py ``_merge_against``): a
-source of at most ``BROADCAST_SOURCE_ROW_CAP`` rows is broadcast into a
-LEFT OUTER join over the affected entries, and its unmatched rows are
-appended to the entries the rewrite wrote. Forcing the cap to 0 selects
-the full outer join; both plans must commit the same table."""
+"""The three MERGE plans (sources/acid.py ``_merge_against``). When the
+affected entries and the source each already read as one split and
+together fit ``spark.sql.maxSinglePartitionBytes`` (the planner's own
+bound), they are joined FULL OUTER in that one partition, with no
+exchange and no broadcast. Otherwise a source of at most
+``BROADCAST_SOURCE_ROW_CAP`` rows is broadcast into a LEFT OUTER join
+over the affected entries, and its unmatched rows are appended to the
+entries the rewrite wrote; above the cap the full outer join shuffles
+both sides. Lowering the bound selects the broadcast plan; lowering it
+and forcing the cap to 0 selects the shuffled full outer join. All
+three plans must commit the same table.
+
+Targets are written as one part file per entry, the layout a store's
+bootstrap and every single-partition rewrite leave; an entry of
+several part files reads as several splits and keeps the broadcast
+plan."""
 
 from __future__ import annotations
 
@@ -13,9 +24,12 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from cassandra_elasticsearch_sync_spark.localdata import local_relation, tiny_df
 from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 
 _KV = "key bigint, price double"
+_BOUND = "spark.sql.maxSinglePartitionBytes"
+PLANS = ("single_partition", "broadcast", "full_outer")
 
 
 def _rows(df):
@@ -41,39 +55,82 @@ def join_plans(monkeypatch):
     return seen
 
 
-def _full_outer(monkeypatch):
-    monkeypatch.setattr(AcidParquetTable, "BROADCAST_SOURCE_ROW_CAP", 0)
+@pytest.fixture()
+def force_plan(spark, monkeypatch):
+    """``force_plan(name)`` selects one of ``PLANS`` for a merge whose
+    inputs each read one split: a 1-byte single-partition bound leaves
+    the broadcast plan, and that bound with the cap at 0 leaves the
+    shuffled full outer join. The bound is restored afterwards."""
+    old, cap = spark.conf.get(_BOUND), AcidParquetTable.BROADCAST_SOURCE_ROW_CAP
+
+    def force(plan):
+        spark.conf.set(_BOUND, old if plan == "single_partition" else "1")
+        monkeypatch.setattr(AcidParquetTable, "BROADCAST_SOURCE_ROW_CAP",
+                            0 if plan == "full_outer" else cap)
+
+    yield force
+    spark.conf.set(_BOUND, old)
+
+
+def _exchanges(plan: str) -> list[str]:
+    """The shuffle exchanges of an executed-plan string (a broadcast
+    exchange does not repartition the target)."""
+    return [ln for ln in plan.splitlines()
+            if re.match(r"^[\s:+\-]*Exchange ", ln)]
+
+
+def _assert_plan(join_plans, plan, deletes=False):
+    """The rewrite writes of one merge took ``plan``. With ``deletes``
+    the target is read through a broadcast anti-join with its pending
+    merge-on-read delete keys, whose distinct is one more shuffle and
+    one more broadcast, both under the target side."""
+    hows = [how for how, _ in join_plans]
+    first = join_plans[0][1]
+    n_mor = 1 if deletes else 0
+    if plan == "single_partition":
+        assert hows == ["FullOuter"]
+        assert len(_exchanges(first)) == n_mor
+        assert first.count("BroadcastExchange") == n_mor
+    elif plan == "broadcast":
+        # the rewrite, then (when a source row matched nothing) the
+        # insert write over the empty target side
+        assert hows in (["LeftOuter"], ["LeftOuter", "RightOuter"])
+        assert re.search(r"BroadcastHashJoin .*LeftOuter, BuildRight", first)
+        assert len(_exchanges(first)) == n_mor
+    else:
+        assert hows == ["FullOuter"]
+        assert re.search(r"SortMergeJoin .*FullOuter", first)
+        assert len(_exchanges(first)) == 2 + n_mor
 
 
 # -- NULL-key target rows ------------------------------------------------
 
 @pytest.mark.parametrize("vouched", [True, False])
-@pytest.mark.parametrize("plan", ["broadcast", "full_outer"])
-def test_merge_keeps_null_key_target_row(spark, tmp_path, monkeypatch,
+@pytest.mark.parametrize("plan", PLANS)
+def test_merge_keeps_null_key_target_row(spark, tmp_path, force_plan,
                                          join_plans, plan, vouched):
     """A target row whose key is NULL matches no source row, so the
     merge keeps it as it is. "No target row" is a presence marker, not
     a NULL target key: read off the key, the row took its payload from
     the absent source row and came back ``(NULL, NULL)``."""
-    if plan == "full_outer":
-        _full_outer(monkeypatch)
+    force_plan(plan)
     t = AcidParquetTable(spark, str(tmp_path / "t"))
-    t.init(spark.createDataFrame([(None, 5.0), (2, 7.0), (10, 8.0)], _KV))
+    t.init(spark.createDataFrame([(None, 5.0), (2, 7.0), (10, 8.0)],
+                                 _KV).coalesce(1))
     if vouched:
-        t.merge_into(spark.createDataFrame([(3, 1.0)], _KV), ["key"],
+        t.merge_into(local_relation(spark, [(3, 1.0)], _KV), ["key"],
                      assume_unique_keys=True, source_stats=(1, 3, 3))
         want = [(2, 7.0), (3, 1.0), (10, 8.0), (None, 5.0)]
     else:
         # unvouched: the probe runs and the source's key 2 hits the entry
-        t.merge_into(spark.createDataFrame([(2, 70.0), (3, 1.0)], _KV),
+        t.merge_into(local_relation(spark, [(2, 70.0), (3, 1.0)], _KV),
                      ["key"])
         want = [(2, 70.0), (3, 1.0), (10, 8.0), (None, 5.0)]
     assert _rows(t.read()) == want
-    assert [how for how, _ in join_plans][:1] == [
-        "LeftOuter" if plan == "broadcast" else "FullOuter"]
+    _assert_plan(join_plans, plan)
 
 
-# -- the two plans commit the same table ---------------------------------
+# -- the three plans commit the same table ---------------------------------
 
 def _ts(d):
     return dt.datetime(2001, 1, d, 12, 30)
@@ -175,46 +232,62 @@ _CASES = {
         _KV, [(6, 60.0), (50, 500.0), (7, 7.0), (27, 27.0), (61, 61.0)],
         dict(assume_unique_keys=True, source_stats=(5, 6, 61)),
         [18, 38, None]),
+    "pending_mor_deletes": (
+        # keys 3 and 5 deleted merge-on-read before the merge: 3 comes
+        # back as an insert, 5 stays deleted
+        _KV, [(k, float(k)) for k in range(1, 7)],
+        _KV, [(2, 20.0), (3, 33.0), (8, 80.0)],
+        dict(assume_unique_keys=True, source_stats=(3, 2, 8),
+             mor_deletes=[(3,), (5,)]), None),
 }
+
+# Cases whose affected entries read as several splits: the
+# single-partition plan does not apply, the default bound gives the
+# broadcast plan.
+_SEVERAL_SPLITS = {"sliced_three_entries"}
 
 
 def _merge_once(spark, root, case):
     tgt_schema, tgt_rows, src_schema, src_rows, kw, uppers = case
     kw = kw() if callable(kw) else dict(kw)
     keys = kw.pop("keys", ["key"])
+    mor_deletes = kw.pop("mor_deletes", None)
     t = AcidParquetTable(spark, root)
-    init = spark.createDataFrame(tgt_rows, tgt_schema)
+    init = spark.createDataFrame(tgt_rows, tgt_schema).coalesce(1)
     if uppers is None:
         t.init(init)
     else:
         t.init_clustered(init, [keys[0]], n_slices=len(uppers),
                          slice_uppers=uppers)
-    t.merge_into(spark.createDataFrame(src_rows, src_schema), keys, **kw)
+    if mor_deletes:
+        t.delete_keys_mor(spark.createDataFrame(mor_deletes, "key bigint"),
+                          ["key"])
+    t.merge_into(local_relation(spark, src_rows, src_schema), keys, **kw)
     files = t._manifest(t.current_version())["files"]
     slicing = sorted((_rows(spark.read.parquet(d)) for d in files), key=repr)
     return _rows(t.read()), len(files), slicing
 
 
 @pytest.mark.parametrize("case", sorted(_CASES))
-def test_broadcast_merge_equals_full_outer_merge(spark, tmp_path,
-                                                 monkeypatch, join_plans,
-                                                 case):
+def test_broadcast_merge_equals_full_outer_merge(spark, tmp_path, force_plan,
+                                                 join_plans, case):
     """Same rows, same manifest entry count, same rows per entry: the
-    broadcast plan with its appended inserts commits what the full
-    outer join commits."""
-    small = _merge_once(spark, str(tmp_path / "small"), _CASES[case])
-    # the rewrite, then (when a source row matched nothing) the insert
-    # write over the empty target side
-    assert [how for how, _ in join_plans] in (
-        ["LeftOuter"], ["LeftOuter", "RightOuter"])
-    del join_plans[:]
-    _full_outer(monkeypatch)
-    full = _merge_once(spark, str(tmp_path / "full"), _CASES[case])
-    assert [how for how, _ in join_plans] == ["FullOuter"]
-    assert small == full
+    single-partition plan and the broadcast plan with its appended
+    inserts commit what the shuffled full outer join commits."""
+    got = {}
+    for plan in PLANS:
+        force_plan(plan)
+        del join_plans[:]
+        got[plan] = _merge_once(spark, str(tmp_path / plan), _CASES[case])
+        taken = ("broadcast" if plan == "single_partition"
+                 and case in _SEVERAL_SPLITS else plan)
+        _assert_plan(join_plans, taken, deletes=case == "pending_mor_deletes")
+    assert got["single_partition"] == got["full_outer"]
+    assert got["broadcast"] == got["full_outer"]
 
 
-def test_broadcast_merge_timestamp_keys_in_a_dst_fold(spark, tmp_path):
+def test_broadcast_merge_timestamp_keys_in_a_dst_fold(spark, tmp_path,
+                                                      force_plan):
     """The matched keys come back to the driver and go into the insert
     filter as literals. A collected TIMESTAMP is a naive local datetime,
     and the two instants of a DST fold (01:30 EDT and 01:30 EST) read
@@ -224,6 +297,7 @@ def test_broadcast_merge_timestamp_keys_in_a_dst_fold(spark, tmp_path):
     import os
     import time
 
+    force_plan("broadcast")
     fold = [1636263000, 1636266600]  # 2021-11-07 01:30 EDT, 01:30 EST
     old_tz = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"
@@ -249,11 +323,12 @@ def test_broadcast_merge_timestamp_keys_in_a_dst_fold(spark, tmp_path):
 
 
 def test_merge_without_observation_takes_full_outer_join(
-        spark, tmp_path, monkeypatch, join_plans):
+        spark, tmp_path, monkeypatch, force_plan, join_plans):
     """When the write produces no observation (the optimizer can drop
     an observed node, see ``_observed``), the merge must not guess the
     matched keys: it redoes the rewrite as the full outer join, and the
     first write's files are never committed."""
+    force_plan("broadcast")
     monkeypatch.setattr(AcidParquetTable, "_observed",
                         staticmethod(lambda obs, name: None))
     t = AcidParquetTable(spark, str(tmp_path / "t"))
@@ -267,47 +342,63 @@ def test_merge_without_observation_takes_full_outer_join(
 
 # -- the executed plan and its jobs ---------------------------------------
 
-def _exchanges(plan: str) -> list[str]:
-    """The shuffle exchanges of an executed-plan string (a broadcast
-    exchange does not repartition the target)."""
-    return [ln for ln in plan.splitlines()
-            if re.match(r"^[\s:+\-]*Exchange ", ln)]
+def _merge_cost(spark, root, shipped_jobs, make_source, parts=1):
+    """Jobs of a merge that updates key 2 and inserts key 300 into a
+    200-row single-entry table of ``parts`` part files, with the rows
+    it commits checked."""
+    t = AcidParquetTable(spark, root)
+    t.init(spark.createDataFrame([(k, float(k)) for k in range(1, 201)],
+                                 _KV).repartition(parts))
+    src = make_source(spark, [(2, 20.0), (300, 3.0)], _KV)
+    n = shipped_jobs(lambda: t.merge_into(
+        src, ["key"], assume_unique_keys=True, source_stats=(2, 2, 300)))
+    assert _rows(t.read().filter("key in (2, 300)")) == [
+        (2, 20.0), (300, 3.0)]
+    assert t.read().count() == 201
+    assert len(t._manifest(t.current_version())["files"]) == 1
+    return n
 
 
 def test_small_source_merge_does_not_shuffle_target(spark, tmp_path,
-                                                    monkeypatch, join_plans,
+                                                    force_plan, join_plans,
                                                     shipped_jobs):
-    """Under the cap the rewrite is a BroadcastHashJoin LeftOuter that
-    scans the target in place, with no shuffle exchange anywhere; with
-    the cap forced to 0 it is the SortMergeJoin FullOuter (3 jobs with
-    AQE on: two shuffle-map stages and the write). A merge that inserts
-    is 3 jobs with AQE on too: the source's broadcast build, the
-    rewrite write and the insert write, whose source filter holds the
-    matched keys as literals (a relation of them would be broadcast,
-    a job of its own)."""
-    def merge(name):
-        t = AcidParquetTable(spark, str(tmp_path / name))
-        t.init(spark.createDataFrame(
-            [(k, float(k)) for k in range(1, 201)], _KV))
-        src = spark.createDataFrame([(2, 20.0), (300, 3.0)], _KV)
-        n = shipped_jobs(lambda: t.merge_into(
-            src, ["key"], assume_unique_keys=True,
-            source_stats=(2, 2, 300)))
-        assert _rows(t.read().filter("key in (2, 300)")) == [
-            (2, 20.0), (300, 3.0)]
-        assert len(t._manifest(t.current_version())["files"]) == 1
-        return n
+    """With AQE on. Both sides read one split, so the merge is 1
+    job: the write of a full outer join over the two coalesced sides,
+    with no exchange and no broadcast, the insert out of the same pass.
+    With the bound lowered it is the broadcast plan, a BroadcastHashJoin
+    LeftOuter that scans the target in place with no shuffle exchange:
+    3 jobs, the source's broadcast build, the rewrite write and the
+    insert write, whose source filter holds the matched keys as
+    literals (a relation of them would be broadcast, a job of its own).
+    With the cap at 0 too it is the SortMergeJoin FullOuter: 3 jobs,
+    two shuffle-map stages and the write."""
+    want = {"single_partition": 1, "broadcast": 3, "full_outer": 3}
+    for plan in PLANS:
+        force_plan(plan)
+        del join_plans[:]
+        assert _merge_cost(spark, str(tmp_path / plan), shipped_jobs,
+                           local_relation) == want[plan]
+        _assert_plan(join_plans, plan)
 
-    assert merge("small") == 3
-    (how, plan), (ins_how, _) = join_plans
-    assert (how, ins_how) == ("LeftOuter", "RightOuter")
-    assert re.search(r"BroadcastHashJoin .*LeftOuter, BuildRight", plan)
-    assert _exchanges(plan) == []
 
-    del join_plans[:]
-    _full_outer(monkeypatch)
-    assert merge("full") == 3
-    ((how, plan),) = join_plans
-    assert how == "FullOuter"
-    assert re.search(r"SortMergeJoin .*FullOuter", plan)
-    assert len(_exchanges(plan)) == 2
+def test_source_without_size_estimate_keeps_broadcast_plan(
+        spark, tmp_path, join_plans, shipped_jobs):
+    """A Python-RDD source (``tiny_df``) reports no usable size, so it
+    never counts as fitting one partition: the merge keeps the
+    broadcast plan and its 3 jobs, not a single-partition join that
+    the planner would then shuffle."""
+    assert _merge_cost(spark, str(tmp_path / "t"), shipped_jobs,
+                       tiny_df) == 3
+    _assert_plan(join_plans, "broadcast")
+
+
+def test_target_in_several_splits_keeps_broadcast_plan(spark, tmp_path,
+                                                       join_plans,
+                                                       shipped_jobs):
+    """An entry of three part files reads as three splits, so at the
+    default bound the merge is not put into one partition: it keeps
+    the broadcast plan and its 3 jobs, the target scanned in place by
+    one task per split."""
+    assert _merge_cost(spark, str(tmp_path / "t"), shipped_jobs,
+                       local_relation, parts=3) == 3
+    _assert_plan(join_plans, "broadcast")

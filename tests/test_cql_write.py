@@ -580,41 +580,76 @@ def test_truncate_is_one_commit_and_time_travels(spark, table):
         parse_cql_dml("TRUNCATE kv", KEY)
 
 
-def test_cql_batch_job_count_pinned(spark, table, shipped_jobs):
-    """With AQE on, a batch that only updates is 2 Spark jobs. The fold
-    leaves one row per key, so the batch hands the merge its exact
-    (rows, min key, max key): no source pre-pass, no probe on the one
-    candidate entry, and no cache of a source the merge reads at most
-    twice. The batch rows are broadcast into the target scan (the
-    build job) and the entry is rewritten (the write job). An 8-key
-    batch that also upserts 5 absent keys is 3 jobs, as the full outer
-    join this replaced was (two shuffle-map stages and the write):
-    those rows match nothing, so a third job appends them, reading the
-    batch through a filter that holds the matched keys as literals.
+def _price_batch(keys, price):
+    return [f"UPDATE kv SET price = {k}{price}, version = 300 "
+            f"WHERE key = {k}" for k in keys]
 
-    A DELETE of an absent key is such a row too, which the merge then
-    drops: the append still runs, but the 0-row part file it writes
-    is removed, so the entry keeps only files with rows."""
+
+def test_cql_batch_job_count_pinned(spark, tmp_path, shipped_jobs):
+    """With AQE on, a batch is 1 Spark job: the write. The fold leaves
+    one row per key, so the batch hands the merge its exact (rows, min
+    key, max key): no source pre-pass, no probe on the one candidate
+    entry, and no cache of the source. The batch rows are a JVM
+    LocalRelation with a real size estimate; they and the entry, one
+    part file as a store's bootstrap writes it, each read one split,
+    so the merge is a full outer join in that one partition with no
+    exchange and no broadcast, and it writes one part file again. That
+    holds for a batch that only updates, for an 8-key batch that also
+    upserts 5 absent keys (the inserts come out of the same pass), and
+    for a DELETE of an absent key, which the merge drops: no write of
+    its own, so no 0-row part file either."""
     import pyarrow.parquet as pq
 
-    def batch(keys, price):
-        return [f"UPDATE kv SET price = {k}{price}, version = 300 "
-                f"WHERE key = {k}" for k in keys]
-
+    table = AcidParquetTable(spark, str(tmp_path / "kv"))
+    table.init(spark.createDataFrame(
+        [(1, 10.0, 100), (2, 20.0, 100), (3, 30.0, 100)],
+        "key bigint, price double, version bigint").coalesce(1))
+    batch = _price_batch
     assert shipped_jobs(
-        lambda: apply_cql_writes(table, KEY, batch(range(1, 4), ".25"))) == 2
+        lambda: apply_cql_writes(table, KEY, batch(range(1, 4), ".25"))) == 1
     assert _rows(table) == [(k, k + 0.25, 300) for k in range(1, 4)]
     assert shipped_jobs(
-        lambda: apply_cql_writes(table, KEY, batch(range(1, 9), ".5"))) == 3
+        lambda: apply_cql_writes(table, KEY, batch(range(1, 9), ".5"))) == 1
     assert _rows(table) == [(k, k + 0.5, 300) for k in range(1, 9)]
     assert shipped_jobs(lambda: apply_cql_writes(
-        table, KEY, batch([1], ".75") + ["DELETE FROM kv WHERE key = 99"])) == 3
+        table, KEY, batch([1], ".75") + ["DELETE FROM kv WHERE key = 99"])) == 1
     assert _rows(table) == [(1, 1.75, 300)] + [
         (k, k + 0.5, 300) for k in range(2, 9)]
     (entry,) = table._manifest(table.current_version())["files"]
     parts = [f for f in os.listdir(entry) if f.endswith(".parquet")]
-    assert parts and all(
+    assert len(parts) == 1 and all(
         pq.read_metadata(os.path.join(entry, f)).num_rows for f in parts)
+
+
+def test_cql_batch_into_several_splits_keeps_broadcast_plan(table,
+                                                            shipped_jobs):
+    """The fixture's entry holds several part files (its three rows
+    spread over the session's slices), so it reads as several splits
+    and the batch is not put into one partition: its rows are
+    broadcast into the scan of the entry, 2 jobs (the build and the
+    write)."""
+    assert shipped_jobs(lambda: apply_cql_writes(
+        table, KEY, _price_batch(range(1, 4), ".25"))) == 2
+    assert _rows(table) == [(k, k + 0.25, 300) for k in range(1, 4)]
+
+
+def test_bad_value_fails_on_the_driver_naming_its_column(spark, tmp_path,
+                                                        shipped_jobs):
+    """A value that does not fit its column (a number for a ``text``
+    column, as Cassandra rejects too) fails while the batch is built,
+    with an error that names the column and before any Spark job runs -
+    not as an executor stack trace in the middle of the merge."""
+    t = AcidParquetTable(spark, str(tmp_path / "kv"))
+    t.init(spark.createDataFrame([(1, "a")], "key bigint, name string"))
+    v0 = t.current_version()
+
+    def write():
+        with pytest.raises(CqlError, match="'name'"):
+            apply_cql_writes(t, KEY, "UPDATE kv SET name = 5 WHERE key = 1")
+
+    assert shipped_jobs(write) == 0
+    assert t.current_version() == v0
+    assert _rows(t) == [(1, "a")]
 
 
 def test_cql_batch_stats_prune_but_keep_every_match(spark, tmp_path):

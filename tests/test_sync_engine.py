@@ -8,12 +8,14 @@ from __future__ import annotations
 
 import datetime as dt
 import functools
+import re
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 from cassandra_elasticsearch_sync_spark.sync.engine import (
     SLICE_TARGET_ROWS,
     AcidStore,
@@ -259,17 +261,17 @@ def test_ledger_records_slo_metrics(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_trickle_cycle_job_count_pinned(spark, shipped_cost):
-    """With AQE on, an 18-row cycle between two single-entry
-    AcidStores is 7 Spark jobs and 8 tasks. Each delta is scanned
-    once, by the grouped pass that decides both ship sets; one metrics
-    job over its materialized rows measures everything the applies
-    need. Each apply broadcasts its ship set into the target scan (one
-    build job, one write job) instead of shuffling the whole entry
-    against it. A second scan of a delta, a merge that re-measures
-    what the metrics job already handed it, a shuffle of the target,
-    or a cache that keeps every shuffle partition (one task each on
-    every later scan) shows up here."""
+def _trickle_cycle_cost(spark, shipped_cost, monkeypatch):
+    """(jobs, tasks) of an 18-row cycle between two single-entry
+    AcidStores, with the plans of both applies' rewrite writes checked:
+    whatever their plan, neither shuffles its target."""
+    plans = []
+    real = AcidParquetTable._write_rewrite
+
+    def spy(self, df, manifest, affected, into=None):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(self, df, manifest, affected, into=into)
+
     eng, root = _mk_engine(spark, functools.partial(AcidStore, n_slices=1))
     try:
         eng.full_sync()
@@ -282,13 +284,52 @@ def test_trickle_cycle_job_count_pinned(spark, shipped_cost):
                 {"price": F.lit(float(day)),
                  "version": F.lit(dt.datetime(2003, 1, day)).cast(
                      "timestamp")})
+        monkeypatch.setattr(AcidParquetTable, "_write_rewrite", spy)
         shipped = []
-        assert shipped_cost(
-            lambda: shipped.append(eng.incremental_cycle())) == (7, 8)
+        cost = shipped_cost(lambda: shipped.append(eng.incremental_cycle()))
         assert shipped == [18]
         assert eng.in_sync()
     finally:
         shutil.rmtree(root, ignore_errors=True)
+    assert len(plans) == 2
+    assert not any(re.search(r"(?m)^[\s:+\-]*Exchange ", p) for p in plans)
+    return cost, plans
+
+
+def test_trickle_cycle_job_count_pinned(spark, shipped_cost, monkeypatch):
+    """With AQE on, an 18-row cycle between two single-entry
+    AcidStores is 3 Spark jobs and 3 tasks. Each delta reads one
+    split and both fit ``spark.sql.maxSinglePartitionBytes``, so each
+    is scanned once, in one partition, by the grouped pass that decides
+    both ship sets, and one metrics job over its materialized rows
+    measures everything the applies need: 1 job with no exchange.
+    Each apply's ship set and touched entry read one split too, so
+    its full outer join runs with no exchange and no broadcast: 1 write
+    job per direction. A second scan of a delta, a merge that
+    re-measures what the metrics job already handed it, or any shuffle
+    or broadcast shows up here."""
+    cost, plans = _trickle_cycle_cost(spark, shipped_cost, monkeypatch)
+    assert cost == (3, 3)
+    assert not any("BroadcastExchange" in p for p in plans)
+
+
+def test_trickle_cycle_above_single_partition_bound(spark, shipped_cost,
+                                                    monkeypatch):
+    """With the single-partition bound below every input, the cycle
+    takes the shuffled grouped pass and the broadcast merges: 7 jobs
+    and 8 tasks. The grouped pass and the metrics job are 3 jobs with
+    AQE on (the shuffle-map stage of each exchange is a job); each
+    apply broadcasts its ship set into the target scan (one build
+    job, one write job) instead of shuffling the whole entry."""
+    bound = "spark.sql.maxSinglePartitionBytes"
+    old = spark.conf.get(bound)
+    spark.conf.set(bound, "1")
+    try:
+        cost, plans = _trickle_cycle_cost(spark, shipped_cost, monkeypatch)
+    finally:
+        spark.conf.set(bound, old)
+    assert cost == (7, 8)
+    assert all("BroadcastHashJoin" in p for p in plans)
 
 
 def test_null_payload_boundary_row_converges(spark):
@@ -313,6 +354,114 @@ def test_null_payload_boundary_row_converges(spark):
         assert eng.in_sync()
         assert [(r["shipped_a"], r["shipped_b"], r["conflict_keys"])
                 for r in eng.ledger] == [(0, 0, 0)] * 3
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_ledger_cycle_runs_in_one_partition(spark, shipped_cost):
+    """With the ledger on, the lag window and the conflict count ride
+    the single-partition metrics job too: a cycle that ships both ways
+    is 3 jobs and 3 tasks with AQE on (the metrics job and one write
+    per direction), and a quiet cycle is 1 job. Several distinct counts
+    in one aggregate would plan an Expand, which reports no
+    partitioning, and shuffle the one partition twice."""
+    ts = lambda d: dt.datetime(2000, 1, d)  # noqa: E731
+    root = tempfile.mkdtemp(prefix="ces_ledger1p_")
+    try:
+        rows = spark.createDataFrame(
+            [(k, float(k), ts(1 + k // 6), "a") for k in range(1, 7)],
+            "key bigint, price double, version timestamp, side string")
+        a = AcidStore(spark, f"{root}/a", rows)
+        b = AcidStore(spark, f"{root}/b", rows)
+        eng = SyncEngine(spark, a, b, f"{root}/state", record_ledger=True)
+        eng.full_sync()          # watermark = day 2, key 6 only
+        for store, keys, day in ((a, [1, 2], 5), (b, [2, 3], 6)):
+            store.table.update_where(
+                F.col("key").isin(keys),
+                {"price": F.lit(float(day)),
+                 "version": F.lit(ts(day)).cast("timestamp")})
+        assert shipped_cost(eng.incremental_cycle) == (3, 3)
+        assert shipped_cost(eng.incremental_cycle) == (1, 1)
+        assert [(r["shipped_a"], r["shipped_b"], r["conflict_keys"])
+                for r in eng.ledger] == [(2, 2, 1), (0, 0, 0)]
+        assert eng.in_sync()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_cycle_over_a_delta_of_several_splits_keeps_the_shuffle(
+        spark, monkeypatch):
+    """A side whose delta reads more than one split is not put into
+    one partition: the grouped pass shuffles as it did before the
+    single-partition plan. Here the first cycle (no watermark yet)
+    reads both two-slice stores whole, two part files a side."""
+    import cassandra_elasticsearch_sync_spark.sync.engine as engine
+
+    decided = []
+    real = engine.single_split
+
+    def spy(*dfs):
+        decided.append(real(*dfs))
+        return decided[-1]
+
+    ts = lambda d: dt.datetime(2000, 1, d)  # noqa: E731
+    root = tempfile.mkdtemp(prefix="ces_2split_")
+    try:
+        rows = spark.createDataFrame(
+            [(k, float(k), ts(1), "a") for k in range(1, 41)],
+            "key bigint, price double, version timestamp, side string")
+        a = AcidStore(spark, f"{root}/a", rows, n_slices=2)
+        b = AcidStore(spark, f"{root}/b", rows, n_slices=2)
+        b.table.update_where(F.col("key").isin([1, 40]),
+                             {"price": F.lit(0.5),
+                              "version": F.lit(ts(5)).cast("timestamp")})
+        for store in (a, b):
+            assert len(store.table._manifest(
+                store.table.current_version())["files"]) == 2
+        eng = SyncEngine(spark, a, b, f"{root}/state")
+        monkeypatch.setattr(engine, "single_split", spy)
+        # both copies of keys 1 and 40 differ, so each ships to the
+        # other side; LWW keeps B's newer rows on both
+        assert eng.incremental_cycle() == 4
+        assert decided == [False]
+        assert eng.in_sync()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_update_of_a_watermark_row_ships_the_stale_copy_once(spark):
+    """A write to a key whose synced row sits AT the watermark leaves
+    the other side's stale copy in that side's delta (the boundary is
+    inclusive) with no twin in the writer's delta, so the stale copy
+    ships once: the cycle counts one row more than were written, and
+    LWW drops it on arrival. Later cycles ship nothing."""
+    ts = lambda d: dt.datetime(2000, 1, d)  # noqa: E731
+    root = tempfile.mkdtemp(prefix="ces_wmrow_")
+    try:
+        rows = spark.createDataFrame(
+            [(1, 10.0, ts(1), "a"), (2, 20.0, ts(3), "a"),
+             (3, 30.0, ts(3), "a"), (4, 40.0, ts(2), "a")],
+            "key bigint, price double, version timestamp, side string")
+        a = AcidStore(spark, f"{root}/a", rows)
+        b = AcidStore(spark, f"{root}/b", rows)
+        eng = SyncEngine(spark, a, b, f"{root}/state", record_ledger=True)
+        eng.full_sync()          # watermark = day 3, keys 2 and 3
+        for store, key, price, day in ((a, 2, 99.0, 5), (b, 4, 44.0, 6)):
+            store.table.update_where(
+                F.col("key") == key,
+                {"price": F.lit(price),
+                 "version": F.lit(ts(day)).cast("timestamp")})
+        # 2 rows written; B's day-3 copy of key 2 ships to A as well
+        assert eng.incremental_cycle() == 3
+        (led,) = eng.ledger
+        assert (led["shipped_a"], led["shipped_b"],
+                led["conflict_keys"]) == (1, 2, 1)
+        for store in (a, b):
+            got = store.read().filter("key = 2").select(
+                "price", "version").collect()
+            assert [tuple(r) for r in got] == [(99.0, ts(5))]
+        assert eng.in_sync()
+        assert eng.incremental_cycle() == 0
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
