@@ -1,25 +1,14 @@
-"""Tiny driver-local DataFrames without the 32-slice Python-RDD tax.
+"""Small driver-local DataFrames, and whether inputs fit one partition.
 
-``SparkSession.createDataFrame(list, schema)`` parallelizes the rows
-into ``defaultParallelism`` slices - 32 near-empty Python partitions
-for a 3-row relation at ``local[32]``. Every evaluation of such a plan
-pays one JVM<->Python worker round PER SLICE (measured ~130-175 ms
-each on a cold worker), and any downstream ``coalesce(1)`` iterates
-the parent slices INSIDE one task, i.e. 32 rounds SERIALLY: persisting
-a 3-row ledger measured 6-8 s at local[32] (round 13, guide §4 - the
-Python boundary is per-partition, not per-row).
+``local_relation`` is the one way the package builds a DataFrame from
+rows held on the driver (probe rows, lexicons, request tables, empty
+relations of a given schema). It plans them as a JVM ``LocalRelation``:
+no Python worker round when the plan runs, a real size estimate for
+the planner, and every value checked on the driver before any job.
 
-``tiny_df`` keeps the exact createDataFrame conversion/verification
-semantics (same row converter, same schema coercion - it only hands
-createDataFrame a pre-sliced RDD) but puts ALL rows in ONE slice, so
-the plan costs one Python round instead of defaultParallelism rounds.
-Use it for any driver-local relation that is small by construction
-(probe rows, lexicons, request tables, empty relations); data that
-should parallelize keeps the stock API.
-
-``single_split`` is the planning side of the same idea: it tells
-whether inputs are small and already in one split each, so that the
-caller can plan the work over them as one partition.
+``single_split`` is the planning side: it tells whether inputs are
+small and already in one split each, so that the caller can plan the
+work over them as one partition.
 """
 
 from __future__ import annotations
@@ -27,25 +16,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def tiny_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` for SMALL driver-local
-    ``rows``, materialized as ONE partition (order preserved)."""
-    rdd = spark.sparkContext.parallelize(rows if rows else [], 1)
-    return spark.createDataFrame(rdd, schema)
-
-
 def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` for SMALL driver-local
-    ``rows``, planned as a JVM ``LocalRelation`` built from an Arrow
-    table: no Python worker round when it is evaluated, and a real
-    size estimate, where ``tiny_df``'s ``LogicalRDD`` reports
-    ``Long.MaxValue`` bytes and so never counts as small to the
-    planner. Every value is checked against its field on the driver,
-    by the verifier ``createDataFrame`` runs on the executors and by
-    the Arrow conversion (which, unlike the verifier, refuses a number
-    for a string), so a bad value raises a ``ValueError`` that names
-    the column before any Spark job runs. A type Arrow cannot carry
-    raises."""
+    """``spark.createDataFrame(rows, schema)`` for driver-local
+    ``rows`` (a list of tuples in ``schema``'s field order; ``[]`` for
+    an empty relation), planned as a JVM ``LocalRelation`` built from
+    an Arrow table. Evaluating it takes no Python worker round, and it
+    carries a real size estimate, so a plan over it can count as small
+    (``single_split``) and Catalyst may fold projections into it or
+    broadcast it. Every value is checked against its field on the
+    driver, by the verifier ``createDataFrame`` applies and by the
+    Arrow conversion (which, unlike the verifier, refuses a number for
+    a string), so a bad value raises a ``ValueError`` that names the
+    column before any Spark job runs. A type Arrow cannot carry
+    raises.
+
+    There is no row cap: the rows are already on the driver, and
+    Spark splits a ``LocalTableScan`` over up to ``defaultParallelism``
+    partitions. Two callers' row counts grow with the data:
+    ``with_grouped_order``'s offsets are one row per (range partition,
+    group) pair, P + G - 1 rows it has already collected, and
+    ``es_composite_sweep`` returns up to ``max_pages`` x ``size``
+    buckets, every page it has collected."""
     import json
 
     import pyarrow as pa
@@ -90,8 +81,8 @@ def single_split(*dfs: DataFrame) -> bool:
     and no broadcast. The splits are read off the physical plan
     without running a job (``_splits``); a plan whose split count is
     not known that way never counts, and neither does a relation
-    without a size estimate (a Python-RDD ``LogicalRDD`` reports
-    ``Long.MaxValue`` bytes)."""
+    without a size estimate (a checkpointed ``LogicalRDD`` whose origin
+    plan has no estimate reports ``Long.MaxValue`` bytes)."""
     spark = dfs[0].sparkSession
     bound = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.maxSinglePartitionBytes"))

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 _PID = "__do_pid"
 _ROFF = "__do_rank_off"
@@ -121,7 +121,7 @@ def with_global_order(
     rows = [(pid, ro, float(so) if is_float else int(so))
             for pid, ro, so in rows]
     off_schema = f"{_PID} int, {_ROFF} long, {_SOFF} {soff_t}"
-    offsets = tiny_df(spark, rows, off_schema)
+    offsets = local_relation(spark, rows, off_schema)
     w = Window.partitionBy(_PID).orderBy(*order_exprs)
     out = rp.join(F.broadcast(offsets), _PID)
     if rank_col:
@@ -268,7 +268,7 @@ def with_grouped_order(
     gschema = ", ".join(
         f"`{g}` {dict(df.dtypes)[g]}" for g in group_cols
     )
-    offsets = tiny_df(
+    offsets = local_relation(
         spark, rows, f"{_PID} int, {gschema}, {_ROFF} long, {_SOFF} long"
     )
     w = Window.partitionBy(_PID, *group_cols).orderBy(*order_exprs)

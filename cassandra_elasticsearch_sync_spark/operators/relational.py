@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from cassandra_elasticsearch_sync_spark.catalog import load_table
 from cassandra_elasticsearch_sync_spark.parity import fmt_ts
 from cassandra_elasticsearch_sync_spark.registry import register
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 
 @register("b1_project", "B1", """
@@ -803,7 +803,7 @@ def c12_spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cx_ in range(int(lo_x // cell), int(hi_x // cell) + 1):
             for cy_ in range(int(lo_y // cell), int(hi_y // cell) + 1):
                 tri_cells.append((i, *a, *b, *c, cx_, cy_))
-    tri = tiny_df(
+    tri = local_relation(
         spark, tri_cells,
         "tri_id int, ax int, ay int, bx int, by int, cx int, cy int, "
         "clat bigint, clon bigint")

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from cassandra_elasticsearch_sync_spark.catalog import load_table
 from cassandra_elasticsearch_sync_spark.registry import register
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 
 @register("k_deterministic_sample", "K1", """
@@ -1153,7 +1153,7 @@ def k_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     score = F.least(F.greatest(F.col("value") / 100.0, F.lit(0.0)), F.lit(1.0))
     label = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-    th = tiny_df(
+    th = local_relation(
         spark, [(t / 10.0,) for t in range(1, 10)], "threshold double")
     s = ev.select(score.alias("score"), label.alias("label"))
     j = s.crossJoin(F.broadcast(th))

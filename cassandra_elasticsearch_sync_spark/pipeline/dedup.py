@@ -32,7 +32,7 @@ from cassandra_elasticsearch_sync_spark.catalog import load_table
 from cassandra_elasticsearch_sync_spark.pipeline.hashing import portable_hash60
 from cassandra_elasticsearch_sync_spark.registry import register
 from cassandra_elasticsearch_sync_spark.streaming.control import await_bounded
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 # ---------------------------------------------------------------------------
 # K1: exact dedup
@@ -694,7 +694,7 @@ def k2e_streaming_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh_full = _shingled(spark, sf_dir)
         out = exact_jaccard(cand_all, sh_full).localCheckpoint(eager=True)
     else:
-        out = tiny_df(
+        out = local_relation(
             spark, [], "doc_a bigint, doc_b bigint, jaccard double"
         )
     for p in (staged, index_dir, pairs_dir, checkpoint):

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from cassandra_elasticsearch_sync_spark.catalog import load_table
 from cassandra_elasticsearch_sync_spark.registry import register
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 DIM = 64
 M_SUB = 16           # subspaces
@@ -206,7 +206,7 @@ def pq_rerank(e: DataFrame, shortlist: DataFrame, qvecs,
     from pyspark.sql import Window
 
     spark = e.sparkSession
-    qdf = tiny_df(
+    qdf = local_relation(
         spark,
         [(int(q), [float(x) for x in v]) for q, v in qvecs],
         "qid bigint, qe array<double>",

@@ -22,7 +22,7 @@ from cassandra_elasticsearch_sync_spark.catalog import load_table
 from cassandra_elasticsearch_sync_spark.pipeline.dedup import MERSENNE_P, _COEF
 from cassandra_elasticsearch_sync_spark.pipeline.hashing import portable_hash60
 from cassandra_elasticsearch_sync_spark.registry import register
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 CMS_DEPTH = 4
 CMS_WIDTH = 64
@@ -52,7 +52,7 @@ def cms_build(tokens: DataFrame, token_col: str = "token") -> DataFrame:
 def cms_estimate(spark: SparkSession, sketch: DataFrame, token: str) -> int:
     """Point estimate = min over depths of the token's cell (an upper
     bound on the true count)."""
-    probe = tiny_df(spark, [(token,)], "token string").select(
+    probe = local_relation(spark, [(token,)], "token string").select(
         (portable_hash60(F.col("token")) % MERSENNE_P).alias("h")
     ).select(*_cell_exprs())
     cells = [(i, r[f"b{i}"]) for r in probe.collect() for i in range(CMS_DEPTH)]

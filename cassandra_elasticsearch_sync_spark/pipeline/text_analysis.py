@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from cassandra_elasticsearch_sync_spark.catalog import load_table
 from cassandra_elasticsearch_sync_spark.registry import register
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 # Scoring lexicon over the corpus's observed vocabulary (FIXTURES.md).
 # Defined once here; the oracle embeds the same pairs as a VALUES list.
@@ -135,7 +135,7 @@ GROUP BY doc_id
      "average (EDBT'16 pattern, SURVEY.md P:6)")
 def k5_keyword_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    lex = tiny_df(
+    lex = local_relation(
         spark, sorted(LEXICON.items()), "word string, score double"
     )
     tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w"))

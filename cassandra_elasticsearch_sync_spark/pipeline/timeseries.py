@@ -31,7 +31,7 @@ from cassandra_elasticsearch_sync_spark.operators.distributed_order import (
 )
 from cassandra_elasticsearch_sync_spark.registry import register
 from cassandra_elasticsearch_sync_spark.streaming.control import await_bounded
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 QUERY_USER = 0
 TOPK_N = 10
@@ -165,9 +165,8 @@ def k8_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     shutil.rmtree(staged, ignore_errors=True)
     shutil.rmtree(checkpoint, ignore_errors=True)
-    return tiny_df(
-        spark, state["top"], "event_id bigint, user_id bigint, value double"
-    )
+    return local_relation(spark, state["top"] or [],
+                          "event_id bigint, user_id bigint, value double")
 
 
 @register("k7b_gap_fill", "K7+H2", """

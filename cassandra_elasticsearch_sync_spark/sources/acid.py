@@ -63,7 +63,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-from cassandra_elasticsearch_sync_spark.localdata import single_split, tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation, single_split
 
 _DATA = "data"
 _DELETES = "deletes"
@@ -158,7 +158,7 @@ class AcidParquetTable:
         bounded delete-key set broadcast."""
         schema = StructType.fromJson(m["schema"])
         if not dirs:
-            return tiny_df(self.spark, [], schema)
+            return local_relation(self.spark, [], schema)
         seqs = m.get("seq", {})
         deletes = m.get("deletes", [])
         if not deletes:
@@ -707,8 +707,8 @@ class AcidParquetTable:
            no exchange, no broadcast, and the inserts come out of the
            same write (one job). Spark's file planning makes a scan
            one split only when it is small (``localdata.single_split``);
-           a source without a size estimate (a Python-RDD relation)
-           never counts.
+           a source without a size estimate (a relation over an RDD
+           built outside SQL) never counts.
         2. Broadcast. Otherwise, when the source row count is known
            (``source_stats`` or the merge's own pre-pass) and at most
            ``BROADCAST_SOURCE_ROW_CAP`` - the one cap, which also

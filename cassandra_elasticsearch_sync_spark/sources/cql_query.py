@@ -954,7 +954,7 @@ def cql_select(df: DataFrame, stmt: str,
 
 from cassandra_elasticsearch_sync_spark.catalog import load_table  # noqa: E402
 from cassandra_elasticsearch_sync_spark.registry import register  # noqa: E402
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 
 @register("a2i_cql_partition_slice", "A2", """
@@ -1298,7 +1298,7 @@ def a2y_cql_ann_vector_search(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     row = e.filter(F.col("vec_id") == 100).select("embedding").head()
     if row is None:
-        return tiny_df(spark, [], "vec_id long, label int")
+        return local_relation(spark, [], "vec_id long, label int")
     vec_lit = ", ".join(repr(float(x)) for x in row[0])
     return cql_select(e, f"""
         SELECT vec_id, label FROM embeddings
@@ -1340,7 +1340,7 @@ def a2z_cql_similarity_functions(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     row = e.filter(F.col("vec_id") == 100).select("embedding").head()
     if row is None:
-        return tiny_df(spark, [], "vec_id long, sim double")
+        return local_relation(spark, [], "vec_id long, sim double")
     vec_lit = ", ".join(repr(float(x)) for x in row[0])
     return cql_select(e, f"""
         SELECT vec_id, similarity_cosine(embedding, [{vec_lit}]) AS sim

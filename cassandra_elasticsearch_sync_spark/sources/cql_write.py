@@ -786,7 +786,6 @@ def apply_cql_writes(table: AcidParquetTable, key_cols: list[str],
 # -- registered, oracle-verified write-path query ---------------------------
 
 from cassandra_elasticsearch_sync_spark.registry import register  # noqa: E402
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
 
 
 @register("a2r_cql_write_path", "A2+A7+L4", """
@@ -893,7 +892,7 @@ def a2t_cql_using_ttl_timestamp(spark, sf_dir):
             T.StructField("writetime_us", T.LongType()),
             T.StructField("ttl_s", T.LongType()),
         ])
-        t.init(tiny_df(spark, [], schema))
+        t.init(local_relation(spark, [], schema))
         apply_cql_writes(t, ["key"], [
             f"INSERT INTO kv (key, price) VALUES ({k}, {float(k)})"
             for k in range(100)
@@ -976,7 +975,7 @@ def a2w_cql_writetime_ttl_read(spark, sf_dir):
             T.StructField("writetime_us", T.LongType()),
             T.StructField("ttl_s", T.LongType()),
         ])
-        t.init(tiny_df(spark, [], schema))
+        t.init(local_relation(spark, [], schema))
         apply_cql_writes(t, ["key"], [
             f"INSERT INTO kv (key, price) VALUES ({k}, {float(k)}) "
             f"USING TIMESTAMP 1000000"
@@ -1177,7 +1176,7 @@ def a2ad_cql_counter_increments(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="ces_cql_counter_")
     try:
         t = AcidParquetTable(spark, root)
-        t.init(tiny_df(spark, [], "key bigint, hits bigint"))
+        t.init(local_relation(spark, [], "key bigint, hits bigint"))
         keys = [r[0] % 10 for r in load_table(spark, sf_dir, "orders")
                 .filter(F.col("o_orderkey") <= 800)
                 .select("o_orderkey").collect()]
@@ -1326,5 +1325,5 @@ def cql_truncate(table: AcidParquetTable, stmt: str) -> int:
     if not m:
         raise CqlError(f"not a TRUNCATE statement: {stmt!r}")
     schema = table.read().schema
-    empty = tiny_df(table.spark, [], schema)
+    empty = local_relation(table.spark, [], schema)
     return table.replace_where(F.lit(True), empty)

@@ -939,7 +939,7 @@ def es_search(df: DataFrame, query: dict, now=None) -> DataFrame:
 
 from cassandra_elasticsearch_sync_spark.catalog import load_table  # noqa: E402
 from cassandra_elasticsearch_sync_spark.registry import register  # noqa: E402
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 _DSL_DEMO = {
     "bool": {
@@ -3186,12 +3186,13 @@ def es_composite_sweep(df: DataFrame, aggs: dict,
     run a page, feed its LAST bucket's source key back as the
     ``after`` cursor, repeat until a short page. Each page is one
     bounded distributed job (agg + TakeOrderedAndProject of ``size``
-    buckets); the driver holds only one page of buckets at a time -
-    exactly the ES client contract, and the only correct way to visit
-    EVERY bucket of a high-cardinality space (deep terms sizes
-    truncate). Returns all pages stamped with their page number, so
-    the oracle can prove the cursor tiles the bucket space with no
-    gaps and no overlaps."""
+    buckets) - exactly the ES client contract, and the only correct
+    way to visit EVERY bucket of a high-cardinality space (deep terms
+    sizes truncate). Each page is collected and kept on the driver,
+    so it holds up to ``max_pages`` x ``size`` buckets by the end.
+    Returns all pages stamped with their page number, so the oracle
+    can prove the cursor tiles the bucket space with no gaps and no
+    overlaps."""
     from pyspark.sql import types as T
 
     (name, spec), = aggs.items()
@@ -3220,7 +3221,7 @@ def es_composite_sweep(df: DataFrame, aggs: dict,
             break
     out_schema = T.StructType(
         [T.StructField("page", T.IntegerType())] + list(schema.fields))
-    return tiny_df(df.sparkSession, rows_out, out_schema)
+    return local_relation(df.sparkSession, rows_out, out_schema)
 
 
 @register("a3aa_es_composite_paged_sweep", "A3", """
@@ -4038,7 +4039,7 @@ def a3as_es_knn_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     qv = e.filter(F.col("vec_id") == 100).select("embedding").head()
     if qv is None:  # corpus smaller than the probe id - empty page
-        return tiny_df(spark, [], "vec_id long, _score double")
+        return local_relation(spark, [], "vec_id long, _score double")
     knn = {
         "field": "embedding",
         "query_vector": [float(x) for x in qv[0]],
@@ -4205,7 +4206,7 @@ def es_term_suggest(df: DataFrame, text_field: str, terms: list[str],
         .filter(F.col("term") != "")
         .groupBy("term").agg(F.count("*").alias("freq"))
     )
-    inputs = tiny_df(spark, [(t,) for t in terms], "input string")
+    inputs = local_relation(spark, [(t,) for t in terms], "input string")
     cand = (
         vocab.join(F.broadcast(inputs),
                    F.levenshtein(F.col("term"), F.col("input"),
@@ -7966,7 +7967,7 @@ def a3dd_es_point_in_time(spark, sf_dir):
                     t.delete_where(
                         F.col("o_orderkey") == F.lit(nxt[0]["o_orderkey"]))
                 t.merge_into(
-                    tiny_df(
+                    local_relation(
                         spark,
                         [(900000901, float(last["o_totalprice"]),
                           "1-URGENT", "F")],
@@ -7977,7 +7978,7 @@ def a3dd_es_point_in_time(spark, sf_dir):
                         F.col("o_totalprice").cast(
                             o.schema["o_totalprice"].dataType)),
                     ["o_orderkey"], assume_unique_keys=True)
-        out = tiny_df(
+        out = local_relation(
             spark, pages, es_pit_search_page(t, pit, query, sort).schema)
         return (out.select("o_orderkey", "o_totalprice", "o_orderpriority")
                 .localCheckpoint(eager=True))
@@ -8086,7 +8087,7 @@ def es_field_caps(spark, tables: dict[str, DataFrame]) -> DataFrame:
                 raise ValueError(f"field_caps has no ES mapping for "
                                  f"{index}.{f.name}: {s}")
             rows.append((index, f.name, es_t, True, True))
-    return tiny_df(
+    return local_relation(
         spark, rows, "index string, field string, es_type string, "
                      "searchable boolean, aggregatable boolean")
 
@@ -8171,7 +8172,7 @@ def es_rank_eval(df: DataFrame, *, requests: list[dict], k: int,
                        is_rel.cast("double")
                        / F.log2(F.col("__rank") + F.lit(1.0))), 6)
                    .alias(f"dcg_at_{k}")))
-    req = tiny_df(
+    req = local_relation(
         df.sparkSession, [(str(r["id"]),) for r in requests],
         "request string")
     return (req.join(metrics, "request", "left")
@@ -8538,7 +8539,7 @@ def es_mget(df: DataFrame, ids: list, id_col: str,
                          "(one output row per id)")
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType.simpleString()
-    req = tiny_df(
+    req = local_relation(
         spark, [(slot, i) for slot, i in enumerate(ids)],
         f"__slot int, {id_col} {id_type}")
     found = (df.select(id_col, *source_cols)
@@ -10170,7 +10171,7 @@ def es_search_shards(spark, *, index: str, num_shards: int,
     rows = [(index, r, es_shard_for_routing(r, num_shards,
                                             num_routing_shards))
             for r in routings]
-    return tiny_df(
+    return local_relation(
         spark, rows, "index string, routing string, shard int")
 
 

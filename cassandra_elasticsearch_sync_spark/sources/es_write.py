@@ -233,7 +233,7 @@ def es_delete_by_query(table: AcidParquetTable, query: dict, *,
 
 from cassandra_elasticsearch_sync_spark.catalog import load_table  # noqa: E402
 from cassandra_elasticsearch_sync_spark.registry import register  # noqa: E402
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 _UBQ_PRED_SQL = "o_orderstatus = 'F' AND o_totalprice >= 150000.0"
 
@@ -421,13 +421,28 @@ def es_update(table: AcidParquetTable, *, id_field: str, id_value,
 
     Missing id: with ``upsert`` the upsert document inserts (ES's
     scripted-upsert/doc-upsert flow); without it the call raises -
-    ES's 404. ``detect_noop`` (ES default, ``doc`` form only): when
-    the partial doc would change nothing, NO commit happens and the
-    result is ``"noop"`` - checked with one point-pruned comparison,
-    the same read ES's noop detection does. Returns
+    ES's 404. An upsert document is checked against the schema on the
+    driver before any Spark job, whether or not it is needed.
+    ``detect_noop`` (ES default, ``doc`` form only): when the partial
+    doc would change nothing, NO commit happens and the result is
+    ``"noop"`` - checked with one point-pruned comparison, the same
+    read ES's noop detection does. Returns
     ``{"result": "updated" | "created" | "noop"}``."""
     if (script is None) == (doc is None):
         raise EsWriteError("exactly one of script/doc is required")
+    if upsert is not None:
+        schema = table.read().schema
+        missing = set(schema.names) - set(upsert) - {id_field}
+        if missing:
+            raise EsWriteError(
+                f"upsert document must carry every column; missing "
+                f"{sorted(missing)}")
+        row = {**upsert, id_field: id_value}
+        try:
+            up = local_relation(
+                table.spark, [tuple(row[c] for c in schema.names)], schema)
+        except ValueError as e:
+            raise EsWriteError(f"upsert document: {e}") from e
     cond = F.col(id_field) == F.lit(id_value)
     point = table.read().filter(cond)
     row_exists = point.limit(1).count() > 0
@@ -436,16 +451,6 @@ def es_update(table: AcidParquetTable, *, id_field: str, id_value,
             raise EsWriteError(
                 f"document {id_field}={id_value!r} not found and no "
                 "upsert was given (ES's 404)")
-        cols = table.read().columns
-        missing = set(cols) - set(upsert) - {id_field}
-        if missing:
-            raise EsWriteError(
-                f"upsert document must carry every column; missing "
-                f"{sorted(missing)}")
-        up = tiny_df(
-            table.spark,
-            [tuple({**upsert, id_field: id_value}[c] for c in cols)],
-            table.read().schema)
         table.merge_into(up, [id_field])
         return {"result": "created"}
     if doc is not None:

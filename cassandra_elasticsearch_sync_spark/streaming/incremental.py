@@ -356,7 +356,7 @@ def l7_run_incremental_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The streaming loop converges to exactly the batch LWW merge, so the
 # oracle is l3's SQL (same output columns).
 from cassandra_elasticsearch_sync_spark.sync.ops import _L3_ORACLE  # noqa: E402
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 
 @register("l7_incremental_sync_stream", "L7", _L3_ORACLE,
@@ -597,7 +597,7 @@ def i8_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint = tempfile.mkdtemp(prefix="ces_i8_ckpt_")
     outdir = tempfile.mkdtemp(prefix="ces_i8_out_")
     try:
-        weights = tiny_df(
+        weights = local_relation(
             spark, _I8_WEIGHTS, "event_type string, weight double"
         )
         q = (
@@ -716,7 +716,7 @@ def _append_watermark_flush_chunks(spark: SparkSession, staged: str,
     ).collect()[0]["m"]
     for i in range(n):
         (
-            tiny_df(
+            local_relation(
                 spark,
                 [
                     (-(10 + i * 2), _SENTINEL_USER, "click", 0.0, "{}"),
@@ -980,7 +980,7 @@ def i11_exactly_once_acid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"name": "total_value", "type": "decimal(38,2)",
                  "nullable": True, "metadata": {}},
             ]})
-        t.init(tiny_df(spark, [], schema))
+        t.init(local_relation(spark, [], schema))
         inc = {
             "n_events": F.coalesce(F.col("tgt.n_events"), F.lit(0))
             + F.col("src.n_events"),

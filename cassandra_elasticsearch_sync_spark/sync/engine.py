@@ -35,14 +35,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cassandra_elasticsearch_sync_spark.localdata import single_split
+from cassandra_elasticsearch_sync_spark.localdata import local_relation, single_split
 from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 from cassandra_elasticsearch_sync_spark.sources.storage import (
     load_watermark,
     save_watermark,
 )
 from cassandra_elasticsearch_sync_spark.sync.ops import lww_merge
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
 
 
 # Rows per bootstrap slice the ladder is thinned towards: a few hundred
@@ -453,13 +452,7 @@ class SyncEngine:
         tolerates no rounding-mode drift."""
         distinct = (F.col("shipped_a") + F.col("shipped_b")
                     - F.col("conflict_keys"))
-        # tiny_df, ONE slice (round 13, localdata.py): the round-12
-        # coalesce(1) of a default-sliced createDataFrame evaluated 32
-        # near-empty Python partitions SERIALLY inside one task -
-        # ~150 ms of JVM<->Python worker handshake per slice, 5-8 s to
-        # materialize 3 rows. One slice = one Python round; order is
-        # preserved either way.
-        return tiny_df(
+        return local_relation(
             self.spark,
             [tuple(r[c] for c in _LEDGER_COLS) for r in self.ledger],
             _LEDGER_SCHEMA,

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from cassandra_elasticsearch_sync_spark.catalog import load_table
 from cassandra_elasticsearch_sync_spark.parity import fmt_ts
 from cassandra_elasticsearch_sync_spark.registry import register
-from cassandra_elasticsearch_sync_spark.localdata import tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 
 # DuckDB twins of the snapshot builders; prepended to every L oracle.
 _SIDES_SQL = """
@@ -1636,7 +1636,7 @@ def l28_acid_compact_small(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.init(side_a(spark, sf_dir))
         for seq in range(8):
             t.merge_into(
-                tiny_df(
+                local_relation(
                     spark,
                     [(90_000_000 + seq, float(seq), "2004-01-01 00:00:00")],
                     "key bigint, price double, version string",

@@ -24,7 +24,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from cassandra_elasticsearch_sync_spark.localdata import local_relation, tiny_df
+from cassandra_elasticsearch_sync_spark.localdata import local_relation
 from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 
 _KV = "key bigint, price double"
@@ -383,12 +383,17 @@ def test_small_source_merge_does_not_shuffle_target(spark, tmp_path,
 
 def test_source_without_size_estimate_keeps_broadcast_plan(
         spark, tmp_path, join_plans, shipped_jobs):
-    """A Python-RDD source (``tiny_df``) reports no usable size, so it
-    never counts as fitting one partition: the merge keeps the
-    broadcast plan and its 3 jobs, not a single-partition join that
-    the planner would then shuffle."""
+    """A source over a one-slice Python RDD reads as one split but
+    reports no usable size (``Long.MaxValue`` bytes), so it never
+    counts as fitting one partition: the merge keeps the broadcast
+    plan and its 3 jobs, not a single-partition join that the planner
+    would then shuffle."""
+    def rdd_source(spark, rows, schema):
+        return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+                                     schema)
+
     assert _merge_cost(spark, str(tmp_path / "t"), shipped_jobs,
-                       tiny_df) == 3
+                       rdd_source) == 3
     _assert_plan(join_plans, "broadcast")
 
 

@@ -227,6 +227,29 @@ def test_single_doc_update(spark, root):
         es_update(t, id_field="key", id_value=1, doc={"nope": 1})
 
 
+def test_bad_upsert_value_fails_on_the_driver_naming_its_column(
+        spark, root, shipped_jobs):
+    """An upsert document whose value does not fit its column (a
+    string for a ``double``) fails before any row is read, with an
+    ``EsWriteError`` that names the column and before any Spark job
+    runs - not as an executor stack trace in the middle of the merge."""
+    from cassandra_elasticsearch_sync_spark.sources.es_write import (
+        es_update,
+    )
+
+    t = _table(spark, root, [(1, "F", 10.0, 0.0)])
+    v0 = t.current_version()
+
+    def write():
+        with pytest.raises(EsWriteError, match="'price'"):
+            es_update(t, id_field="key", id_value=99, doc={"bonus": 1.0},
+                      upsert={"status": "N", "price": "x", "bonus": 1.0})
+
+    assert shipped_jobs(write) == 0
+    assert t.current_version() == v0
+    assert _rows(t.read()) == [(1, "F", 10.0, 0.0)]
+
+
 # -- response counters ride the rewrite commit --------------------------------
 
 _CTR_SCHEMA = "key bigint, status string, price double, day date"

@@ -6,6 +6,7 @@ measures no key ladder)."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import functools
 import re
@@ -541,24 +542,26 @@ def test_acid_read_since_prunes_files_and_matches_filtered_read(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def _package_nodes():
+    """``(file name, node)`` for every AST node of the package's
+    source."""
+    import pathlib
+
+    import cassandra_elasticsearch_sync_spark as pkg
+
+    for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            yield path.name, node
+
+
 def _package_string_constants(pattern: str) -> set[str]:
     """Every string literal in the package's source that matches
     ``pattern`` in full (an AST scan, so comments and docstring prose
     do not count unless they are the whole literal)."""
-    import ast
-    import pathlib
-    import re
-
-    import cassandra_elasticsearch_sync_spark as pkg
-
     name = re.compile(pattern)
-    found = set()
-    for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
-                    and name.fullmatch(node.value)):
-                found.add(node.value)
-    return found
+    return {node.value for _, node in _package_nodes()
+            if isinstance(node, ast.Constant) and isinstance(node.value, str)
+            and name.fullmatch(node.value)}
 
 
 def test_env_knob_inventory():
@@ -577,3 +580,24 @@ def test_package_defines_no_spark_conf_knobs():
     another route, so one cannot come back unnoticed. Tests change
     engine constants with ``monkeypatch`` instead."""
     assert _package_string_constants(r"spark\.cesync\..*") == set()
+
+
+def test_package_builds_no_python_rdd_relation():
+    """Driver-local rows become a DataFrame only through
+    ``localdata.local_relation``, a JVM ``LocalRelation``: no module
+    calls ``parallelize``, ``createDataFrame`` is called in
+    ``localdata.py`` alone, and nothing but ``local_relation`` and
+    ``single_split`` is imported from it. A Python-RDD relation, the
+    builder ``local_relation`` replaced, has no size estimate, costs a
+    Python worker round per evaluation and checks its values only on
+    the executors."""
+    calls, imported = set(), set()
+    for name, node in _package_nodes():
+        if (isinstance(node, ast.Attribute)
+                and node.attr in ("parallelize", "createDataFrame")):
+            calls.add((name, node.attr))
+        elif (isinstance(node, ast.ImportFrom)
+                and (node.module or "").endswith("localdata")):
+            imported |= {a.name for a in node.names}
+    assert calls == {("localdata.py", "createDataFrame")}
+    assert imported == {"local_relation", "single_split"}
