@@ -180,8 +180,7 @@ class AcidParquetTable:
 
     # -- write paths -------------------------------------------------------
 
-    def _write_one_entry(self, df: DataFrame,
-                         into: str | None = None) -> list[str]:
+    def _write_one_entry(self, df: DataFrame) -> list[str]:
         """Write ``df`` as immutable data files, return the entry's
         path - or ``[]`` if the result was empty (detected from the
         written output, NOT with a pre-flight isEmpty(): an
@@ -191,27 +190,12 @@ class AcidParquetTable:
         directory as the manifest unit to stay file-count-frugal at
         small scale (a real format tracks part files individually -
         same protocol). The entry's stats are folded from its footers
-        at commit (``_collect_stats``), not here.
-
-        With ``into`` (an uncommitted entry this transaction wrote),
-        the part files are appended to that entry instead."""
+        at commit (``_collect_stats``), not here."""
         import shutil
 
-        d = into or os.path.join(self.root, _DATA, uuid.uuid4().hex)
+        d = os.path.join(self.root, _DATA, uuid.uuid4().hex)
         df = self._enforce_constraints(self._apply_generated(df))
-        before = set(os.listdir(d)) if into else set()
-        df.write.mode("append" if into else "errorifexists").parquet(d)
-        if into:
-            # an empty result still writes one 0-row part file: drop
-            # it, the entry stays as the earlier write left it
-            import pyarrow.parquet as pq
-
-            for f in set(os.listdir(d)) - before:
-                p = os.path.join(d, f)
-                if f.endswith(".parquet") and pq.read_metadata(p).num_rows == 0:
-                    for q in (p, os.path.join(d, f".{f}.crc")):
-                        if os.path.exists(q):
-                            os.remove(q)
+        df.write.mode("errorifexists").parquet(d)
         if not any(f.endswith(".parquet") for f in os.listdir(d)):
             shutil.rmtree(d, ignore_errors=True)
             return []
@@ -694,8 +678,9 @@ class AcidParquetTable:
         absent from the dict keeps the default whole-row behavior
         (take the src value).
 
-        Plan: the affected entries are rewritten in one of three ways,
-        with the same row expressions and one commit each way.
+        Plan: the affected entries are rewritten by one
+        ``tgt FULL OUTER JOIN src`` write, whose inserts come out of
+        the same pass, and one commit, planned one of two ways.
 
         1. Single partition. When the affected entries (with their
            merge-on-read deletes applied) and the source each already
@@ -703,31 +688,13 @@ class AcidParquetTable:
            the session's ``spark.sql.maxSinglePartitionBytes`` (128 MB
            by default, the bound Spark's planner puts on a
            single-partition input), both sides are coalesced to the
-           one partition they read anyway and joined ``FULL OUTER``:
-           no exchange, no broadcast, and the inserts come out of the
-           same write (one job). Spark's file planning makes a scan
-           one split only when it is small (``localdata.single_split``);
-           a source without a size estimate (a relation over an RDD
-           built outside SQL) never counts.
-        2. Broadcast. Otherwise, when the source row count is known
-           (``source_stats`` or the merge's own pre-pass) and at most
-           ``BROADCAST_SOURCE_ROW_CAP`` - the one cap, which also
-           picks the broadcast file probe - the source is broadcast
-           into ``tgt LEFT OUTER JOIN src``, so the target is scanned
-           in place and never shuffled. The write observes the set of
-           matched source keys; the source rows outside it (a filter
-           holding those keys as literals) are appended, in a second
-           write, to the entries the rewrite just wrote, routed by the
-           same slice bounds.
-        3. Shuffled ``FULL OUTER JOIN`` in every other case (count
-           unknown or above the cap, no affected entry, a clustered
-           rewrite without usable slice bounds, or no observation
-           produced).
-
-        The broadcast plan's insert write re-reads the source; the
-        merge allows that because the source is either persisted for
-        the merge's own passes or vouched for by the caller's
-        ``source_stats``, which promise a materialized source.
+           one partition they read anyway: no exchange, no broadcast,
+           one job. Spark's file planning makes a scan one split only
+           when it is small (``localdata.single_split``); a source
+           without a size estimate (a relation over an RDD built
+           outside SQL) never counts.
+        2. Shuffled, in every other case: both sides are
+           repartitioned on the key.
         """
         base = self.current_version()
         manifest = self._manifest(base)
@@ -768,26 +735,10 @@ class AcidParquetTable:
             nmbs_assignments=not_matched_by_source_assignments,
             source_stats=source_stats)
 
-    # Above this many SOURCE rows a merge stops broadcasting the
-    # source: the file probe falls back to a shuffle left-semi join
-    # and the rewrite to a full outer join. The rewrite sets the
-    # bound: it broadcasts whole source rows, its write brings every
-    # matched key back to the driver, and when a source row is left
-    # to insert, the insert write's filter holds all of them as
-    # literals: about 0.5 ms per key to build and plan, on top of the
-    # insert write itself. Measured by
-    # tools/merge_plan_cost.py against one 2M-row entry on 4 cores,
-    # in seconds, broadcast vs full outer. With one row to insert:
-    # 2.9 vs 3.3 at 500 source rows and 3.8 vs 2.6 at 1,000 (medians
-    # of 3), 7.4 vs 2.3 at 10,000 and 56 vs 2.6 at 100,000. With
-    # every row matched: 2.5 vs 3.1 at 1,000 (median of 3), 2.1 vs
-    # 2.7 at 100,000 and 4.2 vs 2.9 at 1,000,000. The broadcast
-    # plan's JVM peak RSS was about half the full outer join's (1.0
-    # vs 1.9 GiB at 500 and 1,000 rows). A ship set or a CQL batch
-    # stays below the cap; a backfill takes the shuffle plans. The
-    # cap binds only where the single-partition plan does not: a
-    # merge whose inputs each read one split takes that plan at any
-    # source row count.
+    # Above this many SOURCE rows the file probe stops broadcasting
+    # the source's keys and takes a shuffle left-semi join: a backfill
+    # must never broadcast its key set (VERDICT r4). A ship set or a
+    # CQL batch stays below the cap.
     BROADCAST_SOURCE_ROW_CAP = 500
 
     def _probe_semi_join(self, with_file: DataFrame, skeys: DataFrame,
@@ -851,19 +802,16 @@ class AcidParquetTable:
         # Materialize the source for the duration of the merge when a
         # second pass reads it (the Delta merge-source-materialization
         # trade, and its correctness rationale too): the pre-pass, the
-        # file probe, the rewrite and the broadcast plan's insert write
-        # then read the SAME source bytes instead of recomputing the
-        # plan - and a non-deterministic source (a changing view, a
-        # re-read of a mutating upstream) cannot give them different
-        # answers. The pre-pass runs unless the caller passed
-        # ``source_stats``; the probe runs unless those stats prune the
-        # candidates to <=1 entry. With neither, only the rewrite and
-        # the insert write read the source, and a caller that vouches
-        # for it with ``source_stats`` has materialized it already (the
-        # engine's checkpointed ship sets, a CQL batch's driver rows):
-        # a cache would cost a job (AQE materializes it as its own
-        # stage) for nothing. MEMORY_AND_DISK: executor-distributed,
-        # spills instead of OOMing on a backfill-sized source.
+        # file probe and the rewrite then read the SAME source bytes
+        # instead of recomputing the plan - and a non-deterministic
+        # source (a changing view, a re-read of a mutating upstream)
+        # cannot give them different answers. The pre-pass runs unless
+        # the caller passed ``source_stats``; the probe runs unless
+        # those stats prune the candidates to <=1 entry. With neither,
+        # only the rewrite reads the source, once: a cache would cost
+        # a job (AQE materializes it as its own stage) for nothing.
+        # MEMORY_AND_DISK: executor-distributed, spills instead of
+        # OOMing on a backfill-sized source.
         from pyspark import StorageLevel
 
         key_bounds = None
@@ -977,11 +925,11 @@ class AcidParquetTable:
             # a NULL-key target row also has NULL (its payload would be
             # taken from the absent source row, i.e. wiped).
             tgt_rows, src_rows = self._read_entries(manifest, affected), source
-            # The single-partition plan (merge_into's docstring): with
-            # both sides in the one split they already read, the full
-            # outer join needs no exchange and no broadcast.
-            one_part = bool(affected) and single_split(tgt_rows, src_rows)
-            if one_part:
+            # The plan choice of merge_into's docstring: with both sides
+            # in the one split they already read, the full outer join
+            # needs no exchange and no broadcast; otherwise it shuffles
+            # both sides.
+            if affected and single_split(tgt_rows, src_rows):
                 tgt_rows, src_rows = tgt_rows.coalesce(1), src_rows.coalesce(1)
             tgt = tgt_rows.withColumn("__in_tgt", F.lit(True)).alias("tgt")
             src = src_rows.withColumn("__in_src", F.lit(True)).alias("src")
@@ -1043,59 +991,9 @@ class AcidParquetTable:
                     for col, c in zip(cols, schema.names)
                 ]
 
-            def rewrite(joined: DataFrame, into: list[str] | None = None):
-                return self._write_rewrite(joined.filter(keep).select(*cols),
-                                           manifest, affected, into=into)
-
-            # The plan choice of merge_into's docstring. Over more
-            # than one split a full outer join repartitions the
-            # whole affected entry to change a few rows; the broadcast
-            # LEFT OUTER join scans it in place but cannot see the
-            # source rows that match nothing, so the write observes
-            # the matched source keys (a set: immune to a writer that
-            # evaluates its input twice) and a second write appends
-            # the rest - the same keep/cols over an empty target side -
-            # to the entries just written. The sampling clustered
-            # writer has no slice bounds to route those by.
-            # Every matched key comes back to the driver and, when a
-            # row is left to insert, into the plan as a literal: that
-            # cost is what bounds the cap for this plan.
-            cb = manifest.get("cluster_by")
-            small = (not one_part and bool(affected) and n_src_rows is not None
-                     and n_src_rows <= self.BROADCAST_SOURCE_ROW_CAP
-                     and not (cb and len(affected) > 1 and self._slice_uppers(
-                         manifest, affected, cb[0], schema) is None))
-            if small:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                key_set = F.collect_set(F.when(
-                    t_in & s_in, self._key_value(source, keys, "src.")))
-                fresh = rewrite(
-                    tgt.join(F.broadcast(src), cond, "left_outer")
-                    .observe(obs, key_set.alias("matched")))
-                matched = self._observed(obs, "matched")
-                if matched is None:
-                    # no observation (the optimizer can remove the
-                    # observed node, see _observed): the matched set is
-                    # unknown, so redo the rewrite the full way; what
-                    # this write left is never committed (vacuum)
-                    small = False
-                elif len(matched) < n_src_rows:
-                    # the matched keys go back into the plan as literals,
-                    # not as a relation: broadcasting one is a job
-                    inserts = source
-                    if matched:
-                        inserts = source.filter(~F.coalesce(
-                            self._key_value(source, keys).isin(matched),
-                            F.lit(False)))
-                    fresh = rewrite(
-                        tgt.limit(0).alias("tgt").join(
-                            inserts.withColumn("__in_src", F.lit(True))
-                            .alias("src"), cond, "right_outer"),
-                        into=fresh)
-            if not small:
-                fresh = rewrite(tgt.join(src, cond, "full_outer"))
+            fresh = self._write_rewrite(
+                tgt.join(src, cond, "full_outer").filter(keep).select(*cols),
+                manifest, affected)
             return self._commit_rewrite(
                 manifest, commit_base, affected, fresh,
                 manifests_dir=commit_dir, txns=txns)
@@ -1162,29 +1060,6 @@ class AcidParquetTable:
         return self._commit_rewrite(
             manifest, base, affected, fresh,
             operation=operation, operation_metrics={metric: int(n_matched)})
-
-    @staticmethod
-    def _key_value(df: DataFrame, keys: list[str], prefix: str = "") -> Column:
-        """The merge key of ``df`` (referenced as ``prefix`` + name) as
-        one value that survives a trip through the driver exactly and
-        goes back into a plan as one literal: the column itself, the
-        JSON of a compound key. A TIMESTAMP travels as epoch
-        microseconds and a TIMESTAMP_NTZ as its string form -
-        collected, either comes back as a naive wall-clock datetime,
-        which a DST fold turns back into the wrong instant (and JSON
-        would cut both to milliseconds)."""
-        from pyspark.sql.types import TimestampNTZType, TimestampType
-
-        def exact(k):
-            c, t = F.col(f"{prefix}`{k}`"), df.schema[k].dataType
-            if isinstance(t, TimestampType):
-                return F.unix_micros(c)
-            if isinstance(t, TimestampNTZType):
-                return c.cast("string")
-            return c
-
-        return exact(keys[0]) if len(keys) == 1 else F.to_json(F.struct(
-            *[exact(k).alias(k) for k in keys]))
 
     @staticmethod
     def _observed(obs, name: str):
@@ -1779,8 +1654,7 @@ class AcidParquetTable:
 
     def _write_clustered(self, df: DataFrame, cluster_by: list[str],
                          n_slices: int, zorder: bool = False,
-                         uppers: list | None = None,
-                         into: str | None = None) -> list[str]:
+                         uppers: list | None = None) -> list[str]:
         """The one clustered-write core (``optimize``,
         ``init_clustered``, sliced rewrites, ``compact_small``): one
         distributed job - slice assignment, Hive-style slice write -
@@ -1791,12 +1665,10 @@ class AcidParquetTable:
         cluster key: one shuffle keyed on the deterministic slice id,
         no sampling pass. Without them, ``repartitionByRange`` samples
         the input into ``n_slices`` ranges (on the Morton key when
-        ``zorder``). With ``into`` (the uncommitted root of an earlier
-        write with the same ``uppers``) the slices are appended there,
-        and every slice directory under it is returned."""
+        ``zorder``)."""
         key = F.col(cluster_by[0])
         sort_key = self._zvalue(df, cluster_by) if zorder else key
-        d = into or os.path.join(self.root, _DATA, uuid.uuid4().hex)
+        d = os.path.join(self.root, _DATA, uuid.uuid4().hex)
         # CHECK constraints and generated columns apply to every data
         # write, including the clustered bootstrap/optimize path (this
         # writer does not go through _write_one_entry)
@@ -1818,8 +1690,7 @@ class AcidParquetTable:
                    .sortWithinPartitions("__zk")
                    .withColumn("__slice", F.spark_partition_id())
                    .drop("__zk"))
-        out.write.partitionBy("__slice").mode(
-            "append" if into else "errorifexists").parquet(d)
+        out.write.partitionBy("__slice").mode("errorifexists").parquet(d)
         slices = sorted(
             os.path.join(d, sub)
             for sub in os.listdir(d) if sub.startswith("__slice=")
@@ -1830,8 +1701,7 @@ class AcidParquetTable:
         return slices
 
     def _write_rewrite(self, df: DataFrame, manifest: dict,
-                       affected: list[str],
-                       into: list[str] | None = None) -> list[str]:
+                       affected: list[str]) -> list[str]:
         """Write a maintenance rewrite's output; returns the new
         entries' paths (their stats are folded from the footers at
         commit, ``_commit_rewrite``). A rewrite of one entry, or on a
@@ -1853,20 +1723,14 @@ class AcidParquetTable:
         so the join runs once, and the layout is MORE stable (slices
         keep their historical boundaries instead of drifting with
         each resample). Entries without usable numeric/string key
-        bounds fall back to the sampling writer.
-
-        ``into`` (the entries an earlier call in this transaction
-        returned) appends ``df`` to them, routed by the same slice
-        bounds: the entry count and slicing are those of ONE write of
-        both inputs."""
+        bounds fall back to the sampling writer."""
         cb = manifest.get("cluster_by")
         if cb and len(affected) > 1:
             schema = StructType.fromJson(manifest["schema"])
             return self._write_clustered(
                 df, cb, len(affected),
-                uppers=self._slice_uppers(manifest, affected, cb[0], schema),
-                into=os.path.dirname(into[0]) if into else None)
-        return self._write_one_entry(df, into=into[0] if into else None)
+                uppers=self._slice_uppers(manifest, affected, cb[0], schema))
+        return self._write_one_entry(df)
 
     @staticmethod
     def _slice_uppers(manifest: dict, affected: list[str], key: str,

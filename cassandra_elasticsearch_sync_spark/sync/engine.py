@@ -142,15 +142,11 @@ class AcidStore:
     with per-entry key stats so the merge probe prunes at the manifest
     before touching bytes. This is VERDICT r3's #1: the engine's own
     loop on the lakehouse store it ships, 1% delta -> ~1% rewrite.
-    The apply takes one of ``merge_into``'s three plans. When the ship
-    set and the touched entries each read as one split and together
-    fit the session's ``spark.sql.maxSinglePartitionBytes``, the merge
-    is a full outer join over that one partition: one write job per
-    direction, with no exchange and no broadcast. Otherwise, a ship
-    set of at most ``AcidParquetTable.BROADCAST_SOURCE_ROW_CAP`` rows
-    (its row count rides ``key_stats``) is broadcast into the scan of
-    the touched entries, so the rewrite never shuffles the target; a
-    larger one takes the shuffled full outer join."""
+    The apply is ``merge_into``'s full outer join. When the ship set
+    and the touched entries each read as one split and together fit
+    the session's ``spark.sql.maxSinglePartitionBytes``, it runs over
+    that one partition: one write job per direction, with no exchange
+    and no broadcast. Otherwise it shuffles both sides."""
 
     def __init__(self, spark: SparkSession, root: str,
                  init: DataFrame | None = None, n_slices: int = 16):

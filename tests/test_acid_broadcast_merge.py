@@ -1,18 +1,14 @@
-"""The three MERGE plans (sources/acid.py ``_merge_against``). When the
-affected entries and the source each already read as one split and
-together fit ``spark.sql.maxSinglePartitionBytes`` (the planner's own
-bound), they are joined FULL OUTER in that one partition, with no
-exchange and no broadcast. Otherwise a source of at most
-``BROADCAST_SOURCE_ROW_CAP`` rows is broadcast into a LEFT OUTER join
-over the affected entries, and its unmatched rows are appended to the
-entries the rewrite wrote; above the cap the full outer join shuffles
-both sides. Lowering the bound selects the broadcast plan; lowering it
-and forcing the cap to 0 selects the shuffled full outer join. All
-three plans must commit the same table.
+"""The two plans of the one MERGE join (sources/acid.py
+``_merge_against``), ``tgt FULL OUTER JOIN src``. When the affected
+entries and the source each already read as one split and together
+fit ``spark.sql.maxSinglePartitionBytes`` (the planner's own bound),
+they are joined in that one partition, with no exchange and no
+broadcast. Otherwise the join shuffles both sides. Lowering the bound
+selects the shuffled plan. Both plans must commit the same table.
 
 Targets are written as one part file per entry, the layout a store's
 bootstrap and every single-partition rewrite leave; an entry of
-several part files reads as several splits and keeps the broadcast
+several part files reads as several splits and takes the shuffled
 plan."""
 
 from __future__ import annotations
@@ -29,7 +25,7 @@ from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 
 _KV = "key bigint, price double"
 _BOUND = "spark.sql.maxSinglePartitionBytes"
-PLANS = ("single_partition", "broadcast", "full_outer")
+PLANS = ("single_partition", "full_outer")
 
 
 def _rows(df):
@@ -45,28 +41,25 @@ def join_plans(monkeypatch):
     seen: list[tuple[str, str]] = []
     real = AcidParquetTable._write_rewrite
 
-    def spy(self, df, manifest, affected, into=None):
+    def spy(self, df, manifest, affected):
         qe = df._jdf.queryExecution()
         how = re.search(r"Join (\w+)", qe.analyzed().toString()).group(1)
         seen.append((how, qe.executedPlan().toString()))
-        return real(self, df, manifest, affected, into=into)
+        return real(self, df, manifest, affected)
 
     monkeypatch.setattr(AcidParquetTable, "_write_rewrite", spy)
     return seen
 
 
 @pytest.fixture()
-def force_plan(spark, monkeypatch):
+def force_plan(spark):
     """``force_plan(name)`` selects one of ``PLANS`` for a merge whose
     inputs each read one split: a 1-byte single-partition bound leaves
-    the broadcast plan, and that bound with the cap at 0 leaves the
-    shuffled full outer join. The bound is restored afterwards."""
-    old, cap = spark.conf.get(_BOUND), AcidParquetTable.BROADCAST_SOURCE_ROW_CAP
+    the shuffled full outer join. The bound is restored afterwards."""
+    old = spark.conf.get(_BOUND)
 
     def force(plan):
         spark.conf.set(_BOUND, old if plan == "single_partition" else "1")
-        monkeypatch.setattr(AcidParquetTable, "BROADCAST_SOURCE_ROW_CAP",
-                            0 if plan == "full_outer" else cap)
 
     yield force
     spark.conf.set(_BOUND, old)
@@ -80,27 +73,19 @@ def _exchanges(plan: str) -> list[str]:
 
 
 def _assert_plan(join_plans, plan, deletes=False):
-    """The rewrite writes of one merge took ``plan``. With ``deletes``
+    """The rewrite write of one merge took ``plan``. With ``deletes``
     the target is read through a broadcast anti-join with its pending
     merge-on-read delete keys, whose distinct is one more shuffle and
     one more broadcast, both under the target side."""
-    hows = [how for how, _ in join_plans]
-    first = join_plans[0][1]
+    assert [how for how, _ in join_plans] == ["FullOuter"]
+    plan_str = join_plans[0][1]
     n_mor = 1 if deletes else 0
     if plan == "single_partition":
-        assert hows == ["FullOuter"]
-        assert len(_exchanges(first)) == n_mor
-        assert first.count("BroadcastExchange") == n_mor
-    elif plan == "broadcast":
-        # the rewrite, then (when a source row matched nothing) the
-        # insert write over the empty target side
-        assert hows in (["LeftOuter"], ["LeftOuter", "RightOuter"])
-        assert re.search(r"BroadcastHashJoin .*LeftOuter, BuildRight", first)
-        assert len(_exchanges(first)) == n_mor
+        assert len(_exchanges(plan_str)) == n_mor
+        assert plan_str.count("BroadcastExchange") == n_mor
     else:
-        assert hows == ["FullOuter"]
-        assert re.search(r"SortMergeJoin .*FullOuter", first)
-        assert len(_exchanges(first)) == 2 + n_mor
+        assert re.search(r"SortMergeJoin .*FullOuter", plan_str)
+        assert len(_exchanges(plan_str)) == 2 + n_mor
 
 
 # -- NULL-key target rows ------------------------------------------------
@@ -130,7 +115,7 @@ def test_merge_keeps_null_key_target_row(spark, tmp_path, force_plan,
     _assert_plan(join_plans, plan)
 
 
-# -- the three plans commit the same table ---------------------------------
+# -- both plans commit the same table ------------------------------------
 
 def _ts(d):
     return dt.datetime(2001, 1, d, 12, 30)
@@ -243,7 +228,7 @@ _CASES = {
 
 # Cases whose affected entries read as several splits: the
 # single-partition plan does not apply, the default bound gives the
-# broadcast plan.
+# shuffled plan.
 _SEVERAL_SPLITS = {"sliced_three_entries"}
 
 
@@ -272,72 +257,55 @@ def _merge_once(spark, root, case):
 def test_broadcast_merge_equals_full_outer_merge(spark, tmp_path, force_plan,
                                                  join_plans, case):
     """Same rows, same manifest entry count, same rows per entry: the
-    single-partition plan and the broadcast plan with its appended
-    inserts commit what the shuffled full outer join commits."""
+    single-partition plan commits what the shuffled plan commits."""
     got = {}
     for plan in PLANS:
         force_plan(plan)
         del join_plans[:]
         got[plan] = _merge_once(spark, str(tmp_path / plan), _CASES[case])
-        taken = ("broadcast" if plan == "single_partition"
-                 and case in _SEVERAL_SPLITS else plan)
+        taken = "full_outer" if case in _SEVERAL_SPLITS else plan
         _assert_plan(join_plans, taken, deletes=case == "pending_mor_deletes")
     assert got["single_partition"] == got["full_outer"]
-    assert got["broadcast"] == got["full_outer"]
 
 
 def test_broadcast_merge_timestamp_keys_in_a_dst_fold(spark, tmp_path,
-                                                      force_plan):
-    """The matched keys come back to the driver and go into the insert
-    filter as literals. A collected TIMESTAMP is a naive local datetime,
-    and the two instants of a DST fold (01:30 EDT and 01:30 EST) read
-    back as the same one; sent back as such, the later instant was not
-    filtered out and was inserted a second time. Timestamp keys travel
-    as epoch microseconds."""
+                                                      force_plan, join_plans):
+    """The two instants of a DST fold (01:30 EDT and 01:30 EST) are
+    two keys, though a TIMESTAMP collected in that zone reads back as
+    the same naive local datetime: on either plan, a merge that
+    updates the later instant and inserts a third commits three rows.
+    The process zone is America/New_York."""
     import os
     import time
 
-    force_plan("broadcast")
     fold = [1636263000, 1636266600]  # 2021-11-07 01:30 EDT, 01:30 EST
+    want = [(fold[0], 1.0), (fold[1], 20.0), (fold[1] + 7200, 3.0)]
+
+    def df(rows):
+        return local_relation(spark, rows, "s bigint, price double").select(
+            F.timestamp_seconds("s").alias("key"), "price")
+
     old_tz = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"
     time.tzset()
     try:
-        def df(rows):
-            return spark.createDataFrame(rows, "s bigint, price double").select(
-                F.timestamp_seconds("s").alias("key"), "price")
-
-        t = AcidParquetTable(spark, str(tmp_path / "t"))
-        t.init(df([(fold[0], 1.0), (fold[1], 2.0)]))
-        t.merge_into(df([(fold[1], 20.0), (fold[1] + 7200, 3.0)]), ["key"],
-                     assume_unique_keys=True, source_stats=(2, None, None))
-        got = t.read().select(F.unix_seconds("key"), "price")
+        for plan in PLANS:
+            force_plan(plan)
+            del join_plans[:]
+            t = AcidParquetTable(spark, str(tmp_path / plan))
+            t.init(df([(fold[0], 1.0), (fold[1], 2.0)]).coalesce(1))
+            t.merge_into(df([(fold[1], 20.0), (fold[1] + 7200, 3.0)]),
+                         ["key"], assume_unique_keys=True,
+                         source_stats=(2, None, None))
+            _assert_plan(join_plans, plan)
+            assert _rows(t.read().select(F.unix_seconds("key"),
+                                         "price")) == want
     finally:
         if old_tz is None:
             os.environ.pop("TZ")
         else:
             os.environ["TZ"] = old_tz
         time.tzset()
-    assert _rows(got) == [(fold[0], 1.0), (fold[1], 20.0),
-                          (fold[1] + 7200, 3.0)]
-
-
-def test_merge_without_observation_takes_full_outer_join(
-        spark, tmp_path, monkeypatch, force_plan, join_plans):
-    """When the write produces no observation (the optimizer can drop
-    an observed node, see ``_observed``), the merge must not guess the
-    matched keys: it redoes the rewrite as the full outer join, and the
-    first write's files are never committed."""
-    force_plan("broadcast")
-    monkeypatch.setattr(AcidParquetTable, "_observed",
-                        staticmethod(lambda obs, name: None))
-    t = AcidParquetTable(spark, str(tmp_path / "t"))
-    t.init(spark.createDataFrame([(1, 1.0), (2, 2.0)], _KV))
-    t.merge_into(spark.createDataFrame([(2, 20.0), (3, 3.0)], _KV), ["key"],
-                 assume_unique_keys=True, source_stats=(2, 2, 3))
-    assert [how for how, _ in join_plans] == ["LeftOuter", "FullOuter"]
-    assert _rows(t.read()) == [(1, 1.0), (2, 20.0), (3, 3.0)]
-    assert len(t._manifest(t.current_version())["files"]) == 1
 
 
 # -- the executed plan and its jobs ---------------------------------------
@@ -365,14 +333,9 @@ def test_small_source_merge_does_not_shuffle_target(spark, tmp_path,
     """With AQE on. Both sides read one split, so the merge is 1
     job: the write of a full outer join over the two coalesced sides,
     with no exchange and no broadcast, the insert out of the same pass.
-    With the bound lowered it is the broadcast plan, a BroadcastHashJoin
-    LeftOuter that scans the target in place with no shuffle exchange:
-    3 jobs, the source's broadcast build, the rewrite write and the
-    insert write, whose source filter holds the matched keys as
-    literals (a relation of them would be broadcast, a job of its own).
-    With the cap at 0 too it is the SortMergeJoin FullOuter: 3 jobs,
+    With the bound lowered it is the SortMergeJoin FullOuter: 3 jobs,
     two shuffle-map stages and the write."""
-    want = {"single_partition": 1, "broadcast": 3, "full_outer": 3}
+    want = {"single_partition": 1, "full_outer": 3}
     for plan in PLANS:
         force_plan(plan)
         del join_plans[:]
@@ -381,11 +344,11 @@ def test_small_source_merge_does_not_shuffle_target(spark, tmp_path,
         _assert_plan(join_plans, plan)
 
 
-def test_source_without_size_estimate_keeps_broadcast_plan(
+def test_source_without_size_estimate_takes_shuffled_plan(
         spark, tmp_path, join_plans, shipped_jobs):
     """A source over a one-slice Python RDD reads as one split but
     reports no usable size (``Long.MaxValue`` bytes), so it never
-    counts as fitting one partition: the merge keeps the broadcast
+    counts as fitting one partition: the merge takes the shuffled
     plan and its 3 jobs, not a single-partition join that the planner
     would then shuffle."""
     def rdd_source(spark, rows, schema):
@@ -394,16 +357,16 @@ def test_source_without_size_estimate_keeps_broadcast_plan(
 
     assert _merge_cost(spark, str(tmp_path / "t"), shipped_jobs,
                        rdd_source) == 3
-    _assert_plan(join_plans, "broadcast")
+    _assert_plan(join_plans, "full_outer")
 
 
-def test_target_in_several_splits_keeps_broadcast_plan(spark, tmp_path,
-                                                       join_plans,
-                                                       shipped_jobs):
+def test_target_in_several_splits_takes_shuffled_plan(spark, tmp_path,
+                                                      join_plans,
+                                                      shipped_jobs):
     """An entry of three part files reads as three splits, so at the
-    default bound the merge is not put into one partition: it keeps
-    the broadcast plan and its 3 jobs, the target scanned in place by
-    one task per split."""
+    default bound the merge is not put into one partition: it takes
+    the shuffled plan and its 3 jobs, two shuffle-map stages and the
+    write."""
     assert _merge_cost(spark, str(tmp_path / "t"), shipped_jobs,
                        local_relation, parts=3) == 3
-    _assert_plan(join_plans, "broadcast")
+    _assert_plan(join_plans, "full_outer")

@@ -158,9 +158,7 @@ def _parity_df(spark, lo, hi):
     )
 
 
-def _merge(spark, t, cap, monkeypatch):
-    if cap is not None:
-        monkeypatch.setattr(AcidParquetTable, "BROADCAST_SOURCE_ROW_CAP", cap)
+def _merge(spark, t):
     # 5 matched keys and 5 inserts
     t.merge_into(_parity_df(spark, 995, 1005)
                  .withColumn("price", F.col("price") + 1), ["key"])
@@ -170,28 +168,25 @@ def _merge(spark, t, cap, monkeypatch):
 _WRITERS = {
     "init": (False, None),
     "init_clustered": (True, None),
-    "update_where": (False, lambda spark, t, mp: t.update_where(
+    "update_where": (False, lambda spark, t: t.update_where(
         F.col("key") < 10, {"price": F.col("price") * 2})),
-    "merge_broadcast_insert": (
-        False, lambda spark, t, mp: _merge(spark, t, None, mp)),
-    "merge_full_outer": (False, lambda spark, t, mp: _merge(spark, t, 0, mp)),
-    "replace_where": (False, lambda spark, t, mp: t.replace_where(
+    "merge_full_outer": (False, _merge),
+    "replace_where": (False, lambda spark, t: t.replace_where(
         F.col("key") < 100, _parity_df(spark, 0, 100)
         .withColumn("side", F.lit("replaced")))),
     # every entry is small and they add up to several targets
-    "compact_small_clustered": (True, lambda spark, t, mp: t.compact_small(
+    "compact_small_clustered": (True, lambda spark, t: t.compact_small(
         target_bytes=max(t._entry_bytes(d) for d in
                          t._manifest(t.current_version())["files"]) + 1)),
-    "compact_small_one_entry": (True, lambda spark, t, mp: t.compact_small(
+    "compact_small_one_entry": (True, lambda spark, t: t.compact_small(
         target_bytes=1 << 30)),
-    "optimize_zorder": (True, lambda spark, t, mp: t.optimize(
+    "optimize_zorder": (True, lambda spark, t: t.optimize(
         ["key", "price"], n_slices=4, zorder=True)),
 }
 
 
 @pytest.mark.parametrize("writer", list(_WRITERS))
-def test_clustered_write_stats_equal_job_stats(spark, tmp_path, monkeypatch,
-                                               writer):
+def test_clustered_write_stats_equal_job_stats(spark, tmp_path, writer):
     """Every writer's committed stats (folded from the parquet footers
     at commit) equal what the aggregate job computes over the same
     entries, on every engine stats type."""
@@ -204,7 +199,7 @@ def test_clustered_write_stats_equal_job_stats(spark, tmp_path, monkeypatch,
         t.init(df)
     if commit is not None:
         v = t.current_version()
-        commit(spark, t, monkeypatch)
+        commit(spark, t)
         assert t.current_version() == v + 1
     m = t._manifest(t.current_version())
     from pyspark.sql.types import StructType

@@ -1030,10 +1030,8 @@ def test_merge_with_caller_measured_source_stats(spark, root):
     one fewer Spark job, and the stats still prune files: a merge
     whose key range misses an entry leaves that entry untouched.
 
-    With AQE off this merge is 3 jobs (the full outer join was 1: its
-    two shuffles were stages inside the write job). The 2-row source
-    is broadcast, and a broadcast build is a job of its own; so is the
-    second write that appends the insert (key 4)."""
+    With AQE off this merge is 1 job: the full outer join's two
+    shuffles are stages inside the write job."""
     t = _table(spark, root, [(1, 10.0, 1), (2, 20.0, 1), (3, 30.0, 1)])
     src = spark.createDataFrame(
         [(2, 99.0, 2), (4, 40.0, 2)], "key bigint, price double, version int")
@@ -1051,9 +1049,9 @@ def test_merge_with_caller_measured_source_stats(spark, root):
     # no pre-pass aggregate job (round 12), and on a single-entry
     # table no semi-join file probe either (round 13: stats pruning
     # already reduced the candidate set to <=1 entry, which a probe
-    # cannot shrink further in a way that changes the rewrite): source
-    # broadcast build, rewrite write, insert write
-    assert n_jobs == 3
+    # cannot shrink further in a way that changes the rewrite): the
+    # write
+    assert n_jobs == 1
     assert _rows(t.read()) == [
         (1, 10.0, 1), (2, 99.0, 2), (3, 30.0, 1), (4, 40.0, 2)
     ]
@@ -1216,17 +1214,12 @@ def test_write_path_action_count_pinned(spark, tmp_path):
     un-fused source pass sneaking back into init/merge surfaces HERE
     as a failing count, not as a bench drift three rounds later.
 
-    Expected: init = 1 (the write job - per-entry stats ride it via
-    an Observation); merge = 6 (fused source pre-pass, file-probe
-    collect plus its broadcast build, the source's broadcast build,
-    the rewrite write, the insert write). The probe is skipped only
-    when CALLER-measured stats leave <=1 candidate entry; this
-    unvouched merge probes, so an entry it matches nothing in keeps
-    its path. The full outer
-    rewrite this merge ran before was 4 jobs with AQE off (its
-    shuffles were stages inside the write job); broadcasting the
-    100-row source and appending its 50 inserts in a second write
-    makes each of those a job of its own. The pre-diet shapes were 2
+    Expected: init = 1 (the write job); merge = 4 (fused source
+    pre-pass, file-probe collect plus its broadcast build, the full
+    outer rewrite write, whose shuffles are stages inside it). The
+    probe is skipped only when CALLER-measured stats leave <=1
+    candidate entry; this unvouched merge probes, so an entry it
+    matches nothing in keeps its path. The pre-diet shapes were 2
     and 7+."""
     from cassandra_elasticsearch_sync_spark.sources.acid import (
         AcidParquetTable,
@@ -1249,7 +1242,7 @@ def test_write_path_action_count_pinned(spark, tmp_path):
         upd = spark.createDataFrame(
             [(i, i * 3) for i in range(50, 150)], "k long, v long")
         assert jobs("pin-init", lambda: t.init(src)) == 1
-        assert jobs("pin-merge", lambda: t.merge_into(upd, ["k"])) == 6
+        assert jobs("pin-merge", lambda: t.merge_into(upd, ["k"])) == 4
         # and the merge actually landed
         assert t.read().count() == 150
     finally:

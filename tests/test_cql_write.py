@@ -621,15 +621,15 @@ def test_cql_batch_job_count_pinned(spark, tmp_path, shipped_jobs):
         pq.read_metadata(os.path.join(entry, f)).num_rows for f in parts)
 
 
-def test_cql_batch_into_several_splits_keeps_broadcast_plan(table,
-                                                            shipped_jobs):
+def test_cql_batch_into_several_splits_takes_shuffled_plan(table,
+                                                           shipped_jobs):
     """The fixture's entry holds several part files (its three rows
     spread over the session's slices), so it reads as several splits
-    and the batch is not put into one partition: its rows are
-    broadcast into the scan of the entry, 2 jobs (the build and the
-    write)."""
+    and the batch is not put into one partition: the full outer join
+    shuffles the batch rows and the entry, 3 jobs (two shuffle-map
+    stages and the write)."""
     assert shipped_jobs(lambda: apply_cql_writes(
-        table, KEY, _price_batch(range(1, 4), ".25"))) == 2
+        table, KEY, _price_batch(range(1, 4), ".25"))) == 3
     assert _rows(table) == [(k, k + 0.25, 300) for k in range(1, 4)]
 
 

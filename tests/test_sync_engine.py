@@ -264,14 +264,14 @@ def test_ledger_records_slo_metrics(spark):
 
 def _trickle_cycle_cost(spark, shipped_cost, monkeypatch):
     """(jobs, tasks) of an 18-row cycle between two single-entry
-    AcidStores, with the plans of both applies' rewrite writes checked:
-    whatever their plan, neither shuffles its target."""
+    AcidStores, and the executed plans of both applies' rewrite
+    writes."""
     plans = []
     real = AcidParquetTable._write_rewrite
 
-    def spy(self, df, manifest, affected, into=None):
+    def spy(self, df, manifest, affected):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return real(self, df, manifest, affected, into=into)
+        return real(self, df, manifest, affected)
 
     eng, root = _mk_engine(spark, functools.partial(AcidStore, n_slices=1))
     try:
@@ -293,7 +293,6 @@ def _trickle_cycle_cost(spark, shipped_cost, monkeypatch):
     finally:
         shutil.rmtree(root, ignore_errors=True)
     assert len(plans) == 2
-    assert not any(re.search(r"(?m)^[\s:+\-]*Exchange ", p) for p in plans)
     return cost, plans
 
 
@@ -311,17 +310,19 @@ def test_trickle_cycle_job_count_pinned(spark, shipped_cost, monkeypatch):
     or broadcast shows up here."""
     cost, plans = _trickle_cycle_cost(spark, shipped_cost, monkeypatch)
     assert cost == (3, 3)
+    assert not any(re.search(r"(?m)^[\s:+\-]*Exchange ", p) for p in plans)
     assert not any("BroadcastExchange" in p for p in plans)
 
 
 def test_trickle_cycle_above_single_partition_bound(spark, shipped_cost,
                                                     monkeypatch):
     """With the single-partition bound below every input, the cycle
-    takes the shuffled grouped pass and the broadcast merges: 7 jobs
-    and 8 tasks. The grouped pass and the metrics job are 3 jobs with
+    takes the shuffled grouped pass and the shuffled merges: 9 jobs
+    and 10 tasks. The grouped pass and the metrics job are 3 jobs with
     AQE on (the shuffle-map stage of each exchange is a job); each
-    apply broadcasts its ship set into the target scan (one build
-    job, one write job) instead of shuffling the whole entry."""
+    apply's full outer join shuffles its ship set and its touched
+    entry, 3 jobs of 1 task each (two shuffle-map stages and the
+    write)."""
     bound = "spark.sql.maxSinglePartitionBytes"
     old = spark.conf.get(bound)
     spark.conf.set(bound, "1")
@@ -329,8 +330,8 @@ def test_trickle_cycle_above_single_partition_bound(spark, shipped_cost,
         cost, plans = _trickle_cycle_cost(spark, shipped_cost, monkeypatch)
     finally:
         spark.conf.set(bound, old)
-    assert cost == (7, 8)
-    assert all("BroadcastHashJoin" in p for p in plans)
+    assert cost == (9, 10)
+    assert all(re.search(r"SortMergeJoin .*FullOuter", p) for p in plans)
 
 
 def test_null_payload_boundary_row_converges(spark):
