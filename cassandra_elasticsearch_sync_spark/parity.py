@@ -87,34 +87,8 @@ def r6(c: Column) -> Column:
     return F.round(c, 6)
 
 
-def fmt_date(c: Column | str) -> Column:
-    """Date-typed → 'YYYY-MM-DD' string. SQL twin: ``strftime(x, '%Y-%m-%d')``"""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.date_format(c, "yyyy-MM-dd")
-
-
 def fmt_ts(c: Column | str) -> Column:
     """Timestamp → 'YYYY-MM-DD HH:MM:SS' string after second-truncation.
     SQL twin: ``strftime(date_trunc('second', x), '%Y-%m-%d %H:%M:%S')``"""
     c = F.col(c) if isinstance(c, str) else c
     return F.date_format(F.date_trunc("second", c), "yyyy-MM-dd HH:mm:ss")
-
-
-def stddev_samp_exact(x: Column) -> Column:
-    """Sample stddev from exact decimal sums:
-    sqrt((sum(x^2) - sum(x)^2/n) / (n-1)).
-
-    SQL twin (with the dsum rescale on each sum)::
-
-        SQRT((CAST(CAST(SUM(CAST(x*x AS DECIMAL(38,10))) AS DECIMAL(38,2)) AS DOUBLE)
-              - POW(CAST(CAST(SUM(CAST(x AS DECIMAL(38,10))) AS DECIMAL(38,4)) AS DOUBLE), 2)
-                / COUNT(x))
-             / (COUNT(x) - 1))
-
-    The x*x product is computed in double first (bit-identical in both
-    engines), then summed exactly.
-    """
-    n = F.count(x)
-    sx = F.sum(x.cast(DEC)).cast("decimal(38,4)").cast("double")
-    sxx = F.sum((x * x).cast(DEC)).cast("decimal(38,2)").cast("double")
-    return F.sqrt((sxx - F.pow(sx, F.lit(2)) / n) / (n - F.lit(1)))

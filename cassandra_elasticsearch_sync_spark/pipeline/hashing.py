@@ -28,10 +28,5 @@ def portable_hash60(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def portable_hash60_sql(expr: str) -> str:
-    """DuckDB twin of portable_hash60."""
-    return f"CAST(('0x' || SUBSTR(MD5({expr}), 1, 15)) AS BIGINT)"
-
-
 # SQL-string fragment versions for use inside F.expr lambdas.
 PORTABLE_HASH60_SPARK_SQL = "CAST(CONV(SUBSTR(MD5({expr}), 1, 15), 16, 10) AS BIGINT)"

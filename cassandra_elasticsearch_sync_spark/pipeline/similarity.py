@@ -245,43 +245,6 @@ def k_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CORPUS_ROWS_CACHE: dict[str, int] = {}
-
-
-def _corpus_rows(sf_dir: str) -> int:
-    """Corpus row count from parquet FOOTER metadata - a driver-side
-    statistics read (the role a catalog/metastore plays on a cluster),
-    no Spark job. Cached per sf_dir: the planning decision is made
-    once per corpus, not once per query."""
-    if sf_dir not in _CORPUS_ROWS_CACHE:
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        path = os.path.join(sf_dir, "embeddings.parquet")
-        files = [path] if os.path.isfile(path) else sorted(
-            glob.glob(os.path.join(path, "*.parquet"))
-        )
-        _CORPUS_ROWS_CACHE[sf_dir] = sum(
-            pq.ParquetFile(f).metadata.num_rows for f in files
-        )
-    return _CORPUS_ROWS_CACHE[sf_dir]
-
-
-def topk_auto(spark: SparkSession, sf_dir: str, k: int = TOP_K,
-              brute_force_limit: int = 100_000) -> DataFrame:
-    """Adaptive similarity search (SURVEY.md section 4, rewrite 2):
-    brute-force scan for small corpora, cluster-probed (IVF) search
-    above `brute_force_limit` rows. The strategy choice reads the
-    parquet footer statistics (cached, no job) - a planning decision
-    expressed as two DataFrame shapes, never a custom Catalyst rule."""
-    e = _normed(spark, sf_dir)
-    if _corpus_rows(sf_dir) <= brute_force_limit:
-        return _topk(e, e.filter(F.expr(QUERY_FILTER)), k)
-    return ann_ivf_topk(spark, sf_dir)
-
-
 # ---------------------------------------------------------------------------
 # Arrow/numpy scale path: the one place Python beats the JVM here
 # ---------------------------------------------------------------------------

@@ -114,17 +114,6 @@ LIMIT {TOPK_N}
 """
 
 
-def topk_fold(current: DataFrame, batch: DataFrame, k: int = TOPK_N) -> DataFrame:
-    """One incremental step: top-k of (running top-k  UNION  new batch).
-    Associative + commutative over batches, so any arrival order
-    converges to the global top-k. State is k rows - constant."""
-    return (
-        current.unionByName(batch)
-        .orderBy(F.col("value").desc(), F.col("event_id"))
-        .limit(k)
-    )
-
-
 @register("k8_incremental_topk", "K8", _K8_ORACLE,
           "Incremental top-k maintenance under appends: streaming "
           "foreachBatch fold of a k-row state table; the converged state "

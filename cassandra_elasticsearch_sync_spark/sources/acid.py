@@ -64,6 +64,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from cassandra_elasticsearch_sync_spark.localdata import local_relation, single_split
+from cassandra_elasticsearch_sync_spark.sources.storage import write_json_atomic
 
 _DATA = "data"
 _DELETES = "deletes"
@@ -1453,17 +1454,6 @@ class AcidParquetTable:
         except FileNotFoundError:
             return {}
 
-    def _write_table_json(self, name: str, obj) -> None:
-        """Durably replace the table-level JSON file ``name``: write a
-        temp file, fsync it, then ``os.replace`` it into place, so a
-        reader sees the old or the new content, never a torn one."""
-        tmp = os.path.join(self.root, f".tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(obj, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(self.root, name))
-
     def add_constraint(self, name: str, condition_sql: str) -> None:
         """ALTER TABLE ADD CONSTRAINT name CHECK (condition): from now
         on every write whose rows can violate the condition fails the
@@ -1488,12 +1478,12 @@ class AcidParquetTable:
                     f"violate ({condition_sql})")
         cons = self._constraints()
         cons[name] = condition_sql
-        self._write_table_json(self._CONSTRAINTS, cons)
+        write_json_atomic(os.path.join(self.root, self._CONSTRAINTS), cons)
 
     def drop_constraint(self, name: str) -> None:
         cons = self._constraints()
         cons.pop(name, None)
-        self._write_table_json(self._CONSTRAINTS, cons)
+        write_json_atomic(os.path.join(self.root, self._CONSTRAINTS), cons)
 
     # -- generated columns -------------------------------------------------
 
@@ -1523,7 +1513,7 @@ class AcidParquetTable:
                 f"generated column {name!r} is not in the table schema")
         gen = self._generated()
         gen[name] = expr_sql
-        self._write_table_json(self._GENERATED, gen)
+        write_json_atomic(os.path.join(self.root, self._GENERATED), gen)
 
     def _apply_generated(self, df: DataFrame) -> DataFrame:
         gen = self._generated()

@@ -42,11 +42,6 @@ def es_index(spark: SparkSession, sf_dir: str, index: str) -> DataFrame:
     return load_table(spark, sf_dir, index)
 
 
-def write_snapshot(df: DataFrame, path: str) -> None:
-    """A6: batch sink - atomic-enough snapshot write for local parquet."""
-    df.write.mode("overwrite").parquet(path)
-
-
 @register("a3_es_doc_projection", "A3", """
 SELECT CAST(o_orderkey AS VARCHAR) AS _id,
        CAST(EPOCH(DATE_TRUNC('second', o_orderdate)) AS BIGINT) AS _version,

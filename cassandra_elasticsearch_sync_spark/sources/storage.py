@@ -12,10 +12,11 @@ sync engine pulls:
 - **Date partitioning** (write_date_partitioned): sync targets laid out
   by event date; delta extraction (L2) then prunes partitions at plan
   time instead of filtering rows at run time.
-- **Watermark table** (save/load_watermark): the reference keeps the
+- **Watermark file** (save/load_watermark): the reference keeps the
   last-sync timestamp outside the process (SURVEY.md 0.2); the batch
-  engine persists it as a tiny parquet state table next to the target
-  (streaming mode uses the checkpoint instead).
+  engine persists it as one small JSON file in its state directory,
+  replaced atomically on every save (streaming mode uses the
+  checkpoint instead).
 
 Verified by tests/test_storage.py via plan assertions (no Exchange on
 bucketed joins; PartitionFilters on pruned scans) and value checks.
@@ -23,8 +24,12 @@ bucketed joins; PartitionFilters on pruned scans) and value checks.
 
 from __future__ import annotations
 
+import calendar
 import datetime as dt
+import json
 import os
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,76 +63,55 @@ def write_date_partitioned(df: DataFrame, path: str, ts_col: str) -> None:
     )
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Durably replace the JSON file ``path``: write a temp file in the
+    same directory, flush and fsync it, then ``os.replace`` it into
+    place. A reader sees the old content or the new, never a torn or
+    missing file; a failure before the replace leaves the old one."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp.{uuid.uuid4().hex}")
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(obj, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+
+
+_WATERMARK = "watermark.json"
+_EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+
+
 def save_watermark(spark: SparkSession, state_dir: str, ts: dt.datetime) -> None:
-    """Persist the high-watermark (last successfully synced version).
-
-    A one-row control-plane state record is DRIVER work: the previous
-    implementation round-tripped it through ``createDataFrame`` +
-    ``coalesce(1)`` + a distributed overwrite - a Python-parallelize
-    RDD whose single coalesced task re-fetches all 32 sliced payloads
-    from the driver's serving socket, measured at ~6 s per call on the
-    bench box (4 calls per l38 run = ~24 s of pure scheduling
-    constants for 4 rows of state). The watermark is now written
-    directly from the driver as one parquet file (same schema, same
-    internal micros - the value round-trips bit-exactly through
-    ``load_watermark``'s Spark read), then swapped into place: new
-    file -> fresh temp dir -> rename over the old dir, which is also
-    strictly MORE crash-safe than overwrite's delete-then-write
-    window. Zero Spark jobs; cost is ~5 ms.
-    """
-    import shutil
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # Exactly TimestampType.toInternal's conversion, so the stored
-    # micros match what createDataFrame(...) used to write.
-    import calendar
-    import time as _time
-
+    """Persist the high-watermark (last successfully synced version) as
+    one small JSON file, published atomically (``write_json_atomic``):
+    the sync point appears in one step, the way *Structured
+    Streaming*'s offset and commit logs do. Driver I/O only, no Spark
+    job. The value is stored as UTC epoch micros; a naive ``ts`` is
+    read as system-local time, like ``TimestampType.toInternal``."""
     seconds = (calendar.timegm(ts.utctimetuple()) if ts.tzinfo
-               else _time.mktime(ts.timetuple()))
+               else time.mktime(ts.timetuple()))
     micros = int(seconds) * 1_000_000 + ts.microsecond
-    tbl = pa.table({"watermark": pa.array([micros], type=pa.int64())
-                    .cast(pa.timestamp("us", tz="UTC"))})
-    target = os.path.join(state_dir, "watermark")
-    tmp = os.path.join(state_dir, f".watermark.tmp-{uuid.uuid4().hex}")
-    os.makedirs(tmp, exist_ok=True)
-    pq.write_table(tbl, os.path.join(tmp, "part-00000.parquet"))
-    old = os.path.join(state_dir, f".watermark.old-{uuid.uuid4().hex}")
-    if os.path.exists(target):
-        os.rename(target, old)
-    os.rename(tmp, target)
-    shutil.rmtree(old, ignore_errors=True)
+    os.makedirs(state_dir, exist_ok=True)
+    write_json_atomic(os.path.join(state_dir, _WATERMARK),
+                      {"watermark_us": micros})
 
 
 def load_watermark(spark: SparkSession, state_dir: str) -> dt.datetime | None:
-    """Read the persisted watermark. One-row control-plane state is
-    DRIVER work (same rationale as save_watermark): the parquet file is
-    read with pyarrow in ~1 ms instead of scheduling a Spark job per
-    sync cycle. Value parity with the old Spark read: both decode the
-    same stored micros; tz-aware values collapse to the naive
-    system-local datetime exactly like PySpark's collect
-    (TimestampType.fromInternal)."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(state_dir, "watermark")
+    """Read the persisted watermark, or None when none was saved. The
+    value comes back as the naive system-local datetime PySpark's
+    ``collect`` gives for a timestamp (``TimestampType.fromInternal``),
+    so the engine compares it with ``version`` columns directly."""
     try:
-        parts = [os.path.join(path, f) for f in sorted(os.listdir(path))
-                 if f.endswith(".parquet")]
-        vals: list = []
-        for p in parts:
-            vals.extend(pq.read_table(p, columns=["watermark"])
-                        .column("watermark").to_pylist())
+        with open(os.path.join(state_dir, _WATERMARK)) as fh:
+            micros = json.load(fh)["watermark_us"]
     except OSError:
         return None
-    if not vals:
-        return None
-    v = vals[0]
-    if isinstance(v, dt.datetime) and v.tzinfo is not None:
-        v = v.astimezone().replace(tzinfo=None)
-    return v
+    utc = _EPOCH + dt.timedelta(microseconds=micros)
+    return utc.astimezone().replace(tzinfo=None)
 
 
 def compact_snapshot(spark: SparkSession, path: str, out_path: str,

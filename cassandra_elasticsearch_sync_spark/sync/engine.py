@@ -15,10 +15,14 @@ This module is that program over DataFrame stores:
 Differences from the 2013-era script, by design:
 - The per-record compare loop is one distributed LWW merge (union +
   per-key top-1 window): no driver-side iteration, linear scaling.
-- The sync point is a persisted watermark table (sources/storage.py);
-  crash between cycles -> the next cycle re-reads from the old
-  watermark and re-applies; applies are idempotent (L4 property
-  tests), so at-least-once is safe.
+- The sync point is one small watermark file (sources/storage.py),
+  replaced atomically after both sides commit: a crash at any point
+  leaves the old watermark or the new one, so the next cycle re-reads
+  from the old watermark and re-applies; applies are idempotent (L4
+  property tests), so at-least-once is safe.
+- ``full_sync`` lays out each store one way: the key ladder it
+  measures in its own aggregate, thinned to the store's size, gives
+  the slice bounds of one clustered commit per side.
 - Each side is a ``KeyedStore``. ``AcidStore`` applies the delta as a
   copy-on-write MERGE on the ACID table format (sources/acid.py), so a
   cycle shipping 1% of the keys rewrites ~1% of the table - the shape
@@ -50,6 +54,9 @@ from cassandra_elasticsearch_sync_spark.sync.ops import lww_merge
 # later merge/read are pure scheduling overhead); a 100 TB store keeps
 # the full manifest-pruning granularity.
 SLICE_TARGET_ROWS = 2_000_000
+# Slices the bootstrap ladder is measured at, before it is thinned:
+# the finest layout ``full_sync`` gives a store.
+LADDER_SLICES = 16
 
 
 def _commit_both(fn_a, fn_b) -> None:
@@ -99,19 +106,16 @@ class KeyedStore(Protocol):
       stability is what lets a recomputed partition of that pass agree
       with the rest.
     - ``overwrite(df, key_quantiles)``: the bootstrap write; the
-      optional ladder of ascending key bounds sets its slice layout.
+      ladder of ascending key bounds (``full_sync`` measures it at
+      ``LADDER_SLICES`` and thins it to the store's size) sets its
+      slice layout, and no ladder means one slice.
     - ``apply_delta(delta, key_stats)``: LWW-apply a ship set holding
       at most one row per key; ``key_stats`` = (rows, min key, max
       key) of that set, a pruning hint.
-    - ``n_slices``: the maximum bootstrap granularity - the ladder the
-      engine measures has ``n_slices - 1`` bounds before it is thinned
-      to the store's size; 1 means an unsliced bootstrap.
 
     The sync key is non-null: the conflict accounting counts distinct
     keys, and ``SyncEngine.incremental_cycle`` raises ``ValueError``
     when a shipped row has a NULL key."""
-
-    n_slices: int
 
     def read(self) -> DataFrame: ...
 
@@ -137,11 +141,13 @@ class AcidStore:
     resolution order as ``lww_merge`` expressed as the matched
     condition (struct comparison - structs order lexicographically by
     field, so src wins exactly when lww_merge would pick it). Only the
-    data files containing shipped keys are rewritten; the bootstrap
-    write range-clusters the table into ``n_slices`` manifest entries
-    with per-entry key stats so the merge probe prunes at the manifest
-    before touching bytes. This is VERDICT r3's #1: the engine's own
-    loop on the lakehouse store it ships, 1% delta -> ~1% rewrite.
+    data files containing shipped keys are rewritten. ``init`` seeds
+    the table with one plain commit; ``full_sync``'s overwrite then
+    range-clusters it along the engine's key ladder into manifest
+    entries with per-entry key stats, so the merge probe prunes at the
+    manifest before touching bytes. This is VERDICT r3's #1: the
+    engine's own loop on the lakehouse store it ships, 1% delta ->
+    ~1% rewrite.
     The apply is ``merge_into``'s full outer join. When the ship set
     and the touched entries each read as one split and together fit
     the session's ``spark.sql.maxSinglePartitionBytes``, it runs over
@@ -149,12 +155,11 @@ class AcidStore:
     and no broadcast. Otherwise it shuffles both sides."""
 
     def __init__(self, spark: SparkSession, root: str,
-                 init: DataFrame | None = None, n_slices: int = 16):
+                 init: DataFrame | None = None):
         self.spark = spark
         self.table = AcidParquetTable(spark, root)
-        self.n_slices = n_slices
         if init is not None:
-            self.overwrite(init)
+            self.table.init(init)
 
     def read(self) -> DataFrame:
         return self.table.read()
@@ -177,25 +182,15 @@ class AcidStore:
         """Bootstrap/full-sync path: ONE clustered snapshot commit -
         key-range slices with per-entry key stats, so later incremental
         merges get manifest-level file skipping without a
-        write-then-rewrite. ``key_quantiles`` (n_slices-1 ascending
-        key values, e.g. the engine's percentile ladder measured in
-        its own aggregate) lets the write slice deterministically
-        instead of paying repartitionByRange's sampling re-execution
-        of the input plan (round 12, guide §2.4). The ladder's length
-        sets the slice count (round 13: the engine thins it to a
-        scale-adaptive width - ``n_slices`` is the store's MAX
-        granularity, not a constant layout)."""
-        if (key_quantiles is not None
-                and len(key_quantiles) <= self.n_slices - 1):
-            # last slice unbounded above (covers max key and NULLs); an
-            # empty ladder is one clustered entry, no sampling
-            uppers = [*key_quantiles, None]
-            self.table.init_clustered(df, ["key"],
-                                      n_slices=len(uppers),
-                                      slice_uppers=uppers)
-        else:
-            self.table.init_clustered(df, ["key"],
-                                      n_slices=self.n_slices)
+        write-then-rewrite. ``key_quantiles`` (ascending key values,
+        the engine's thinned ladder) are the inclusive upper bounds of
+        every slice but the last, which is unbounded above (it holds
+        the max key and NULLs): each row's slice comes from literals,
+        with no sampling pass over the input. No ladder is one
+        slice."""
+        uppers = [*(key_quantiles or []), None]
+        self.table.init_clustered(df, ["key"], len(uppers),
+                                  slice_uppers=uppers)
 
     def apply_delta(self, delta: DataFrame,
                     key_stats: tuple | None = None) -> None:
@@ -262,26 +257,20 @@ class SyncEngine:
         merged = lww_merge(self.a.read(), self.b.read()).persist()
         # ONE action materializes the converged snapshot (so the two
         # overwrites read the cache instead of each recomputing it),
-        # measures the new watermark, AND - when a store
-        # wants a sliced bootstrap layout - the key-quantile ladder
-        # that lets each overwrite slice deterministically instead of
+        # measures the new watermark, AND the key-quantile ladder that
+        # lets each overwrite slice deterministically instead of
         # running repartitionByRange's sampling job over the cache.
-        # Previously three separate jobs (count + max(version) +
-        # 2 samplers); round 12, guide 2.4. The watermark is still
-        # saved only AFTER both commits succeed.
-        qn = max(self.a.n_slices, self.b.n_slices)
-        aggs = [F.max("version").alias("m"), F.count("*").alias("n")]
-        if qn > 1:
-            aggs.append(F.percentile_approx(
-                "key", [i / qn for i in range(1, qn)]).alias("qs"))
-        row = merged.agg(*aggs).collect()[0]
+        # The watermark is saved only AFTER both commits succeed.
+        qn = LADDER_SLICES
+        row = merged.agg(
+            F.max("version").alias("m"), F.count("*").alias("n"),
+            F.percentile_approx("key", [i / qn for i in range(1, qn)])
+            .alias("qs")).collect()[0]
         wm = row["m"]
-        qs = list(row["qs"]) if qn > 1 and row["qs"] is not None else None
-        # Scale-adaptive slice count: the ladder is measured at the
-        # stores' max granularity, then thinned to the row count the
-        # same pass measured.
-        if qs is not None:
-            qs = _thin_ladder(qs, int(row["n"]))
+        # Scale-adaptive slice count: the ladder is thinned to the row
+        # count the same pass measured (an empty snapshot has none).
+        qs = (_thin_ladder(list(row["qs"]), int(row["n"]))
+              if row["qs"] is not None else None)
         _commit_both(lambda: self.a.overwrite(merged, key_quantiles=qs),
                      lambda: self.b.overwrite(merged, key_quantiles=qs))
         if wm is not None:

@@ -1537,13 +1537,10 @@ def l26_sync_cycle_on_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="ces_acid_sync_")
     try:
-        # Seed via a plain init commit (full_sync's overwrite will
-        # range-cluster both stores right after; clustering the
-        # pre-bootstrap state too would be wasted work).
-        a = AcidStore(spark, f"{root}/a")
-        a.table.init(side_a(spark, sf_dir).withColumn("side", F.lit("a")))
-        b = AcidStore(spark, f"{root}/b")
-        b.table.init(side_b(spark, sf_dir).withColumn("side", F.lit("b")))
+        a = AcidStore(spark, f"{root}/a",
+                      side_a(spark, sf_dir).withColumn("side", F.lit("a")))
+        b = AcidStore(spark, f"{root}/b",
+                      side_b(spark, sf_dir).withColumn("side", F.lit("b")))
         eng = SyncEngine(spark, a, b, f"{root}/state")
         eng.full_sync()
         b.table.update_where(
@@ -2431,10 +2428,10 @@ def l38_sync_lag_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="ces_sync_slo_")
     try:
-        a = AcidStore(spark, f"{root}/a")
-        b = AcidStore(spark, f"{root}/b")
-        a.table.init(side_a(spark, sf_dir).withColumn("side", F.lit("a")))
-        b.table.init(side_b(spark, sf_dir).withColumn("side", F.lit("b")))
+        a = AcidStore(spark, f"{root}/a",
+                      side_a(spark, sf_dir).withColumn("side", F.lit("a")))
+        b = AcidStore(spark, f"{root}/b",
+                      side_b(spark, sf_dir).withColumn("side", F.lit("b")))
         eng = SyncEngine(spark, a, b, f"{root}/state", record_ledger=True)
         eng.full_sync()
         # cycle 1: one-sided repricing burst on B

@@ -67,6 +67,45 @@ def test_watermark_roundtrip_and_delta(spark):
         shutil.rmtree(state, ignore_errors=True)
 
 
+def test_interrupted_watermark_save_keeps_the_old_one(spark, monkeypatch,
+                                                     tmp_path):
+    """A watermark save is one fsynced file published by one atomic
+    replace. A crash in the publish step of a later save leaves the
+    previous watermark readable, and no temp file behind."""
+    import os
+
+    state = str(tmp_path)
+    first = dt.datetime(1999, 6, 1, 12, 30, 15, 250)
+    calls = []
+
+    def traced(name, real):
+        def call(*args, **kwargs):
+            calls.append(name)
+            return real(*args, **kwargs)
+        return call
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "fsync", traced("fsync", os.fsync))
+        m.setattr(os, "replace", traced("replace", os.replace))
+        storage.save_watermark(spark, state, first)
+    assert calls == ["fsync", "replace"]
+
+    def crash_on_publish(real):
+        def move(src, dst, *args, **kwargs):
+            if os.path.basename(dst).startswith("watermark"):
+                raise OSError("crash while publishing the watermark")
+            return real(src, dst, *args, **kwargs)
+        return move
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_on_publish(os.replace))
+        m.setattr(os, "rename", crash_on_publish(os.rename))
+        with pytest.raises(OSError, match="crash while publishing"):
+            storage.save_watermark(spark, state, dt.datetime(2001, 1, 1))
+    assert storage.load_watermark(spark, state) == first
+    assert [f for f in os.listdir(state) if f.startswith(".")] == []
+
+
 def test_compaction_preserves_data_and_reduces_files(spark):
     import glob
     out = tempfile.mkdtemp(prefix="ces_compact_")

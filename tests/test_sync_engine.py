@@ -1,14 +1,13 @@
 """End-to-end SyncEngine: bootstrap + incremental cycles converge and
 are idempotent - the reference's whole program, verified - on the
-ACID AcidStore whose apply is a copy-on-write MERGE (VERDICT r3 #1),
-both range-sliced (16 slices) and unsliced (1 slice: the bootstrap
-measures no key ladder)."""
+ACID AcidStore whose apply is a copy-on-write MERGE (VERDICT r3 #1).
+Every store is laid out by ``full_sync``'s key ladder alone; tests
+that need several slices hand ``overwrite`` an explicit ladder."""
 
 from __future__ import annotations
 
 import ast
 import datetime as dt
-import functools
 import re
 import shutil
 import tempfile
@@ -28,11 +27,7 @@ from cassandra_elasticsearch_sync_spark.sync.ops import side_a, side_b
 
 SF_DIR = "/root/testdata/sf0.001"
 
-STORES = [
-    pytest.param(AcidStore, id="AcidStore"),
-    pytest.param(functools.partial(AcidStore, n_slices=1),
-                 id="AcidStore-1slice"),
-]
+STORES = [pytest.param(AcidStore, id="AcidStore")]
 
 
 def _mk_engine(spark, store_cls=AcidStore):
@@ -114,14 +109,32 @@ def test_equal_version_boundary_write_is_not_lost(spark, store_cls):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_acid_cycle_is_copy_on_write(spark):
+def test_acid_cycle_is_copy_on_write(spark, monkeypatch):
     """The 100 TB property the AcidStore exists for: an incremental
     cycle shipping a NARROW key range rewrites only the manifest
-    entries whose key stats intersect it - most data files carry over
-    byte-for-byte into the post-cycle snapshot."""
+    entries whose key stats intersect it - every other data file
+    carries over byte-for-byte into the post-cycle snapshot. Both
+    stores are re-sliced into 16 entries along an explicit ladder
+    first (``full_sync`` leaves a store this small as one entry).
+    Every clustered write on the way gets its slice bounds from a
+    ladder or from the manifest, never from a sampling pass."""
+    sampled = []
+    real = AcidParquetTable._write_clustered
+
+    def spy(self, df, cluster_by, n_slices, zorder=False, uppers=None):
+        if uppers is None:
+            sampled.append(n_slices)
+        return real(self, df, cluster_by, n_slices, zorder, uppers)
+
+    monkeypatch.setattr(AcidParquetTable, "_write_clustered", spy)
     eng, root = _mk_engine(spark, AcidStore)
     try:
         eng.full_sync()
+        keys = sorted(r["key"] for r in eng.a.read().select("key").collect())
+        ladder = [keys[len(keys) * i // 16] for i in range(1, 16)]
+        for store in (eng.a, eng.b):
+            store.overwrite(store.read().localCheckpoint(eager=True),
+                            key_quantiles=ladder)
         # Edit a narrow key range on B via the ACID table itself
         # (update_where = CoW on B), stamped newer than the watermark.
         eng.b.table.update_where(
@@ -129,15 +142,32 @@ def test_acid_cycle_is_copy_on_write(spark):
             {"price": F.col("price") + 1000.0,
              "version": F.lit(dt.datetime(2003, 1, 1)).cast("timestamp")},
         )
-        a_before = set(eng.a.table._manifest(
-            eng.a.table.current_version())["files"])
+        m_before = eng.a.table._manifest(eng.a.table.current_version())
+        assert len(m_before["files"]) == 16
+        # the entries whose key stats cannot hold a key <= 50
+        untouched = {f for f in m_before["files"]
+                     if m_before["stats"][f]["key"][0] > 50}
+        assert untouched and len(untouched) < 16
         assert eng.incremental_cycle() >= 1
         assert eng.in_sync()
         m_after = eng.a.table._manifest(eng.a.table.current_version())
-        carried = a_before & set(m_after["files"])
-        # 16 range-clustered slices; keys <= 50 live in few of them.
-        assert len(carried) >= len(a_before) - 4, (
-            f"expected CoW carry-over, kept {len(carried)}/{len(a_before)}")
+        assert untouched <= set(m_after["files"])
+        assert set(m_before["files"]) != set(m_after["files"])
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    assert sampled == []
+
+
+def test_acid_store_init_is_one_plain_commit(spark):
+    """``AcidStore(init=df)`` seeds the table with ONE plain ``init``
+    commit and no clustering: the bootstrap's overwrite lays it out."""
+    root = tempfile.mkdtemp(prefix="ces_store_init_")
+    try:
+        st = AcidStore(spark, f"{root}/t",
+                       side_a(spark, SF_DIR).withColumn("side", F.lit("a")))
+        assert st.table.current_version() == 1
+        assert st.table._manifest(1)["cluster_by"] is None
+        assert st.read().count() == side_a(spark, SF_DIR).count()
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -273,7 +303,7 @@ def _trickle_cycle_cost(spark, shipped_cost, monkeypatch):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         return real(self, df, manifest, affected)
 
-    eng, root = _mk_engine(spark, functools.partial(AcidStore, n_slices=1))
+    eng, root = _mk_engine(spark)
     try:
         eng.full_sync()
         for store, keys, day in ((eng.a, range(1, 9), 1),
@@ -412,8 +442,10 @@ def test_cycle_over_a_delta_of_several_splits_keeps_the_shuffle(
         rows = spark.createDataFrame(
             [(k, float(k), ts(1), "a") for k in range(1, 41)],
             "key bigint, price double, version timestamp, side string")
-        a = AcidStore(spark, f"{root}/a", rows, n_slices=2)
-        b = AcidStore(spark, f"{root}/b", rows, n_slices=2)
+        a = AcidStore(spark, f"{root}/a")
+        b = AcidStore(spark, f"{root}/b")
+        for store in (a, b):
+            store.overwrite(rows, key_quantiles=[20])
         b.table.update_where(F.col("key").isin([1, 40]),
                              {"price": F.lit(0.5),
                               "version": F.lit(ts(5)).cast("timestamp")})
@@ -523,7 +555,8 @@ def test_acid_read_since_prunes_files_and_matches_filtered_read(spark):
         rows = [(i, float(i), ts(1 + (i % 5)), "x") for i in range(64)]
         init = spark.createDataFrame(
             rows, "key bigint, price double, version timestamp, side string")
-        st = AcidStore(spark, f"{root}/t", init=init, n_slices=4)
+        st = AcidStore(spark, f"{root}/t")
+        st.overwrite(init, key_quantiles=[15, 31, 47])
         # bump ONE key far past the rest: only its slice can hold
         # post-watermark rows afterwards
         st.table.update_where(
