@@ -8,7 +8,11 @@ the planner, and every value checked on the driver before any job.
 
 ``single_split`` is the planning side: it tells whether inputs are
 small and already in one split each, so that the caller can plan the
-work over them as one partition.
+work over them as one partition. The sync side asks it for a MERGE's
+two sides (``acid._merge_against``) and a cycle's two deltas
+(``engine.incremental_cycle``); the read side for an ES aggregation's
+input (``es_query.es_aggregate``) and a CQL SELECT that needs a
+distribution (``cql_query.cql_select``).
 """
 
 from __future__ import annotations
@@ -78,7 +82,9 @@ def single_split(*dfs: DataFrame) -> bool:
 
     A caller that gets True may ``coalesce(1)`` each input, a no-op on
     data in one split, so that an operator over them plans no exchange
-    and no broadcast. The splits are read off the physical plan
+    and no broadcast: a MERGE's full outer join, a sync cycle's grouped
+    pass, an ES aggregation, a CQL DISTINCT, aggregate, per-partition
+    window or unlimited sort. The splits are read off the physical plan
     without running a job (``_splits``); a plan whose split count is
     not known that way never counts, and neither does a relation
     without a size estimate (a checkpointed ``LogicalRDD`` whose origin

@@ -806,6 +806,19 @@ def cql_select(df: DataFrame, stmt: str,
                 col, op, val,
                 kind=meta.get("collections", {}).get(col)))
 
+    aggregating = sel.group_by or any(c.fn in _AGG_FNS or _is_uda(c.fn)
+                                      for c in sel.columns)
+    # The branches below that need a distribution (a distinct, an
+    # aggregate, a per-partition window, a sort without LIMIT) run in
+    # the one partition of an input that already reads one split and
+    # fits spark.sql.maxSinglePartitionBytes (localdata.single_split):
+    # one Spark job, no exchange. Filter, projection and LIMIT reads,
+    # and inputs of several splits, keep their plans.
+    if ((sel.distinct or aggregating or sel.per_partition_limit is not None
+         or (sel.order_by and sel.limit is None))
+            and single_split(out)):
+        out = out.coalesce(1)
+
     clus_order = [
         F.col(c).desc() if d == "DESC" else F.col(c).asc()
         for c, d in meta["clustering"]
@@ -821,8 +834,7 @@ def cql_select(df: DataFrame, stmt: str,
                 _token_col(meta["partition"]).asc()).limit(sel.limit)
         out = out.select(
             *[F.col(c.name).alias(c.out_name) for c in sel.columns])
-    elif sel.group_by or any(c.fn in _AGG_FNS or _is_uda(c.fn)
-                             for c in sel.columns):
+    elif aggregating:
         # one grouped (or global) aggregate; map-side partial combine,
         # group cardinality <= partition-key cardinality by the
         # pk-plus-prefix GROUP BY rule.
@@ -954,7 +966,10 @@ def cql_select(df: DataFrame, stmt: str,
 
 from cassandra_elasticsearch_sync_spark.catalog import load_table  # noqa: E402
 from cassandra_elasticsearch_sync_spark.registry import register  # noqa: E402
-from cassandra_elasticsearch_sync_spark.localdata import local_relation
+from cassandra_elasticsearch_sync_spark.localdata import (
+    local_relation,
+    single_split,
+)
 
 
 @register("a2i_cql_partition_slice", "A2", """

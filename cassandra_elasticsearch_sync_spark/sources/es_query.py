@@ -939,7 +939,10 @@ def es_search(df: DataFrame, query: dict, now=None) -> DataFrame:
 
 from cassandra_elasticsearch_sync_spark.catalog import load_table  # noqa: E402
 from cassandra_elasticsearch_sync_spark.registry import register  # noqa: E402
-from cassandra_elasticsearch_sync_spark.localdata import local_relation
+from cassandra_elasticsearch_sync_spark.localdata import (
+    local_relation,
+    single_split,
+)
 
 _DSL_DEMO = {
     "bool": {
@@ -1303,10 +1306,20 @@ def es_aggregate(df: DataFrame, aggs: dict,
 
     terms buckets order by doc_count desc with the bucket key as the
     deterministic tiebreak (ES semantics + reproducibility), sized via
-    a distributed TakeOrderedAndProject - never a global single-
-    partition window. date_histogram truncates to the calendar unit
-    JVM-side so the bucket key is a plain string.
+    a TakeOrderedAndProject - never a global single-partition window.
+    date_histogram truncates to the calendar unit JVM-side so the
+    bucket key is a plain string.
+
+    When ``df`` (and ``background``, when given) each already read one
+    split and together fit ``spark.sql.maxSinglePartitionBytes``
+    (``localdata.single_split``), every branch aggregates in that one
+    partition with no exchange: one Spark job instead of a map stage
+    and a result stage. Any other input keeps the shuffled plan.
     """
+    if single_split(df, *([background] if background is not None else [])):
+        df = df.coalesce(1)
+        if background is not None:
+            background = background.coalesce(1)
     (name, spec), = aggs.items()
 
     def _is_bucket(s: dict) -> bool:

@@ -228,6 +228,13 @@ def _pandas_canon(df):
     return pd.util.hash_pandas_object(df, index=False).tolist()
 
 
+def error_line(e: Exception) -> str:
+    """``e``'s type and the first line of its message (a pyspark
+    exception's repr is empty; its message's first line names the
+    error)."""
+    return f"{type(e).__name__}: {(str(e).strip().splitlines() or [''])[0]}"
+
+
 def pandas_compare(name, spark_df, con, oracle,
                    max_report=5) -> CompareResult:
     """Driver-faithful twin of ``compare()``: both results travel the
@@ -239,7 +246,7 @@ def pandas_compare(name, spark_df, con, oracle,
         sp = spark_df.toPandas()
     except Exception as e:  # noqa: BLE001 - any conversion failure is a driver err
         return CompareResult(name, False, -1, -1,
-                             [f"driver-err (spark toPandas): {e!r}"])
+                             [f"driver-err (spark toPandas): {error_line(e)}"])
     op = con.execute(oracle).df()
     mismatches = []
     if sorted(sp.columns) != sorted(op.columns):

@@ -4,6 +4,11 @@ against their DuckDB oracles (pandas_compare - the driver-faithful
 hash path) at one SF.
 
 Usage: python tools/parity_subset.py <sf_dir> key1 key2 ...
+
+Prints one line per key (OK, rows-only, MISMATCH or FAIL) and a DONE
+line. Spark's own log is off, so the executor stack traces of a write
+that a query rejects on purpose (l32's CHECK violation) stay out of a
+captured log; a key that raises prints its error as its FAIL line.
 """
 
 from __future__ import annotations
@@ -22,7 +27,11 @@ from cassandra_elasticsearch_sync_spark.registry import (  # noqa: E402
     oracle_sql,
     queries,
 )
-from oracle_harness import duck_connection, pandas_compare  # noqa: E402
+from oracle_harness import (  # noqa: E402
+    duck_connection,
+    error_line,
+    pandas_compare,
+)
 
 
 def main() -> None:
@@ -32,7 +41,7 @@ def main() -> None:
              .appName("parity-subset")
              .config("spark.ui.showConsoleProgress", "false")
              .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark.sparkContext.setLogLevel("OFF")
     con = duck_connection(sf_dir)
     qs, osql = queries(), oracle_sql()
     bad = 0
@@ -42,12 +51,19 @@ def main() -> None:
             print(f"{k}: NOT REGISTERED")
             bad += 1
             continue
-        df = qs[k](spark, sf_dir)
-        if k not in osql or osql[k] is None:
-            n = df.count()
-            print(f"{k}: rows-only ({n} rows) [{time.perf_counter()-t0:.1f}s]")
+        try:
+            df = qs[k](spark, sf_dir)
+            if k not in osql or osql[k] is None:
+                n = df.count()
+                print(f"{k}: rows-only ({n} rows) "
+                      f"[{time.perf_counter()-t0:.1f}s]")
+                continue
+            r = pandas_compare(k, df, con, osql[k])
+        except Exception as e:  # noqa: BLE001 - report the key, go on
+            print(f"{k}: FAIL {error_line(e)} "
+                  f"[{time.perf_counter()-t0:.1f}s]")
+            bad += 1
             continue
-        r = pandas_compare(k, df, con, osql[k])
         print(f"{r} [{time.perf_counter()-t0:.1f}s]")
         if not r.ok:
             bad += 1
