@@ -254,8 +254,8 @@ def _merge_once(spark, root, case):
 
 
 @pytest.mark.parametrize("case", sorted(_CASES))
-def test_merge_plans_commit_same_table(spark, tmp_path, force_plan,
-                                      join_plans, case):
+def test_broadcast_merge_equals_full_outer_merge(spark, tmp_path, force_plan,
+                                                 join_plans, case):
     """Same rows, same manifest entry count, same rows per entry: the
     single-partition plan commits what the shuffled plan commits."""
     got = {}
@@ -268,8 +268,8 @@ def test_merge_plans_commit_same_table(spark, tmp_path, force_plan,
     assert got["single_partition"] == got["full_outer"]
 
 
-def test_merge_plans_timestamp_keys_in_a_dst_fold(spark, tmp_path,
-                                                  force_plan, join_plans):
+def test_broadcast_merge_timestamp_keys_in_a_dst_fold(spark, tmp_path,
+                                                      force_plan, join_plans):
     """The two instants of a DST fold (01:30 EDT and 01:30 EST) are
     two keys, though a TIMESTAMP collected in that zone reads back as
     the same naive local datetime: on either plan, a merge that
