@@ -27,8 +27,8 @@ the three ideas every lakehouse format shares:
    data files were durable first.
 3. **Copy-on-write MERGE.** ``merge_into`` rewrites ONLY the data
    files that actually contain matched keys (found by joining the
-   source keys against the target WITH ``input_file_name`` - a
-   files-not-rows sized driver list, same as a format's file-skipping
+   source keys against the target, each row tagged with its entry - an
+   entries-not-rows sized driver list, same as a format's file-skipping
    index). Untouched files are carried into the new manifest verbatim.
    A merge touching 1% of a 100 TB table rewrites 1% of it, not 100% -
    the property the round-2 snapshot-swap store lacked.
@@ -39,9 +39,11 @@ the three ideas every lakehouse format shares:
    commits an O(deleted-keys) equality-DELETE FILE and lets readers
    anti-join it (Iceberg v2 / Delta deletion vectors), scoped by
    per-entry sequence numbers so later re-inserts of a deleted key
-   survive; ``compact_deletes`` reclaims the read-time cost using the
-   manifest's key statistics to rewrite only entries a delete can
-   touch. ``read_as_of`` adds TIMESTAMP AS OF time travel over the
+   survive. A read is one scan of its entries and one broadcast
+   anti-join against all pending delete files, whatever the number of
+   commit generations. ``compact_deletes`` reclaims the read-time cost
+   using the manifest's key statistics to rewrite only entries a delete
+   can touch. ``read_as_of`` adds TIMESTAMP AS OF time travel over the
    commit-time stamps.
 
 MERGE semantics (ANSI-ish, the subset the sync engine needs):
@@ -59,6 +61,7 @@ import json
 import os
 import time
 import uuid
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -153,31 +156,64 @@ class AcidParquetTable:
         S holds the key tuples deleted by commit S and applies only to
         data entries written by earlier commits (entry seq < S) - the
         Iceberg sequence-number rule that lets a later INSERT of the
-        same key survive an older delete. Entries are grouped by seq
-        tier so the plan is one anti-join per distinct commit
-        generation (bounded by commit count, not file count), with the
-        bounded delete-key set broadcast."""
+        same key survive an older delete. The plan is one scan of every
+        entry, each row tagged with its entry's seq (``_entry_value``,
+        a runtime value: the optimizer pushes a join into a union of
+        literal-tagged scans, one join each), and ONE broadcast
+        left-anti join against the applicable delete files on the key
+        columns (plain equality: a NULL key is never masked) with
+        ``entry seq < delete seq`` as its side condition."""
         schema = StructType.fromJson(m["schema"])
         if not dirs:
             return local_relation(self.spark, [], schema)
-        seqs = m.get("seq", {})
         deletes = m.get("deletes", [])
+        if deletes:
+            seqs = m.get("seq", {})
+            entry_seq = {d: int(seqs.get(d, 0)) for d in dirs}
+            oldest = min(entry_seq.values())
+            deletes = [e for e in deletes if e["seq"] > oldest]
         if not deletes:
             return self.spark.read.schema(schema).parquet(*dirs)
-        by_tier: dict[int, list[str]] = {}
-        for d in dirs:
-            by_tier.setdefault(int(seqs.get(d, 0)), []).append(d)
-        out = None
-        for tier, tier_dirs in sorted(by_tier.items()):
-            df = self.spark.read.schema(schema).parquet(*tier_dirs)
-            applicable = [e for e in deletes if e["seq"] > tier]
-            if applicable:
-                keys = applicable[0]["keys"]
-                dk = self.spark.read.parquet(*[e["path"] for e in applicable])
-                df = df.join(F.broadcast(dk.select(*keys).distinct()),
-                             keys, "left_anti")
-            out = df if out is None else out.unionByName(df)
-        return out
+        rows = self.spark.read.schema(schema).parquet(*dirs)
+        rows = rows.withColumn("__seq", self._entry_value(rows, entry_seq))
+        dk = self._delete_keys(schema, deletes)
+        dk = dk.withColumn("__del_seq", self._entry_value(
+            dk, {e["path"]: e["seq"] for e in deletes}))
+        cond = [rows[k] == dk[k] for k in deletes[0]["keys"]]
+        cond.append(rows["__seq"] < dk["__del_seq"])
+        return rows.join(F.broadcast(dk), cond, "left_anti").drop("__seq")
+
+    def _delete_keys(self, schema: StructType, deletes: list[dict]) -> DataFrame:
+        """The key tuples of the delete files ``deletes``, read with the
+        key columns' types from the table ``schema`` (the types
+        ``delete_keys_mor`` writes them in): a read without a schema
+        would run a schema-inference job."""
+        keys = deletes[0]["keys"]
+        return (self.spark.read.schema(StructType([schema[k] for k in keys]))
+                .parquet(*[e["path"] for e in deletes]))
+
+    @staticmethod
+    def _entry_value(scan: DataFrame, values: dict) -> Column:
+        """The value ``values`` holds for the entry (a data entry or a
+        delete file: the directory of its part files) that a row of
+        ``scan``, a parquet scan of those entries, was read from - the
+        one answer to "which entry, so which seq, is this row's". Each
+        file the scan lists is mapped to its entry on the driver by its
+        decoded parent directory; a row looks its ``_metadata.file_path``
+        up as the URI's percent-encoded path, the encoding the listing
+        uses too. A row of no entry fails the job, never reads NULL."""
+        by_dir = {os.path.abspath(d): v for d, v in values.items()}
+        pairs = []
+        for f in scan.inputFiles():
+            path = urlsplit(f).path
+            v = by_dir.get(os.path.dirname(unquote(path)))
+            if v is not None:
+                pairs += [F.lit(path), F.lit(v)]
+        file_path = F.col("_metadata.file_path")
+        lookup = F.create_map(*pairs)[
+            F.regexp_replace(file_path, r"^[^:/]+:(//[^/]*)?", "")]
+        return F.coalesce(lookup, F.raise_error(F.concat(
+            F.lit("scanned file belongs to no manifest entry: "), file_path)))
 
     # -- write paths -------------------------------------------------------
 
@@ -250,14 +286,10 @@ class AcidParquetTable:
             return footer
 
         enc = self._enc_stat
-        path = F.regexp_replace(F.input_file_name(), "^file:(//)?", "")
-        entry = F.coalesce(*[
-            F.when(path.startswith(d.rstrip("/") + "/"), F.lit(d))
-            for d in files
-        ])
+        scan = self.spark.read.schema(schema).parquet(*files)
         rows = (
-            self.spark.read.schema(schema).parquet(*files)
-            .groupBy(entry.alias("__entry"))
+            scan.groupBy(self._entry_value(scan, {d: d for d in files})
+                         .alias("__entry"))
             .agg(*[F.min(c).alias(f"__min_{c}") for c in cols],
                  *[F.max(c).alias(f"__max_{c}") for c in cols])
             .collect()
@@ -592,23 +624,20 @@ class AcidParquetTable:
                       narrow) -> list[str]:
         """The file probe: which of the manifest entries ``files`` hold
         a row that survives ``narrow`` (a DataFrame -> DataFrame step
-        over the raw rows), from one files-not-rows sized collect of
-        the distinct ``input_file_name`` hits. The files are read RAW
-        (``input_file_name`` needs a single scan, and
-        ``_read_entries`` may anti-join delete files): an entry whose
-        only hits are MoR-deleted is reported too - conservative, as
-        every rewrite reads its content delete-applied."""
+        over the raw rows), from one entries-not-rows sized collect of
+        the distinct entries (``_entry_value``) of the surviving rows.
+        The files are read RAW, without their merge-on-read deletes:
+        an entry whose only hits are MoR-deleted is reported too -
+        conservative, as every rewrite reads its content
+        delete-applied."""
         if not files:
             return []
         raw = self.spark.read.schema(schema).parquet(*files)
-        rows = (narrow(raw.withColumn("__f", F.input_file_name()))
-                .select("__f").distinct().collect())
-        hits = {r["__f"][7:] if r["__f"].startswith("file://") else r["__f"]
-                for r in rows}
-        # A manifest entry is a directory; it is hit if any of its part
-        # files is.
-        return [d for d in files
-                if any(h.startswith(d.rstrip("/") + "/") for h in hits)]
+        tagged = raw.withColumn("__entry",
+                                self._entry_value(raw, {d: d for d in files}))
+        hits = {r["__entry"] for r in
+                narrow(tagged).select("__entry").distinct().collect()}
+        return [d for d in files if d in hits]
 
     # -- MERGE INTO --------------------------------------------------------
 
@@ -1007,8 +1036,8 @@ class AcidParquetTable:
     def _rewrite_where(self, condition: Column, transform,
                        operation: str, metric: str) -> int:
         """Shared CoW core for DELETE/UPDATE: find the data entries
-        that contain rows matching ``condition`` (one probe job with
-        ``input_file_name``, files-not-rows sized collect), rewrite
+        that contain rows matching ``condition`` (one probe job,
+        ``_entries_with``, entries-not-rows sized collect), rewrite
         ONLY those entries through ``transform``, carry the rest
         verbatim - the same affected-files contract as ``merge_into``,
         so a predicate touching 1% of a 100 TB table rewrites 1%.
@@ -1141,11 +1170,13 @@ class AcidParquetTable:
         """Merge-on-read equality delete: commit a DELETE FILE holding
         the deleted key tuples instead of rewriting any data file -
         O(deleted keys) write cost regardless of table size, the
-        Iceberg-v2 equality-delete / Delta deletion-vector idea.
-        Readers anti-join data entries against delete files whose
-        sequence number is higher than the entry's (``_read_entries``),
-        so a later re-insert of the key is NOT masked. The read-time
-        cost is reclaimed by ``compact_deletes``/``optimize``."""
+        Iceberg-v2 equality-delete / Delta deletion-vector idea. The
+        keys are written in the table's key types. A read masks a row
+        when a delete file with a higher sequence number than the
+        row's entry holds its key (one anti-join over every pending
+        delete file, ``_read_entries``), so a later re-insert of the
+        key is NOT masked. The read-time cost is reclaimed by
+        ``compact_deletes``/``optimize``."""
         base = self.current_version()
         manifest = self._manifest(base)
         deletes = list(manifest.get("deletes", []))
@@ -1154,8 +1185,10 @@ class AcidParquetTable:
                 raise ValueError(
                     f"pending delete files use keys {e['keys']}; compact "
                     "before switching the equality-delete key set")
+        schema = StructType.fromJson(manifest["schema"])
         d = os.path.join(self.root, _DELETES, uuid.uuid4().hex)
-        keys_df.select(*keys).distinct().write.mode("errorifexists").parquet(d)
+        (keys_df.select(*[F.col(k).cast(schema[k].dataType) for k in keys])
+         .distinct().write.mode("errorifexists").parquet(d))
         deletes.append({"path": d, "seq": self._next_seq(manifest, base),
                         "keys": keys})
         return self._recommit(base, manifest, deletes=deletes)
@@ -1163,17 +1196,18 @@ class AcidParquetTable:
     def compact_deletes(self) -> int:
         """Materialize pending MoR delete files into the data entries
         they mask and drop them - the maintenance half of the
-        merge-on-read trade. Only entries whose key-range statistics
-        can intersect a pending delete's key range are rewritten
-        (missing stats = rewrite conservatively); provably-unaffected
-        entries carry over byte-for-byte."""
+        merge-on-read trade. Only entries older than the newest delete
+        whose key-range statistics can intersect a pending delete's
+        key range are rewritten, read like any read (missing stats =
+        rewrite conservatively); provably-unaffected entries carry
+        over byte-for-byte."""
         base = self.current_version()
         manifest = self._manifest(base)
         deletes = manifest.get("deletes", [])
         if not deletes:
             return base
         keys = deletes[0]["keys"]
-        dk = self.spark.read.parquet(*[e["path"] for e in deletes])
+        dk = self._delete_keys(StructType.fromJson(manifest["schema"]), deletes)
         kb = dk.agg(F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi")).collect()[0]
         cand = (self._entries_in_range(manifest, keys[0], kb["lo"], kb["hi"])
                 if len(keys) == 1 else manifest["files"])

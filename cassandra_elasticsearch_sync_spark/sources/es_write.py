@@ -14,7 +14,7 @@ independently:
 
 - the ACID table's copy-on-write mutation path
   (``acid.AcidParquetTable.update_where`` / ``delete_where``) supplies
-  the transactional apply: an ``input_file_name`` probe finds the
+  the transactional apply: a probe of each row's entry finds the
   affected data files, ONLY those files rewrite, and the commit is one
   atomic manifest swap. A predicate touching 1% of a 100 TB table
   rewrites 1% of it - strictly better than ES's per-document

@@ -74,18 +74,17 @@ def _exchanges(plan: str) -> list[str]:
 
 def _assert_plan(join_plans, plan, deletes=False):
     """The rewrite write of one merge took ``plan``. With ``deletes``
-    the target is read through a broadcast anti-join with its pending
-    merge-on-read delete keys, whose distinct is one more shuffle and
-    one more broadcast, both under the target side."""
+    the target is read through one broadcast anti-join with its
+    pending merge-on-read delete keys: one more broadcast, no more
+    shuffle, under the target side."""
     assert [how for how, _ in join_plans] == ["FullOuter"]
     plan_str = join_plans[0][1]
-    n_mor = 1 if deletes else 0
+    assert plan_str.count("BroadcastExchange") == (1 if deletes else 0)
     if plan == "single_partition":
-        assert len(_exchanges(plan_str)) == n_mor
-        assert plan_str.count("BroadcastExchange") == n_mor
+        assert len(_exchanges(plan_str)) == 0
     else:
         assert re.search(r"SortMergeJoin .*FullOuter", plan_str)
-        assert len(_exchanges(plan_str)) == 2 + n_mor
+        assert len(_exchanges(plan_str)) == 2
 
 
 # -- NULL-key target rows ------------------------------------------------

@@ -29,29 +29,13 @@ from cassandra_elasticsearch_sync_spark.sources.acid import AcidParquetTable
 
 
 def _spark_stats(table, files, schema):
-    """The aggregate-job path, bypassing the footer fast path."""
-    stats = {}
-    cols = table._stats_cols(schema)
-    if not cols or not files:
-        return stats
-    enc = table._enc_stat
-    path = F.regexp_replace(F.input_file_name(), "^file:(//)?", "")
-    entry = F.coalesce(*[
-        F.when(path.startswith(d.rstrip("/") + "/"), F.lit(d))
-        for d in files
-    ])
-    rows = (
-        table.spark.read.schema(schema).parquet(*files)
-        .groupBy(entry.alias("__entry"))
-        .agg(*[F.min(c).alias(f"__min_{c}") for c in cols],
-             *[F.max(c).alias(f"__max_{c}") for c in cols])
-        .collect()
-    )
-    for row in rows:
-        stats[row["__entry"]] = {
-            c: [enc(row[f"__min_{c}"]), enc(row[f"__max_{c}"])] for c in cols
-        }
-    return stats
+    """The aggregate-job path: ``_collect_stats`` with the footer fast
+    path reporting an unreadable footer."""
+    table._footer_stats = lambda files, cols: None
+    try:
+        return table._collect_stats(files, schema)
+    finally:
+        del table._footer_stats
 
 
 def _write_entry(spark, root, df):

@@ -364,6 +364,36 @@ def test_trickle_cycle_above_single_partition_bound(spark, shipped_cost,
     assert all(re.search(r"SortMergeJoin .*FullOuter", p) for p in plans)
 
 
+def test_full_sync_over_single_split_stores_is_pinned(spark, shipped_cost,
+                                                     monkeypatch):
+    """With AQE on, ``full_sync`` between two stores that each read as
+    one split is 6 jobs and 6 tasks: ``lww_merge`` coalesces its union
+    to the one partition, so the per-key aggregate, the persisted
+    snapshot and the ladder job over it plan no exchange; each
+    clustered overwrite is a shuffle-map job and a write job. A
+    shuffle in the merge shows up here (8 jobs and 37 tasks)."""
+    import cassandra_elasticsearch_sync_spark.sync.engine as engine
+
+    plans = []
+    real = engine.lww_merge
+
+    def spy(a, b):
+        merged = real(a, b)
+        plans.append(merged._jdf.queryExecution().executedPlan().toString())
+        return merged
+
+    monkeypatch.setattr(engine, "lww_merge", spy)
+    eng, root = _mk_engine(spark)
+    try:
+        cost = shipped_cost(eng.full_sync)
+        assert eng.in_sync()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    assert cost == (6, 6)
+    assert len(plans) == 1
+    assert not re.search(r"(?m)^[\s:+\-]*Exchange ", plans[0])
+
+
 def test_null_payload_boundary_row_converges(spark):
     """A row holding a NULL at the watermark is in both deltas on every
     later cycle (the boundary is inclusive). It is the same row on both
